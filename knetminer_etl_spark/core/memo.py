@@ -1,16 +1,18 @@
-"""Bounded LRU mapping for session-lifetime plan-choice memos.
+"""Bounded LRU mapping for the two session-lifetime caches.
 
-The engine memoizes three kinds of driver-held state per (application,
-input identity, hyperparameters): corpus counts (operators/util
-.memo_count), clone-probe statistics (operators/dedup._CLONE_VERDICTS)
-and small trained models (runtime/modelcache). All three are PLAN
-DECISIONS or deterministic re-derivable state — a stale or evicted
-entry can change which physical plan runs (or re-pay one probe job),
-never what it outputs (pinned in tests/test_round10.py). That property
-makes unbounded growth the only hazard: a long-lived session driving
-many distinct inputs accumulates entries forever (VERDICT r9 #5), so
-every memo is a :class:`BoundedMemo` — least-recently-USED eviction at
-a size bound generous enough that round-driven batch jobs never evict.
+Two caches outlive a single call, both keyed per Spark application:
+table handles for static datasets (runtime/catalog) and small
+deterministic trained models (runtime/modelcache). Neither holds a
+plan-choice input: operators measure what their plan choices need
+(counts, clone statistics, split counts, size estimates) on every call,
+so a file rewritten in place can never leave a stale verdict behind.
+
+An evicted entry is re-resolved or retrained on the next use —
+latency, never different output — so unbounded growth is the only
+hazard: a long-lived session driving many distinct inputs would
+accumulate entries forever (VERDICT r9 #5). Both caches are therefore
+a :class:`BoundedMemo` — least-recently-USED eviction at a size bound
+generous enough that batch jobs never evict.
 """
 
 from __future__ import annotations
@@ -62,14 +64,8 @@ class BoundedMemo:
         del self._data[key]
 
     def __iter__(self):
-        # snapshot: callers iterate while inserting (probe loops)
+        # snapshot: safe to delete entries while iterating
         return iter(list(self._data))
-
-    def keys(self):
-        return list(self._data)
-
-    def items(self):
-        return list(self._data.items())
 
     def clear(self) -> None:
         self._data.clear()

@@ -153,19 +153,6 @@ def coerce_property_values(
 # ---------------------------------------------------------------------------
 
 
-def node_batch_cypher(common_label: str = "Node") -> str:
-    """UNWIND-create for node batches. Labels are applied dynamically;
-    every node also gets the common label so one index accelerates the
-    edge pass."""
-    return (
-        "UNWIND $batch AS row\n"
-        f"CREATE (n:{common_label})\n"
-        "SET n = row.properties, n.id = row.id\n"
-        "WITH n, row CALL apoc.create.addLabels(n, row.labels) YIELD node\n"
-        "RETURN count(node)"
-    )
-
-
 def node_batch_cypher_no_apoc(common_label: str, labels: list[str]) -> str:
     """APOC-free variant for a batch that shares one label set (batches
     are grouped by label signature)."""

@@ -190,14 +190,6 @@ def might_contain(
 # -- SQL twins (DuckDB) ------------------------------------------------------
 
 
-def position_sql(key_expr: str, j: int, n_bits: int, seed: str = "bloom") -> str:
-    """One probe's bit position (mirrors :func:`_positions`)."""
-    return (
-        f"(('0x' || substr(md5('{seed}:{j}:' || CAST({key_expr} AS VARCHAR)),"
-        f" 1, 15))::BIGINT & {n_bits - 1})"
-    )
-
-
 def mask_sql(bit_expr: str) -> str:
     """Single-bit mask for ``bit_expr`` in 0..63 — DuckDB refuses
     ``1 << 63`` (signed overflow), so the sign bit is the min-long

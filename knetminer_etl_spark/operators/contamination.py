@@ -519,19 +519,14 @@ def semantic_decontaminate(
     n_test = None
     if mode == "auto":
         # bounded probe: the eval relation is the broadcast side by
-        # contract (benchmarks, not corpora) — counting it is cheap,
-        # and memoized per immutable file-backed input. The measured
-        # count also sizes the banded shape below (one probe, two
-        # decisions — the content_groups pattern).
-        from .util import memo_count
-
-        n_test = memo_count(test_vecs)
+        # contract (benchmarks, not corpora) — counting it is cheap.
+        # The measured count also sizes the banded shape below (one
+        # probe, two decisions — the content_groups pattern).
+        n_test = test_vecs.count()
         mode = "brute" if n_test <= 576 else "banded"
     if n_planes == "auto":
         if n_test is None:
-            from .util import memo_count
-
-            n_test = memo_count(test_vecs)
+            n_test = test_vecs.count()
         n_planes, n_bands = _auto_decon_shape(n_test, threshold)
     elif n_bands is None:
         n_bands = 48
@@ -597,13 +592,10 @@ def semantic_decontaminate_banded(
     from .similarity import _dvec, _norm, _pair_dots
 
     if n_planes == "auto":
-        # direct entry: one bounded (memoized) count of the broadcast-
-        # side suite sizes the shape (callers coming through
-        # semantic_decontaminate arrive with ints — the dispatch probe
-        # already paid the count)
-        from .util import memo_count
-
-        n_planes, n_bands = _auto_decon_shape(memo_count(test_vecs), threshold)
+        # direct entry: one bounded count of the broadcast-side suite
+        # sizes the shape (callers coming through semantic_decontaminate
+        # arrive with ints — the dispatch probe already paid the count)
+        n_planes, n_bands = _auto_decon_shape(test_vecs.count(), threshold)
     elif n_bands is None:
         n_bands = 48
 

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import normalize_text, shingles_from_tokens, tokens, word_shingles
+from .text import normalize_text, shingles_from_tokens, tokens
 from .util import fan_out
 
 
@@ -178,36 +178,6 @@ def candidate_pairs_from_buckets(
 # Hamming blocking (VERDICT r8 #4: one implementation, two callers)
 # ---------------------------------------------------------------------------
 
-#: memoized clone-probe statistics: (applicationId, canonical plan hash,
-#: sorted input files) -> (n_groups, n_members, f_max, f2_sum). File-backed inputs are
-#: immutable for a session by the same contract runtime/modelcache
-#: relies on; in-memory relations (inputFiles() == []) are never
-#: memoized, so tests and ad-hoc frames re-probe every call.
-#: LRU-bounded (core/memo.py): eviction re-pays one probe job on the
-#: next call over that input — plan choice only, never output.
-from ..core.memo import BoundedMemo
-
-_CLONE_VERDICTS: BoundedMemo = BoundedMemo(maxsize=4096)
-
-
-def _clone_memo_key(members: DataFrame) -> tuple | None:
-    """Memo key for a keyed member relation, or None when the input is
-    not file-backed (no durable identity to key on). The canonical plan
-    hash distinguishes different projections/filters over the same
-    files; the file list catches a same-shaped plan over other data."""
-    try:
-        files = members.inputFiles()
-        if not files:
-            return None
-        return (
-            members.sparkSession.sparkContext.applicationId,
-            members.semanticHash(),
-            tuple(sorted(files)),
-        )
-    except Exception:
-        return None
-
-
 #: within-clone candidate bill (bands × Σ(fᵢ² − fᵢ) over clone families)
 #: above which the collapse machinery always runs. Below it the direct
 #: path's clone candidates are output-scale work, while the collapse
@@ -259,31 +229,22 @@ def collapse_pays(
 
 def content_groups(
     members: DataFrame, key_cols: list[str]
-) -> tuple[DataFrame | None, int, int, int, int]:
+) -> tuple[DataFrame, int, int, int, int]:
     """``(groups, n_groups, n_members, f_max, f2_sum)`` for a keyed member
     relation ``(_id, *key_cols)`` — the clone-statistics probe + group
-    derivation of the identical-content collapse, in AT MOST ONE eager
-    job.
+    derivation of the identical-content collapse, in ONE eager job.
 
     ``groups`` is the pinned ``(*key_cols, _rid, _n)`` relation (min
-    ``_id`` + member count per distinct key), or ``None`` when a
-    memoized verdict let the probe be skipped. The probe is ONE
+    ``_id`` + member count per distinct key). The probe is ONE
     ``pin_observe`` job: the group-by runs with count / Σsize / max-size
     riding the materialization (VERDICT r8 #1 — the previous shape paid
-    two eager jobs just to discover every group was a singleton). Stats
-    are memoized per (application, plan, input files) à la
-    ``runtime/modelcache``, so repeat calls over the same immutable
-    input skip even that job (``groups`` comes back ``None``; callers
-    that still need it derive it from the memoized verdict). The stats
-    only pick between physical plans — collapsed and direct paths are
-    pair-for-pair equal (see :func:`collapse_pays`) — so a stale memo
-    could never change output, only plan choice."""
+    two eager jobs just to discover every group was a singleton). Every
+    call measures its own input: the stats pick the physical plan, and
+    at the ``max_bucket_size`` cap boundary that choice shows in the
+    output (see :func:`collapse_pays`), so they are never carried over
+    from an earlier call."""
     from .util import pin_observe
 
-    key = _clone_memo_key(members)
-    cached = _CLONE_VERDICTS.get(key) if key is not None else None
-    if cached is not None:
-        return (None, *cached)
     groups, m = pin_observe(
         members.groupBy(*key_cols).agg(
             F.min("_id").alias("_rid"), F.count(F.lit(1)).alias("_n")
@@ -293,13 +254,13 @@ def content_groups(
         F.max("_n").alias("fmax"),
         F.sum(F.col("_n") * F.col("_n")).alias("f2"),
     )
-    n_groups = int(m["groups"] or 0)
-    n_members = int(m["members"] or 0)
-    f_max = int(m["fmax"] or 0)
-    f2_sum = int(m["f2"] or 0)
-    if key is not None:
-        _CLONE_VERDICTS[key] = (n_groups, n_members, f_max, f2_sum)
-    return groups, n_groups, n_members, f_max, f2_sum
+    return (
+        groups,
+        int(m["groups"] or 0),
+        int(m["members"] or 0),
+        int(m["fmax"] or 0),
+        int(m["f2"] or 0),
+    )
 
 
 def expand_group_pairs(
@@ -1134,9 +1095,9 @@ def minhash_lsh_pairs(
     **Auto band shape** (``num_perm="auto"``, the default): rows-per-
     band and band count are sized from the measured distinct-content
     count via :func:`_auto_minhash_shape` — the count rides the collapse
-    probe below (memoized per input, zero extra jobs), or one memoized
-    ``memo_count`` when ``collapse=False``. A FIXED (r, b) is corpus-
-    quadratic in false positives (per-pair collision b·j^r is constant
+    probe below (zero extra jobs), or one ``count()`` job when
+    ``collapse=False``. A FIXED (r, b) is corpus-quadratic in false
+    positives (per-pair collision b·j^r is constant
     while sub-threshold pairs grow ∝ n²; measured: 21.5M candidates for
     25,600 true pairs at the 100× tier under static r=2·b=32), so r
     steps up one per 4× of corpus past 64k distinct contents and b
@@ -1171,12 +1132,10 @@ def minhash_lsh_pairs(
     never candidates, so never capped), while the uncollapsed plan can
     cap their mega-bucket away.
 
-    Clone-free corpora pay for none of this: the singleton probe is ONE
-    aggregate job (:func:`content_groups` — count + per-group sizes
-    riding the group pin), its verdict is memoized per (application,
-    input files) for file-backed inputs, and a no-clones verdict
-    dispatches straight to the direct banded plan with zero extra jobs
-    on every later call over the same input (VERDICT r8 #1).
+    Clone-free corpora pay for none of this beyond the singleton probe:
+    ONE aggregate job (:func:`content_groups` — count + per-group sizes
+    riding the group pin), after which a no-clones verdict dispatches
+    straight to the direct banded plan (VERDICT r8 #1).
 
     ``max_bucket_size`` (default ON at 4096) drops band buckets larger
     than the cap before pair expansion — the Σ|bucket|² backstop
@@ -1194,11 +1153,7 @@ def minhash_lsh_pairs(
         bands = max(1, num_perm // 4)
     if not collapse:
         if num_perm == "auto":
-            from .util import memo_count
-
-            num_perm, bands = _auto_minhash_shape(
-                memo_count(df), threshold
-            )
+            num_perm, bands = _auto_minhash_shape(df.count(), threshold)
         return observe_output(
             _minhash_lsh_pairs_direct(
                 df, id_col, text_col, num_perm, bands, k, threshold, verify,
@@ -1220,10 +1175,10 @@ def minhash_lsh_pairs(
     )
     if num_perm == "auto":
         # shaped from the DISTINCT-content count the collapse probe
-        # already measured (memoized per input — zero extra jobs): the
-        # banded relation is reps on the collapse route, and on the
-        # direct route clones band identically so distinct contents
-        # still drive the FP economics
+        # already measured (zero extra jobs): the banded relation is
+        # reps on the collapse route, and on the direct route clones
+        # band identically so distinct contents still drive the FP
+        # economics
         num_perm, bands = _auto_minhash_shape(n_groups or 0, threshold)
     if not collapse_pays(
         n_groups, n_members, f_max, f2_sum, bands, max_bucket_size
@@ -1241,14 +1196,6 @@ def minhash_lsh_pairs(
                 verify, max_bucket_size, n_docs=n_members or None,
             ),
             "minhash_lsh",
-        )
-    if groups is None:
-        # memoized collapse verdict: re-derive the pinned group relation
-        # (the probe job was skipped)
-        groups = (
-            keyed.groupBy("_g1", "_g2")
-            .agg(F.min("_id").alias("_rid"))
-            .localCheckpoint(eager=True)
         )
     # pinned: both expansion sides + the within self-join reference the
     # member relation; unpinned each would re-run the hash scan
@@ -1429,9 +1376,8 @@ def verified_jaccard_pairs(
     with both shingle arrays attached).
 
     ``n_docs`` (when the caller already measured the corpus — the
-    content_groups probe, a memoized count, an observe riding an
-    upstream write) picks between two verification shapes with
-    identical output: corpora ≤ :data:`VERIFY_FULL_SHINGLE_MAX` shingle
+    content_groups probe, an observe riding an upstream write) picks
+    between two verification shapes with identical output: corpora ≤ :data:`VERIFY_FULL_SHINGLE_MAX` shingle
     the whole corpus and keep the candidate relation single-referenced
     (no pin — candidate generation fuses into the final join action);
     larger or unmeasured corpora pin the candidates and semi-join the
@@ -1547,30 +1493,6 @@ def _bit_mask(i: int) -> int:
     return (1 << i) if i < 63 else -(1 << 63)
 
 
-def _bit_vote(hashes: Column, i: int) -> Column:
-    """Sum over hashes of (bit i set ? +1 : -1) — a scalar fold with no
-    per-element array allocation (the earlier array-of-64-votes zip_with
-    fold allocated 64-int arrays per shingle and went 5x slower under GC
-    pressure)."""
-    mask = F.lit(_bit_mask(i)).cast("long")
-    return F.aggregate(
-        hashes,
-        F.lit(0),
-        lambda acc, h: acc + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1),
-    )
-
-
-def _votes_to_fp(votes: list[Column]) -> Column:
-    fp = F.lit(0).cast("long")
-    for i, v in enumerate(votes):
-        fp = fp.bitwiseOR(
-            F.when(v > 0, F.lit(_bit_mask(i)).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return fp
-
-
 def md5_hash60(col: Column) -> Column:
     """60-bit integer hash from the md5 hex prefix — slower than xxhash64
     but **SQL-reproducible** (DuckDB: ('0x' || substr(md5(s),1,15))::BIGINT),
@@ -1594,8 +1516,9 @@ def with_simhash64(
     the fast path; pass :func:`md5_hash60` with nbits=60 for an
     oracle-reproducible fingerprint)."""
     hf = hash_fn or (lambda s: F.xxhash64(s))
-    # votes/fp as expr() strings (same trees as _bit_vote/_votes_to_fp,
-    # one driver call per column instead of ~10 per bit — see SCALE.md)
+    # votes/fp as expr() strings: one driver call per column instead of
+    # ~10 per bit (see SCALE.md). Each vote is a scalar fold, with no
+    # per-shingle vote array to allocate.
     vote = (
         "aggregate(_h, 0, (acc, h) -> acc + "
         "(CASE WHEN (h & CAST('{m}' AS BIGINT)) != 0 THEN 1 ELSE -1 END))"
@@ -1620,14 +1543,6 @@ def with_simhash64(
     return voted.select(
         F.col("_id").alias("doc_id"), F.expr(fp).alias(out_col)
     )
-
-
-def simhash64(col: Column, k: int = 1) -> Column:
-    """64-bit SimHash of word k-shingles as a single Column expression.
-    Prefer :func:`with_simhash64` in plans — the staged variant compiles
-    far faster; this inline form suits small expressions/tests."""
-    hashes = F.transform(word_shingles(col, k), lambda s: F.xxhash64(s))
-    return _votes_to_fp([_bit_vote(hashes, i) for i in range(64)])
 
 
 def simhash_pairs(
@@ -1837,16 +1752,13 @@ def hamming_pairs(
     — distance is a function of the value — and within-group pairs are
     emitted directly with hamming 0). Clone-free corpora dispatch past
     the expansion joins entirely: the singleton probe is ONE aggregate
-    riding the fingerprint pin job (:func:`content_groups`), and its
-    verdict is memoized per (application, input files), so repeat calls
-    over the same immutable input pay exactly the r7-era single pin
-    (VERDICT r8 #1).
+    riding the fingerprint pin job (:func:`content_groups`), and that
+    pin doubles as the banded (id, fp) table (VERDICT r8 #1).
     Output: (id_a, id_b, hamming).
     """
     keyed = fp.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_hfp"))
-    # ONE eager job at most: group-by distinct fingerprint with the
-    # clone statistics riding the pin (content_groups); a memoized
-    # verdict skips even that.
+    # ONE eager job: group-by distinct fingerprint with the clone
+    # statistics riding the pin (content_groups)
     groups, n_groups, n_members, f_max, f2_sum = content_groups(
         keyed, ["_hfp"]
     )
@@ -1867,14 +1779,13 @@ def hamming_pairs(
         # clone-free or sparse-clone corpus: the banded self-join's id
         # pairs ARE the output (identical fingerprints collide in every
         # band and verify at hamming 0 as ordinary candidates) — no
-        # expansion joins. When the probe ran AND found no clones, its
-        # pinned group relation doubles as the (id, fp) table; otherwise
-        # pin the keyed relation directly (the pin is needed regardless
-        # — the bucket self-join references the fingerprint pipeline
-        # twice).
+        # expansion joins. With no clones at all the pinned group
+        # relation doubles as the (id, fp) table; otherwise pin the keyed
+        # relation directly (the pin is needed regardless — the bucket
+        # self-join references the fingerprint pipeline twice).
         members = (
             groups.select(F.col("_rid").alias("_id"), "_hfp")
-            if groups is not None and n_groups == n_members
+            if n_groups == n_members
             else keyed.localCheckpoint(eager=True)
         )
         out = _hamming_rep_pairs(
@@ -1890,12 +1801,6 @@ def hamming_pairs(
     # sides), band one representative per distinct fingerprint, map the
     # verified rep pairs back to their fingerprint keys (bounded groups
     # relation), and expand to members.
-    if groups is None:
-        groups = (
-            keyed.groupBy("_hfp")
-            .agg(F.min("_id").alias("_rid"))
-            .localCheckpoint(eager=True)
-        )
     members = keyed.localCheckpoint(eager=True)
     reps = groups.select(F.col("_rid").alias("_id"), "_hfp")
     rep_pairs = _hamming_rep_pairs(
@@ -2119,32 +2024,13 @@ def _auto_lsh_shape(
     return planes, bands
 
 
-#: memoized (mean vector, E||v||²) per (application, plan, input files)
-#: — the centering probe is a plan decision over an immutable corpus
-#: (same contract as util.memo_count); bounded state: dim+1 floats.
-_CENTER_STATS: BoundedMemo = BoundedMemo(maxsize=1024)
-
-
 def _center_stats(
     filtered: DataFrame, vec_col: str
-) -> tuple[list[float], float] | None:
-    """(per-dimension mean μ, mean squared norm E||v||²) of a vector
-    column — ONE bounded aggregate job (dim avg columns + one avg of
-    the self-dot), memoized for file-backed inputs. Returns None on an
-    empty or zero-dim relation."""
-    key = None
-    try:
-        files = filtered.inputFiles()
-        if files:
-            key = (
-                filtered.sparkSession.sparkContext.applicationId,
-                filtered.semanticHash(),
-                tuple(sorted(files)),
-            )
-    except Exception:
-        key = None
-    if key is not None and key in _CENTER_STATS:
-        return _CENTER_STATS[key]
+) -> tuple[list[float], float, int] | None:
+    """(per-dimension mean μ, mean squared norm E||v||², row count) of a
+    vector column — ONE bounded aggregate job (dim avg columns, one avg
+    of the self-dot and the count). Returns None on an empty or zero-dim
+    relation."""
     first = filtered.select(F.size(F.col(vec_col)).alias("d")).first()
     if first is None or not first["d"]:
         return None
@@ -2153,12 +2039,10 @@ def _center_stats(
     row = filtered.select(v.alias("_v")).agg(
         *[F.avg(F.col("_v")[i]).alias(f"m{i}") for i in range(dim)],
         F.avg(_dot(F.col("_v"), F.col("_v"))).alias("_e2"),
+        F.count(F.lit(1)).alias("_n"),
     ).first()
     mu = [float(row[i] or 0.0) for i in range(dim)]
-    stats = (mu, float(row["_e2"] or 0.0))
-    if key is not None:
-        _CENTER_STATS[key] = stats
-    return stats
+    return mu, float(row["_e2"] or 0.0), int(row["_n"])
 
 
 def embedding_dup_pairs(
@@ -2193,7 +2077,8 @@ def embedding_dup_pairs(
     track log2(n), bands restore the per-pair miss bound at the
     threshold (committed evidence: the 10x sweep's 118x wall with the
     static 6×24 shape). The count is one narrow pre-job (the
-    ``n_clusters="auto"`` pattern of :func:`semantic_dedup`); pass
+    ``n_clusters="auto"`` pattern of :func:`semantic_dedup`), or rides
+    the centering aggregate when ``center=True``; pass
     explicit ints to pin a plan. ``max_bucket_size`` (default ON at
     4096) stays as the hard Σ|bucket|² backstop when a corpus direction
     cluster defeats the planes (see :func:`candidate_pairs_from_buckets`;
@@ -2204,7 +2089,7 @@ def embedding_dup_pairs(
     through hyperplanes see every vector on the same side — sign bits
     correlate and band buckets skew toward the cap). Bucketing then
     runs on v − μ (μ = the broadcast per-dimension corpus mean, ONE
-    bounded memoized probe — the k-means bounded-model pattern) while
+    bounded probe — the k-means bounded-model pattern) while
     verification keeps the EXACT cosine on the raw vectors, so
     precision and output values are untouched. Recall accounting: a
     raw-cosine-t pair at distance d² = 2(1−t)·‖v‖‖w‖ has centered
@@ -2222,19 +2107,17 @@ def embedding_dup_pairs(
     bucket_col = vec_col
     t_band = threshold
     mu = None
+    n_rows = None
     if center:
         stats = _center_stats(filtered, vec_col)
         if stats is not None:
-            mu, e2 = stats
+            mu, e2, n_rows = stats
             resid2 = max(1e-3, e2 - sum(m * m for m in mu))
             t_band = max(0.5, 1.0 - 2.0 * (1.0 - threshold) / resid2)
     if n_planes == "auto":
-        from .util import memo_count
-
-        # memoized for file-backed inputs: the auto-shape probe is a
-        # plan decision over an immutable corpus — one count job per
-        # input ever, not one per invocation
-        n_planes, n_bands = _auto_lsh_shape(memo_count(filtered), t_band)
+        if n_rows is None:
+            n_rows = filtered.count()
+        n_planes, n_bands = _auto_lsh_shape(n_rows, t_band)
     elif n_bands is None:
         n_bands = 24
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))

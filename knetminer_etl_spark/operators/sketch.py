@@ -301,11 +301,6 @@ def cms_lookup(
     )
 
 
-def cms_bucket_sql(expr: str, j: int, width: int, seed: str = "cms") -> str:
-    """One hash row's bucket, SQL side (mirrors :func:`cms_table`)."""
-    return f"({hash60_sql(expr, f'{seed}:{j}')} & {width - 1})"
-
-
 # ---------------------------------------------------------------------------
 # Histogram quantile sketch
 # ---------------------------------------------------------------------------

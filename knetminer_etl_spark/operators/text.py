@@ -234,8 +234,8 @@ def tfidf_top_terms(
     rank deterministically (score desc, term asc).
 
     **Heavy-term skew split** (VERDICT r8 #5, ``split=True`` or
-    ``"auto"`` past :data:`TFIDF_SPLIT_MIN_DOCS` measured docs —
-    memoized count, one job per input ever): df(term) must reach
+    ``"auto"`` past :data:`TFIDF_SPLIT_MIN_DOCS` measured docs — one
+    count job per call): df(term) must reach
     every tf row, and any term-keyed redistribution (join-back or
     window alike) puts ALL of a stop-word's tf rows — up to |docs| of
     them — into one partition at corpus scale. So df is computed once
@@ -257,10 +257,8 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    from .util import memo_count
-
     if split == "auto":
-        split = memo_count(df) > TFIDF_SPLIT_MIN_DOCS
+        split = df.count() > TFIDF_SPLIT_MIN_DOCS
     # fan_out: tokenization + explode is the CPU-heavy narrow step below
     # the (doc, term) exchange — single-file inputs would run it one-task
     terms = fan_out(df).select(
@@ -612,16 +610,6 @@ def shingles_from_tokens(toks: Column, k: int) -> Column:
 def word_shingles(col: Column, k: int = 3) -> Column:
     """Distinct word k-shingles ("a b c" style) as an array<string>."""
     return shingles_from_tokens(tokens(normalize_text(col)), k)
-
-
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of the normalized text."""
-    s = normalize_text(col)
-    n = F.length(s)
-    idx = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
-    return F.when(n < k, F.array(s)).otherwise(
-        F.array_distinct(F.transform(idx, lambda i: F.substring(s, i, F.lit(k))))
-    )
 
 
 def chunk_documents(

@@ -63,77 +63,18 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     arrive well-split and this is a no-op; the round-robin shuffle on the
     small under-split input is cheap relative to the compute it unlocks.
 
-    The split-count probe (``df.rdd.getNumPartitions()``) is a FULL
-    physical-planning pass plus RDD-DAG construction on the driver —
-    measured 0.15–0.2 s per call on the bench plans, paid by every
-    invocation of every shingling operator. It is memoized per
-    (application, input files) for file-backed inputs: fan_out is
-    called on pre-exchange scan/filter/project chains by design, and a
-    narrow chain's partition count is the SCAN's split count — a pure
-    function of (files, session conf), both fixed for an application
-    and INDEPENDENT of the projection on top. (Keying on the canonical
-    plan hash too, as the count/plan-bytes memos must, made every
-    differently-projected consumer of the same files re-pay the
-    planning pass — e.g. the three gram/count branches over one staging
-    directory.) In-memory relations (no input files) keep the direct
-    probe. Plan-choice state only, never results (core/memo.py).
+    The decision reads the frame's own physical plan and runs no Spark
+    job. A frame that already sits above an exchange is returned as is:
+    its plan is an ``AdaptiveSparkPlan``, whose partition count is only
+    known after the map stages have run (asking for it runs them), and
+    the exchange already sets the parallelism of the chain above it. For
+    a narrow scan chain the split count comes from the file listing
+    alone — one planning pass on the driver.
     """
     want = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    key = None
-    try:
-        files = df.inputFiles()
-        if files:
-            key = (
-                df.sparkSession.sparkContext.applicationId,
-                tuple(sorted(files)),
-            )
-    except Exception:
-        key = None
-    have = _PARTS_MEMO.get(key) if key is not None else None
-    if have is None:
-        have = df.rdd.getNumPartitions()
-        if key is not None:
-            _PARTS_MEMO[key] = have
-    if have < want:
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return df
+    if qe.toRdd().getNumPartitions() < want:
         return df.repartition(want)
     return df
-
-
-#: memoized relation counts: (applicationId, canonical plan hash,
-#: sorted input files) -> rows. Same immutable-input contract as
-#: runtime/modelcache and the dedup clone-stat memo. LRU-bounded: an
-#: evicted count is simply re-measured on next use (plan choice only,
-#: never output — core/memo.py).
-from ..core.memo import BoundedMemo
-
-_COUNT_MEMO = BoundedMemo(maxsize=4096)
-
-#: memoized scan split counts for fan_out — same immutable-file contract
-#: as _COUNT_MEMO; an evicted entry re-pays one planning pass.
-_PARTS_MEMO = BoundedMemo(maxsize=4096)
-
-
-def memo_count(df: DataFrame) -> int:
-    """``df.count()`` memoized per (application, plan, input files) for
-    file-backed relations — size-adaptive dispatchers (TF-IDF skew
-    split, verification shapes) need the corpus magnitude, not a fresh
-    scan per invocation. In-memory relations (no input files) are
-    counted every call; a memoized count can only switch physical
-    plans, never change output."""
-    key = None
-    try:
-        files = df.inputFiles()
-        if files:
-            key = (
-                df.sparkSession.sparkContext.applicationId,
-                df.semanticHash(),
-                tuple(sorted(files)),
-            )
-    except Exception:
-        key = None
-    if key is not None and key in _COUNT_MEMO:
-        return _COUNT_MEMO[key]
-    n = df.count()
-    if key is not None:
-        _COUNT_MEMO[key] = n
-    return n

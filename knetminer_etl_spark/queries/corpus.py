@@ -1114,9 +1114,15 @@ def doc_pipeline_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
         flagged = t_grams.filter(
             spec_contains(F.col("gram"), spec)
         ).join(eval_pin, "gram")
-    tf = train.agg(F.count("*").alias("_nt")).crossJoin(
-        flagged.agg(F.count_distinct("doc_id").alias("_nf"))
-    )
+    # the subtraction needs doc_id unique in train; doc_id comes from the
+    # input table, so the tail aggregate checks it instead of trusting it
+    tf = train.agg(
+        F.when(
+            F.count("*") == F.count_distinct("doc_id"), F.count("*")
+        ).otherwise(
+            F.raise_error(F.lit("doc_pipeline_stages: doc_id is not unique"))
+        ).alias("_nt")
+    ).crossJoin(flagged.agg(F.count_distinct("doc_id").alias("_nf")))
     tail = tf.select(
         F.explode(
             F.array(

@@ -9,8 +9,7 @@ Partition sizing: output files target ~256 MiB
 (reference src/ketl/spark/utils.py:32). Instead of the reference's
 driver-side ``sys.getsizeof`` sampling job (utils.py:145-180) — an extra
 full-scan job before every save — we size from facts Spark already has:
-the optimized plan's size estimate when available, falling back to a
-sampled estimate only on request. At scale prefer
+the optimized plan's size estimate when available. At scale prefer
 ``spark.sql.files.maxRecordsPerFile`` / AQE coalescing over explicit
 repartition, which this module enables by default.
 """
@@ -80,57 +79,13 @@ def df_check_path(path: str | Path) -> str:
     return os.path.join(df_path(path), SUCCESS_MARKER)
 
 
-#: memoized plan-size estimates: (applicationId, canonical plan hash,
-#: sorted input files) -> bytes. Catalyst stats for a fixed plan over
-#: immutable files are session-constant, while computing them runs a
-#: full optimizer pass on the driver (~0.1–0.2 s on the dedup plans) —
-#: paid per invocation by every partition-sizing probe. Plan-choice
-#: state only (core/memo.py); in-memory relations are never memoized.
-from ..core.memo import BoundedMemo
-
-_PLAN_BYTES_MEMO = BoundedMemo(maxsize=4096)
-
-
 def estimated_plan_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate (bytes), if available.
-    Memoized per (application, canonical plan, input files) for
-    file-backed relations — see :data:`_PLAN_BYTES_MEMO`."""
-    key = None
+    """Catalyst's optimized-plan size estimate (bytes), if available."""
     try:
-        files = df.inputFiles()
-        if files:
-            key = (
-                df.sparkSession.sparkContext.applicationId,
-                df.semanticHash(),
-                tuple(sorted(files)),
-            )
-    except Exception:
-        key = None
-    if key is not None and key in _PLAN_BYTES_MEMO:
-        return _PLAN_BYTES_MEMO[key]
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        size = stats.sizeInBytes()
-        est = int(size if isinstance(size, int) else str(size))
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        return int(size if isinstance(size, int) else str(size))
     except Exception:
         return None
-    if key is not None:
-        _PLAN_BYTES_MEMO[key] = est
-    return est
-
-
-def sampled_bytes(df: DataFrame, sample_ratio: float = 0.1) -> int:
-    """Sampling size estimate: serialize a partition sample, extrapolate.
-    Runs an extra job — use only when the plan estimate is unusable."""
-    import sys
-
-    rdd = df.rdd
-    n = max(rdd.getNumPartitions(), 1)
-    sampled = rdd.sample(False, sample_ratio, seed=42)
-    size = sampled.mapPartitions(
-        lambda it: [sum(sys.getsizeof(r) for r in it)]
-    ).sum()
-    return int(size / max(sample_ratio, 1e-9))
 
 
 def tuned_partitions(

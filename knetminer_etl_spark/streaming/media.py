@@ -195,47 +195,6 @@ def process_video_batch(
     )
 
 
-def start_video_dedup_stream(
-    media_stream: DataFrame,
-    index_path: str,
-    counts_path: str,
-    pairs_path: str,
-    checkpoint_path: str,
-    id_col: str = "media_id",
-    binary_col: str = "data",
-    every_ms: int = 1000,
-    frame_pixels_fn: Callable[[bytes, int], Any] | None = None,
-    max_hamming: int = 5,
-    min_match_frac: float = 0.5,
-    query_name: str = "continuous_video_dedup",
-):
-    """Start continuous video near-dup; returns the StreamingQuery."""
-    spark = media_stream.sparkSession
-
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_video_batch(
-            spark,
-            batch,
-            epoch_id,
-            index_path,
-            counts_path,
-            pairs_path,
-            id_col,
-            binary_col,
-            every_ms,
-            frame_pixels_fn,
-            max_hamming,
-            min_match_frac,
-        )
-
-    return (
-        media_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
-    )
-
-
 # ---------------------------------------------------------------------------
 # Continuous AUDIO dedup: decode -> acoustic fingerprint -> the semantic
 # (embedding) streaming recipe under frozen centroids
@@ -284,45 +243,4 @@ def process_audio_batch(
         pairs_path,
         centroids,
         threshold=threshold,
-    )
-
-
-def start_audio_dedup_stream(
-    media_stream: DataFrame,
-    index_path: str,
-    vecs_path: str,
-    pairs_path: str,
-    checkpoint_path: str,
-    centroids: list[list[float]],
-    id_col: str = "media_id",
-    binary_col: str = "data",
-    samples_fn: Callable[[bytes], Any] | None = None,
-    n_frames: int = 16,
-    threshold: float = 0.99,
-    query_name: str = "continuous_audio_dedup",
-):
-    """Start continuous audio near-dup; returns the StreamingQuery."""
-    spark = media_stream.sparkSession
-
-    def on_batch(batch: DataFrame, epoch_id: int) -> None:
-        process_audio_batch(
-            spark,
-            batch,
-            epoch_id,
-            index_path,
-            vecs_path,
-            pairs_path,
-            centroids,
-            id_col,
-            binary_col,
-            samples_fn,
-            n_frames,
-            threshold,
-        )
-
-    return (
-        media_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .queryName(query_name)
-        .start()
     )

@@ -32,15 +32,6 @@ from ..core.model import FROM_KEY, TO_KEY, TYPE_KEY
 ValueWrapper = Callable[[Column], Column]
 
 
-def prefix_wrapper(prefix: str) -> ValueWrapper:
-    """``v -> prefix + v`` (null-propagating, like Python ``p + str(v)``)."""
-    return lambda c: F.concat(F.lit(prefix), c.cast("string"))
-
-
-def postfix_wrapper(postfix: str) -> ValueWrapper:
-    return lambda c: F.concat(c.cast("string"), F.lit(postfix))
-
-
 def string_wrapper(
     prefix: str = "", postfix: str = "", to_string: bool = True
 ) -> ValueWrapper:
@@ -69,15 +60,6 @@ def upper_wrapper() -> ValueWrapper:
 def drop_if_wrapper(pred: Callable[[Column], Column]) -> ValueWrapper:
     """Map values matching ``pred`` to NULL so the triple is dropped."""
     return lambda c: F.when(pred(c), F.lit(None)).otherwise(c)
-
-
-def chain_wrappers(*wrappers: ValueWrapper) -> ValueWrapper:
-    def wrap(c: Column) -> Column:
-        for w in wrappers:
-            c = w(c)
-        return c
-
-    return wrap
 
 
 # ---------------------------------------------------------------------------

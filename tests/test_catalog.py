@@ -1,12 +1,16 @@
-"""runtime.catalog — memoized static-table handles — and the
+"""runtime.catalog — memoized static-table handles — the
 operators.util sort helpers introduced for the range-sampling
-double-evaluation fix."""
+double-evaluation fix, and fan_out's job-free split decision."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from knetminer_etl_spark.operators.util import pinned_sort, presentation_sort
+from knetminer_etl_spark.operators.util import (
+    fan_out,
+    pinned_sort,
+    presentation_sort,
+)
 from knetminer_etl_spark.runtime import catalog as CAT
 
 
@@ -64,3 +68,42 @@ class TestSortHelpers:
         got = [tuple(r) for r in presentation_sort(df, F.desc("k")).collect()]
         assert got == want
         assert presentation_sort(df, "k").rdd.getNumPartitions() == 1
+
+
+class TestFanOut:
+    """fan_out decides from the frame's own plan and runs no Spark job,
+    counted through the application status store (UI off)."""
+
+    @staticmethod
+    def _jobs(spark):
+        sc = spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty()
+        return sc.statusStore().jobsList(None).size()
+
+    def _one_file(self, spark, tmp_path):
+        p = str(tmp_path / "one")
+        spark.range(0, 100).coalesce(1).write.parquet(p)
+        return spark.read.parquet(p)
+
+    def test_narrow_scan_splits_without_a_job(self, spark, tmp_path):
+        df = self._one_file(spark, tmp_path).filter("id > 3")
+        before = self._jobs(spark)
+        out = fan_out(df)
+        assert self._jobs(spark) == before
+        want = spark.sparkContext.defaultParallelism
+        assert out.rdd.getNumPartitions() == want
+
+    def test_post_exchange_frame_untouched_without_a_job(
+        self, spark, tmp_path
+    ):
+        df = (
+            self._one_file(spark, tmp_path)
+            .groupBy((F.col("id") % 3).alias("k"))
+            .count()
+        )
+        before = self._jobs(spark)
+        assert fan_out(df) is df
+        assert self._jobs(spark) == before
+        # the counter sees jobs at all: running the frame adds some
+        assert df.count() == 3
+        assert self._jobs(spark) > before

@@ -1,5 +1,5 @@
 """Round-9 contracts: generalized-pigeonhole Hamming banding, the shared
-identical-content collapse engine (single-probe + memoized verdicts),
+identical-content collapse engine (one probe job per call),
 NaN parity across the SemDeDup physical paths, the Arrow bloom probe for
 large word tables, and the auto-sized decontamination band shape."""
 
@@ -121,30 +121,28 @@ class TestMultiBlockPigeonhole:
 
 
 class TestCloneVerdictMemo:
-    def test_file_backed_verdict_memoized(self, spark, tmp_path):
+    """Clone statistics are measured by every call; no verdict carries
+    over from an earlier call in the same session."""
+
+    def test_file_backed_verdict_stats(self, spark, tmp_path):
         p = str(tmp_path / "fps.parquet")
         spark.createDataFrame(
             [(i, i * 1000 + 7) for i in range(50)], "doc_id long, fp long"
         ).write.parquet(p)
-        before = dict(DD._CLONE_VERDICTS)
         df1 = spark.read.parquet(p)
         r1 = sorted(
             map(tuple, DD.hamming_pairs(df1, max_hamming=2).collect())
         )
-        added = {
-            k: v for k, v in DD._CLONE_VERDICTS.items() if k not in before
-        }
-        assert len(added) == 1
-        (verdict,) = added.values()
-        assert verdict == (50, 50, 1, 50)  # (groups, members, f_max, Σf²)
-        # second read over the same files: memo hit (same key, no new
-        # entries), identical output
+        keyed = df1.select(
+            F.col("doc_id").alias("_id"), F.col("fp").alias("_hfp")
+        )
+        # (groups, members, f_max, Σf²)
+        assert DD.content_groups(keyed, ["_hfp"])[1:] == (50, 50, 1, 50)
         df2 = spark.read.parquet(p)
         r2 = sorted(
             map(tuple, DD.hamming_pairs(df2, max_hamming=2).collect())
         )
         assert r1 == r2
-        assert len(DD._CLONE_VERDICTS) == len(before) + 1
 
     def test_clone_corpus_verdict_true(self, spark, tmp_path):
         p = str(tmp_path / "clones.parquet")
@@ -155,20 +153,59 @@ class TestCloneVerdictMemo:
             tuple(r) for r in DD.hamming_pairs(df, max_hamming=1).collect()
         }
         assert got == _brute_hamming(rows, 1)
-        key = [
-            k
-            for k, v in DD._CLONE_VERDICTS.items()
-            if v == (6, 10, 5, 30) and p.split("/")[-1] in " ".join(k[2])
-        ]
-        assert key, "clone stats should be memoized for file inputs"
 
     def test_in_memory_inputs_not_memoized(self, spark):
-        df = spark.createDataFrame(
-            [(1, 10), (2, 20)], "doc_id long, fp long"
-        )
-        n = len(DD._CLONE_VERDICTS)
-        DD.hamming_pairs(df, max_hamming=1).collect()
-        assert len(DD._CLONE_VERDICTS) == n
+        rows = [(1, 10), (2, 20)]
+        df = spark.createDataFrame(rows, "doc_id long, fp long")
+        got = {
+            tuple(r) for r in DD.hamming_pairs(df, max_hamming=1).collect()
+        }
+        assert got == _brute_hamming(rows, 1)
+
+    def test_rewritten_file_is_reprobed(self, spark, tmp_path):
+        """A parquet file rewritten in place under the same name: the
+        second call must see the new clone family. A clone-free verdict
+        kept from the first call would send the family down the capped
+        direct path and lose every one of its pairs."""
+        import random
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        p = str(tmp_path / "fps.parquet")
+        rng = random.Random(11)
+
+        def write(rows):
+            ids, fps = zip(*rows)
+            pq.write_table(
+                pa.table(
+                    {
+                        "doc_id": pa.array(ids, pa.int64()),
+                        "fp": pa.array(fps, pa.int64()),
+                    }
+                ),
+                p,
+            )
+
+        def pairs():
+            df = spark.read.parquet(p)
+            return {
+                tuple(r)
+                for r in DD.hamming_pairs(
+                    df, max_hamming=1, max_bucket_size=8
+                ).collect()
+            }
+
+        first = [(i, rng.getrandbits(62)) for i in range(40)]
+        write(first)
+        assert pairs() == _brute_hamming(first, 1)
+        family = rng.getrandbits(62)
+        second = [(100 + i, family) for i in range(20)]
+        second += [(200 + i, rng.getrandbits(62)) for i in range(20)]
+        write(second)
+        got = pairs()
+        assert len({(a, b) for a, b, h in got if a < 120 and b < 120}) == 190
+        assert got == _brute_hamming(second, 1)
 
 
 class TestExpandGroupPairs:

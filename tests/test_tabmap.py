@@ -21,6 +21,7 @@ from knetminer_etl_spark.tabmap.mappers import (
     RowValueMapper,
     accession_value_mapper,
     default_wrapper,
+    drop_if_wrapper,
     string_wrapper,
     upper_wrapper,
 )
@@ -74,12 +75,17 @@ class TestNativeMapping:
                 ),
                 column_triple_mapper("note", "note2", default_wrapper("dflt")),
                 column_triple_mapper("name", "NAME", upper_wrapper()),
+                column_triple_mapper(
+                    "name", "nick", drop_if_wrapper(lambda c: c.startswith("Bob"))
+                ),
             ],
         )
         got = triples_set(m.to_triples(people_df))
         assert ("A1", "hasName", '"p:Alice:s"') in got
         assert ("A1", "note2", '"dflt"') in got
         assert ("A1", "NAME", '"ALICE"') in got
+        assert ("A1", "nick", '"Alice"') in got
+        assert not [t for t in got if t[0] == "A2" and t[1] == "nick"]
 
     def test_accession_mapper(self, spark, people_df):
         m = DataFrameMapper(
