@@ -23,6 +23,7 @@ Usage::
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -34,8 +35,10 @@ from ..core.model import PGElementType
 def _prop_col(key: str):
     """Extract property ``key``'s joined values from ``props_str``
     (NULL when absent). Values were serialized as JSON literals; string
-    quotes are stripped for CSV friendliness."""
-    pat = rf"(?:^|;){key}=\[([^\]]*)\]"
+    quotes are stripped for CSV friendliness. The key is matched
+    literally, and a value runs to the ``]`` that closes its entry (the
+    one followed by ``;`` or the end), so values may contain brackets."""
+    pat = rf"(?:^|;){re.escape(key)}=\[(.*?)\](?:;|$)"
     v = F.regexp_extract("props_str", pat, 1)
     return F.when(v != "", F.regexp_replace(v, '"', "")).otherwise(
         F.lit(None).cast("string")

@@ -2824,7 +2824,7 @@ def _semantic_keep(
     def _parts(rows: int, bytes_per_row: int) -> int:
         # ~2 MB of band rows per task ≈ 40k in-flight collect_set groups
         # worst case — inside the tens-of-thousands-of-groups sweet spot
-        # (object-bound aggregation, triples_to_pg_flat's analysis) while
+        # (object-bound aggregation, group_agg_partitions' analysis) while
         # keeping tasks coarse enough that scheduler overhead doesn't
         # dominate these sub-100-byte rows (200 KB/task measured 1.5×
         # slower wall at 10× data: 165 near-empty tasks per exchange)

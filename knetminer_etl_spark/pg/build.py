@@ -15,6 +15,13 @@ shuffle on ``id``): structure rows become conditional aggregates and the
 properties map is assembled from the collected (key, value) pairs with
 higher-order array functions, all JVM-side. Partial (map-side) aggregation
 applies, so the shuffle carries pre-combined per-id state, not raw triples.
+An element's raw (key, value) pairs all meet on one reducer; a hot element
+with 1M property rows still builds correctly (tests/test_pg.py).
+
+The export shape (``labels_str`` / ``props_str`` strings) is rendered from
+that one aggregation by :func:`flatten_pg`; :func:`triples_to_pg_flat` is
+``flatten_pg(triples_to_pg(...))``, so the map-typed and flat builds cannot
+drift apart.
 
 Determinism: ``collect_set``/``collect_list`` order is undefined, so
 ``labels`` and each property value set are sorted (`array_sort`). The
@@ -32,31 +39,14 @@ from pyspark.sql import functions as F
 from ..core.model import FROM_KEY, SPECIAL_KEYS, TO_KEY, TYPE_KEY, PGElementType
 
 
-def triples_to_pg(
-    triples: DataFrame,
-    validate: bool = False,
-    two_level: bool = False,
-) -> DataFrame:
+def triples_to_pg(triples: DataFrame, validate: bool = False) -> DataFrame:
     """Aggregate a triple DataFrame into the PG relation.
 
     With ``validate=True``, edges missing endpoints or elements with zero
     labels raise at execution time (the validation the reference left as a
     TODO, src/ketl/io/core.py:115-118).
-
-    ``two_level=True`` selects the skew-safe plan: a pathological element
-    with millions of property rows hot-spots one reducer in the default
-    single-shuffle build (all its raw (key,value) pairs collect on one
-    task). The two-level variant pre-aggregates on ``(id, key)`` first —
-    ``collect_set`` partials dedup map-side, so the second (per-id)
-    shuffle carries one bounded row per (id, key) instead of raw pairs.
-    Costs a second shuffle; identical output (tests assert equality).
     """
-    if two_level:
-        agg = _agg_two_level(triples)
-    else:
-        agg = _agg_single(triples)
-
-    pg = agg.select(
+    pg = _agg_single(triples).select(
         F.col("id"),
         F.when(F.col("from").isNotNull(), F.lit(str(PGElementType.EDGE)))
         .otherwise(F.lit(str(PGElementType.NODE)))
@@ -90,7 +80,7 @@ def triples_to_pg(
 
 
 def _agg_single(triples: DataFrame) -> DataFrame:
-    """One hash aggregation on ``id`` (the default plan; see module doc).
+    """One hash aggregation on ``id`` (see module doc).
 
     The exchange is sized for group count, not byte volume — collect
     buffers are per-group objects (see
@@ -132,149 +122,11 @@ def _agg_single(triples: DataFrame) -> DataFrame:
     return agg.select("id", "labels", "from", "to", props.alias("properties"))
 
 
-def _agg_two_level(triples: DataFrame) -> DataFrame:
-    """Skew-safe twin of :func:`_agg_single`: pre-aggregate on (id, key) so
-    the per-id reducer sees one deduped row per key, not raw pairs.
-
-    NULL handling must mirror the single-level build exactly: values are
-    collected through a struct wrapper (collect_set/list drop bare NULLs
-    but keep structs with a NULL field), endpoints ignore NULL values
-    (``array_max`` skips them, like the single-level ``max``; NULL on an
-    empty set, never an ANSI element_at error), and NULL labels are
-    filtered as collect_list does.
-    """
-    from ..runtime.checkpoint import group_agg_partitions
-
-    # partition by id only: HashPartitioning(id) satisfies BOTH grouping
-    # levels, so the whole two-level build runs over one sized exchange
-    per_key = triples.repartition(
-        group_agg_partitions(triples), "id"
-    ).groupBy("id", "key").agg(
-        F.array_sort(
-            F.array_distinct(
-                F.transform(
-                    F.collect_list(F.struct(F.col("value").alias("v"))),
-                    lambda s: s["v"],
-                )
-            )
-        ).alias("_vals")
-    )
-    k = F.col("key")
-    is_prop = ~k.isin(*SPECIAL_KEYS)
-    # per id: at most one row per special key, so max() over the single
-    # candidate is deterministic
-    agg = per_key.groupBy("id").agg(
-        F.coalesce(
-            F.max(
-                F.when(
-                    k == TYPE_KEY,
-                    F.filter(F.col("_vals"), lambda x: x.isNotNull()),
-                )
-            ),
-            F.array().cast("array<string>"),
-        ).alias("labels"),
-        F.max(F.when(k == FROM_KEY, F.array_max(F.col("_vals")))).alias("from"),
-        F.max(F.when(k == TO_KEY, F.array_max(F.col("_vals")))).alias("to"),
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    is_prop,
-                    F.struct(k.alias("key"), F.col("_vals").alias("values")),
-                )
-            )
-        ).alias("_entries"),
-    )
-    return agg.select(
-        "id",
-        "labels",
-        "from",
-        "to",
-        F.map_from_entries(F.col("_entries")).alias("properties"),
-    )
-
-
-def triples_to_pg_flat(
-    triples: DataFrame, partitions: int | None = None
-) -> DataFrame:
-    """Flattened (export-shaped) PG build: same semantics as
-    :func:`triples_to_pg` but emitting deterministic *strings* instead of
-    array/map columns — ``labels_str`` is the sorted ``|``-joined label
-    set and ``props_str`` is ``key=[v1,v2];key2=[...]`` with keys and
-    values sorted. This is the shape JSONL export and oracle comparison
-    need, produced without the nested higher-order-function map assembly
-    of the map-typed build (whose per-row interpreted lambdas dominate
-    runtime: ~3x slower end-to-end at sf0.1).
-
-    Scale design: two aggregation levels — (id, key) then (id) — after a
-    SINGLE hash exchange on ``id``: ``HashPartitioning(id)`` satisfies the
-    clustered distribution required by ``groupBy(id, key)``, so Catalyst
-    plans both aggregations over one shuffle. The (id, key) level also
-    bounds reducer state for skewed elements (the property values of one
-    hot id collapse to one row per key before the per-id fold), giving
-    the two-level skew safety of :func:`_agg_two_level` without its
-    second exchange.
-
-    ``partitions`` sizes that exchange. Collect-style aggregation holds a
-    buffer OBJECT per in-flight group, so the per-task group count — not
-    byte volume — is what must stay bounded; a ``spark.sql.shuffle.partitions``
-    tuned for scan-shaped stages under-partitions this stage as the
-    element count grows (measured: 66-120s at 10x data on local[32] with
-    32 partitions vs 9s with 256 — GC-bound object aggregation, not
-    spill). Default: sized from the Catalyst plan-stats estimate of the
-    triple relation (~200 KB of upstream scan bytes per task ≈ tens of
-    thousands of groups), floored at shuffle.partitions, capped at 4096.
-    Explicit repartitions are exempt from AQE coalescing, so small
-    inputs just get small tasks, not extra shuffles.
-    """
-    k = F.col("key")
-    is_prop = ~k.isin(*SPECIAL_KEYS)
-    if partitions is None:
-        from ..runtime.checkpoint import group_agg_partitions
-
-        partitions = group_agg_partitions(triples)
-    lvl1 = (
-        triples.repartition(partitions, "id")
-        .groupBy("id", "key")
-        .agg(F.array_sort(F.collect_set("value")).alias("_vals"))
-    )
-    agg = lvl1.groupBy("id").agg(
-        F.coalesce(
-            F.max(F.when(k == TYPE_KEY, F.array_join("_vals", "|"))), F.lit("")
-        ).alias("labels_str"),
-        # element_at(-1) of the sorted set == max(value): matches both the
-        # map-typed build's max() endpoint rule and the SQL oracle
-        F.max(F.when(k == FROM_KEY, F.element_at("_vals", -1))).alias("from_id"),
-        F.max(F.when(k == TO_KEY, F.element_at("_vals", -1))).alias("to_id"),
-        F.coalesce(
-            F.array_join(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            is_prop,
-                            F.concat(
-                                k,
-                                F.lit("=["),
-                                F.array_join("_vals", ","),
-                                F.lit("]"),
-                            ),
-                        )
-                    )
-                ),
-                ";",
-            ),
-            F.lit(""),
-        ).alias("props_str"),
-    )
-    return agg.select(
-        "id",
-        F.when(F.col("from_id").isNotNull(), F.lit(str(PGElementType.EDGE)))
-        .otherwise(F.lit(str(PGElementType.NODE)))
-        .alias("type"),
-        "labels_str",
-        "from_id",
-        "to_id",
-        "props_str",
-    )
+def triples_to_pg_flat(triples: DataFrame) -> DataFrame:
+    """Flattened (export-shaped) PG build: :func:`flatten_pg` of
+    :func:`triples_to_pg` — the same single aggregation, rendered as the
+    deterministic strings JSONL export and oracle comparison need."""
+    return flatten_pg(triples_to_pg(triples))
 
 
 def dangling_edges(pg: DataFrame) -> DataFrame:
@@ -294,10 +146,12 @@ def dangling_edges(pg: DataFrame) -> DataFrame:
 
 
 def flatten_pg(pg: DataFrame) -> DataFrame:
-    """Map-typed PG → the deterministic string shape of
-    :func:`triples_to_pg_flat` (labels_str / from_id / to_id /
-    props_str) — for export and oracle comparison of PG relations that
-    were built or merged in map form."""
+    """Map-typed PG → the deterministic export/oracle string shape, the
+    one flat renderer of the package: ``labels_str`` is the sorted
+    ``|``-joined label set, ``from_id``/``to_id`` the endpoints, and
+    ``props_str`` is ``key=[v1,v2];key2=[...]`` with keys sorted (as the
+    SQL oracle's ``ORDER BY key``) and each value set sorted. NULL
+    property values are skipped by ``array_join``."""
     pkeys = F.array_sort(F.map_keys("properties"))
     props_str = F.array_join(
         F.transform(

@@ -170,8 +170,8 @@ def kg_pg_elements_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def kg_pg_elements_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The general (contract-free) build: flat two-phase aggregation over
-    the triple relation — one hash exchange; see
+    """The general (contract-free) build: one hash aggregation over the
+    triple relation, rendered flat — one hash exchange; see
     ``pg.build.triples_to_pg_flat``. Correct for ANY triple multiset
     (repeated ids across rows/batches); same output as
     :func:`kg_pg_elements` on these keyed tables, same oracle.

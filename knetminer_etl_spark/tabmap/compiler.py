@@ -325,22 +325,10 @@ class DataFrameMapper:
                 ),
             )
 
+        # keys sorted at plan time == the oracle's ORDER BY key;
+        # concat_ws skips the NULL entries of all-null keys
         prop_keys = sorted(k for k in by_key if k not in SPECIAL_KEYS)
-        if not prop_keys:
-            props_str = F.lit("")
-        elif len(prop_keys) == 1:
-            props_str = F.coalesce(_prop_entry(prop_keys[0]), F.lit(""))
-        else:
-            # sort the RENDERED 'key=[vals]' entries, not the keys: the
-            # aggregated build array_sorts the entry strings, and key
-            # order can differ when one key prefixes another ('score2'
-            # sorts before 'score=' since '2' < '='). sort_array stays
-            # codegen'd (asc puts NULLs first; array_join then skips
-            # them, so all-null keys still drop)
-            props_str = F.array_join(
-                F.sort_array(F.array(*[_prop_entry(k) for k in prop_keys])),
-                ";",
-            )
+        props_str = F.concat_ws(";", *[_prop_entry(k) for k in prop_keys])
         # a row whose every serialized value is NULL emits zero triples,
         # so the aggregated build has no such element — drop it here too
         any_triple = F.coalesce(

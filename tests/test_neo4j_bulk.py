@@ -48,11 +48,30 @@ class TestBulkExport:
         assert edges[0][":TYPE"] == "interacts"
 
     def test_prop_key_is_not_substring_matched(self, spark):
-        rows = [("N9", "node", "T", None, None, 'name=[x];surname=[y]')]
+        rows = [
+            ("N9", "node", "T", None, None, 'name=[x];surname=[y]'),
+            (
+                "N10", "node", "T", None, None,
+                'desc=["tumor protein p53 [Source:HGNC Symbol;Acc:HGNC:11998]"]'
+                ';name=["y"]',
+            ),
+            ("N11", "node", "T", None, None, "aXb=[1]"),
+            ("N12", "node", "T", None, None, "a.b=[2]"),
+        ]
         pg = spark.createDataFrame(
             rows,
             "id string, type string, labels_str string, from_id string, "
             "to_id string, props_str string",
         )
-        r = bulk_nodes(pg, ["name"]).first()
-        assert r["name"] == "x"  # must not match 'surname'
+        got = {
+            r[":ID"]: r for r in bulk_nodes(pg, ["name", "desc", "a.b"]).collect()
+        }
+        assert got["N9"]["name"] == "x"  # must not match 'surname'
+        # a value keeps its own closing bracket
+        assert got["N10"]["desc"] == (
+            "tumor protein p53 [Source:HGNC Symbol;Acc:HGNC:11998]"
+        )
+        assert got["N10"]["name"] == "y"
+        # 'a.b' is a literal key, not a regex matching 'aXb'
+        assert got["N11"]["a.b"] is None
+        assert got["N12"]["a.b"] == "2"

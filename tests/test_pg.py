@@ -58,19 +58,9 @@ class TestPGBuild:
         plan = triples_to_pg(triples)._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 1  # one shuffle on id, no joins
 
-    def test_two_level_equals_single_level(self, spark, triples):
-        from pyspark.testing import assertDataFrameEqual
-
-        a = triples_to_pg(triples).orderBy("id")
-        b = triples_to_pg(triples, two_level=True).orderBy("id")
-        assertDataFrameEqual(a, b)
-
-    def test_two_level_equals_single_level_with_nulls(self, spark):
-        """NULL triple values: endpoints ignore them (no ANSI element_at
-        crash), property value sets keep them — identical to the
-        single-level build."""
-        from pyspark.testing import assertDataFrameEqual
-
+    def test_null_values_endpoint_ignored_property_kept(self, spark):
+        """NULL triple values: the endpoint aggregate ignores them and a
+        property value set keeps them."""
         rows = [
             ("E1", "@type", "rel"),
             ("E1", "@from", None),
@@ -80,15 +70,17 @@ class TestPGBuild:
             ("N1", "p", "x"),
         ]
         df = spark.createDataFrame(rows, "id string, key string, value string")
-        a = triples_to_pg(df).orderBy("id")
-        b = triples_to_pg(df, two_level=True).orderBy("id")
-        assertDataFrameEqual(a, b)
+        got = by_id(triples_to_pg(df))
+        assert got["E1"]["from"] is None and got["E1"]["to"] == "N1"
+        assert got["E1"]["type"] == "node"  # no non-NULL @from
+        assert got["E1"]["labels"] == ["rel"]
+        assert got["N1"]["properties"] == {"p": ["x", None]}  # NULLs last
 
-    def test_two_level_handles_hot_element(self, spark):
-        """One element with 1M property rows: the (id,key) pre-agg dedups
-        map-side so the per-id reducer sees one row per key, not 1M raw
-        pairs. Asserts correctness of the skewed build (and that both the
-        hot and a normal element survive intact)."""
+    def test_hot_element_builds(self, spark):
+        """One element with 1M property rows: all its raw pairs meet on one
+        reducer of the single aggregation. Asserts correctness of the
+        skewed build (and that both the hot and a normal element survive
+        intact)."""
         from pyspark.sql import functions as F
 
         hot = (
@@ -104,7 +96,7 @@ class TestPGBuild:
             [("HOT", "@type", "Blob"), ("N1", "@type", "Gene"), ("N1", "p", "x")],
             "id string, key string, value string",
         )
-        pg = by_id(triples_to_pg(hot.unionByName(rest), two_level=True))
+        pg = by_id(triples_to_pg(hot.unionByName(rest)))
         assert pg["HOT"]["labels"] == ["Blob"]
         assert len(pg["HOT"]["properties"]) == 10
         assert len(pg["HOT"]["properties"]["k0"]) == 100
@@ -163,7 +155,7 @@ class TestPGBuild:
             .executedPlan()
             .toString()
         )
-        assert plan.count("Exchange") == 1  # both agg levels over one shuffle
+        assert plan.count("Exchange") == 1  # one shuffle on id
 
     def test_validate_missing_endpoint_raises(self, spark):
         bad = spark.createDataFrame(
@@ -291,11 +283,11 @@ class TestRowLocalFlatBuild:
         assert got == want
         assert len(got) == 3  # null-pk row emits nothing
 
-    def test_prefix_keys_match_aggregated_entry_order(self, spark):
+    def test_prefix_keys_order_by_key(self, spark):
         """Keys where one is a proper prefix of another ('score' vs
         'score2': '2' < '=') order differently by key than by rendered
         'key=[vals]' entry string; the flat build must match the
-        aggregated build's ENTRY-string sort."""
+        aggregated build, and both order entries by key."""
         from pyspark.sql import functions as F
 
         from knetminer_etl_spark.pg.build import triples_to_pg_flat
@@ -324,8 +316,8 @@ class TestRowLocalFlatBuild:
             tuple(r) for r in triples_to_pg_flat(m.to_triples(src)).collect()
         )
         assert got == want
-        # and the entry order really is the non-key order
-        assert got[0][5].startswith("score2=[")
+        # the entries are in key order, as the SQL oracle's ORDER BY key
+        assert got[0][5].startswith("score=[")
 
     def test_contract_violation_fails_loudly(self, spark):
         """check_contract=True: duplicate element ids (non-unique key, or
@@ -465,6 +457,73 @@ class TestRowLocalFlatBuild:
             tuple(r) for r in kg_pg_elements_agg(spark, sf_dir).collect()
         )
         assert got == want
+
+
+def test_flat_key_order_matches_oracle(spark):
+    """Every flat builder renders props_str in the DuckDB oracle's order
+    (KG_PG_ELEMENTS_SQL: string_agg ... ORDER BY key), also where one key
+    prefixes another ('score' < 'score2', while the rendered entry
+    'score2=[' sorts before 'score=[')."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from knetminer_etl_spark.pg.build import (
+        flatten_pg,
+        merge_pg,
+        triples_to_pg_flat,
+    )
+    from knetminer_etl_spark.queries.kg import KG_PG_ELEMENTS_SQL
+    from knetminer_etl_spark.tabmap.compiler import (
+        DataFrameMapper,
+        rowlocal_pg_flat,
+    )
+    from knetminer_etl_spark.tabmap.mappers import (
+        ExprValueMapper,
+        column_triple_mapper,
+        type_triple_mapper,
+    )
+
+    m = DataFrameMapper(
+        ExprValueMapper(F.concat(F.lit("P:"), F.col("pk").cast("string"))),
+        [
+            column_triple_mapper("s1", "score"),
+            column_triple_mapper("s2", "score2"),
+            column_triple_mapper("s3", "score"),  # multi-value key
+        ],
+        [type_triple_mapper("T")],
+    )
+    src = spark.createDataFrame(
+        [(1, 2.0, 3.0, 4.0), (2, None, 5.0, 6.0), (3, 7.0, None, None)],
+        "pk long, s1 double, s2 double, s3 double",
+    )
+    triples = m.to_triples(src)
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE triples (id VARCHAR, key VARCHAR, value VARCHAR)")
+    con.executemany(
+        "INSERT INTO triples VALUES (?, ?, ?)",
+        [tuple(r) for r in triples.collect()],
+    )
+    # the oracle's own CTEs after its source-specific triples CTE
+    oracle = "WITH " + KG_PG_ELEMENTS_SQL[KG_PG_ELEMENTS_SQL.index("labels AS ("):]
+    want = sorted(con.execute(oracle).fetchall())
+    assert [r[5] for r in want] == [
+        "score=[2.0,4.0];score2=[3.0]",
+        "score=[6.0];score2=[5.0]",
+        "score=[7.0]",
+    ]
+
+    old = triples.filter(F.col("key") != "score2")
+    delta = triples.filter(F.col("key") == "score2")
+    builds = {
+        "triples_to_pg_flat": triples_to_pg_flat(triples),
+        "flatten_pg(merge_pg)": flatten_pg(
+            merge_pg(triples_to_pg(old), triples_to_pg(delta))
+        ),
+        "rowlocal_pg_flat": rowlocal_pg_flat(src, m),
+    }
+    for name, flat in builds.items():
+        assert sorted(tuple(r) for r in flat.collect()) == want, name
 
 
 def test_pg_to_triples_roundtrip(spark, triples):
