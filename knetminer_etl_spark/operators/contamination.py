@@ -135,10 +135,9 @@ def decontaminate_auto(
     text_col: str = "text",
     n: int = 8,
     max_hits: int = 0,
-    dispatch_grams: int = BLOOM_DISPATCH_GRAMS,
 ) -> DataFrame:
     """Size-probed dispatch between the exact gram join and the
-    bloom-pruned plan — the :func:`semantic_decontaminate` ``auto``
+    bloom-pruned plan — the :func:`semantic_decontaminate` size-probe
     pattern applied to the lexical pass. Both paths provably emit the
     same survivor set (tests pin the equality; the bloom registry entry
     hash-matches the exact oracle at every scale factor), so the probe
@@ -147,7 +146,7 @@ def decontaminate_auto(
     * eval gram set small enough to broadcast → the exact join is
       cheapest (the bloom's per-gram probes would be pure overhead —
       measured 2.0 vs 3.3 s on the 10× corpus, SCALE.md);
-    * past ``dispatch_grams`` the exact plan must shuffle the ENTIRE
+    * past :data:`BLOOM_DISPATCH_GRAMS` the exact plan must shuffle the ENTIRE
       train gram stream; the bloom prunes it map-side first.
 
     The probe counts the eval side's distinct grams — the small
@@ -157,15 +156,15 @@ def decontaminate_auto(
 
     The bloom branch sizes its bit table from the measured gram count
     (~10 bits/gram ≈ 1% fpp, next power of two, capped at
-    :data:`BLOOM_MAX_BITS`): a fixed default in the >``dispatch_grams``
-    regime would saturate (65k bits against 5M+ keys ≈ 100% fill), and
+    :data:`BLOOM_MAX_BITS`): a fixed default in the
+    >``BLOOM_DISPATCH_GRAMS`` regime would saturate (65k bits against 5M+ keys ≈ 100% fill), and
     a saturated filter passes every train gram — still correct through
     the exact verification join, but paying probe overhead PLUS the
     full shuffle the dispatch exists to avoid.
     """
     eval_grams = distinct_grams(test, text_col, n).localCheckpoint(eager=True)
     n_grams = eval_grams.count()
-    if n_grams <= dispatch_grams:
+    if n_grams <= BLOOM_DISPATCH_GRAMS:
         return decontaminate_against(
             train, eval_grams, id_col, text_col, n, max_hits
         )
@@ -261,7 +260,7 @@ def decontaminate_against(
     materialized (the :func:`decontaminate_auto` dispatch probe)."""
     t_grams = gram_rows(train, text_col, n, id_col)
     flagged = (
-        # eval side ≤ dispatch_grams by contract (the auto dispatch
+        # eval side ≤ BLOOM_DISPATCH_GRAMS by contract (the auto dispatch
         # sends anything larger to the bloom path) — broadcast it
         # explicitly so the planner can never hash the train stream
         # (see ngram_contamination)
@@ -363,7 +362,7 @@ def semantic_contamination(
     unknowable to any blocking scheme), so this is the bit-certain
     reference the banded filter is verified against — when you only
     need the decontaminated corpus, go through
-    :func:`semantic_decontaminate` (mode="auto"), which switches to the
+    :func:`semantic_decontaminate`, which switches to the
     candidate-blocked plan as the evaluation suite grows.
     """
     from .similarity import _dvec, _norm, _pair_dots
@@ -485,7 +484,6 @@ def semantic_decontaminate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    mode: str = "auto",
     n_planes: int | str = "auto",
     n_bands: int | None = None,
     seed: int = 0x5EED,
@@ -495,48 +493,29 @@ def semantic_decontaminate(
     paths provably emit the same survivor set (the banded registry
     entry hash-matches the brute-force oracle at every scale factor).
 
-    ``mode``:
-
-    * ``"auto"`` (default) — size-probe the evaluation side (one count
-      of the SMALL relation, the ``n_clusters="auto"`` probe pattern)
-      and delegate: per-corpus-row brute cost is |test| dot products
-      while the banded path pays a flat ``n_planes × n_bands`` BLAS
-      projection plus only bucket-matched verifications, so brute is
-      the cheaper plan only while |test| stays under about one band
-      matrix's worth of work. Crossover pinned at ``|test| ≤ 576``
-      (one default 12×48 band matrix's worth; measured at 10× data:
-      brute 8.64×, banded 1.71× — SCALE.md). The same probe count
-      sizes the banded shape when ``n_planes="auto"`` (default, see
-      :func:`_auto_decon_shape`) — one bounded job, two decisions.
-    * ``"banded"`` — force :func:`semantic_decontaminate_banded` (the
-      100 TB shape: the corpus never shuffles, the eval side stays
-      broadcast however large the corpus grows).
-    * ``"brute"`` — force the exact nested-loop filter over
-      :func:`semantic_contamination`. Debug / oracle-parity only: it is
-      the bit-certain reference the banded path is verified against,
-      and the right plan ONLY for small fixed suites.
+    The evaluation side is size-probed (one count of the SMALL
+    relation, the ``n_clusters="auto"`` probe pattern) to pick the plan:
+    per-corpus-row brute cost is |test| dot products while the banded
+    path (:func:`semantic_decontaminate_banded`) pays a flat
+    ``n_planes × n_bands`` BLAS projection plus only bucket-matched
+    verifications, so the exact nested-loop filter over
+    :func:`semantic_contamination` is the cheaper plan only while |test|
+    stays under about one band matrix's worth of work. Crossover pinned
+    at ``|test| ≤ 576`` (one default 12×48 band matrix's worth; measured
+    at 10× data: brute 8.64×, banded 1.71× — SCALE.md). The same probe
+    count sizes the banded shape when ``n_planes="auto"`` (default, see
+    :func:`_auto_decon_shape`) — one bounded job, two decisions.
     """
-    n_test = None
-    if mode == "auto":
-        # bounded probe: the eval relation is the broadcast side by
-        # contract (benchmarks, not corpora) — counting it is cheap.
-        # The measured count also sizes the banded shape below (one
-        # probe, two decisions — the content_groups pattern).
-        n_test = test_vecs.count()
-        mode = "brute" if n_test <= 576 else "banded"
-    if n_planes == "auto":
-        if n_test is None:
-            n_test = test_vecs.count()
-        n_planes, n_bands = _auto_decon_shape(n_test, threshold)
-    elif n_bands is None:
-        n_bands = 48
-    if mode == "banded":
+    # bounded probe: the eval relation is the broadcast side by contract
+    # (benchmarks, not corpora) — counting it is cheap
+    n_test = test_vecs.count()
+    if n_test > 576:
+        if n_planes == "auto":
+            n_planes, n_bands = _auto_decon_shape(n_test, threshold)
         return semantic_decontaminate_banded(
             train_vecs, test_vecs, id_col, vec_col, threshold,
             n_planes, n_bands, seed,
         )
-    if mode != "brute":
-        raise ValueError(f"unknown decontamination mode: {mode!r}")
     flagged = semantic_contamination(
         train_vecs, test_vecs, id_col, vec_col, threshold
     ).filter(F.col("contaminated"))

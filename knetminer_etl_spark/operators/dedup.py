@@ -479,13 +479,16 @@ def drop_exact_dups(
     )
 
 
-def _default_pairs_fn(
-    df, id_col, text_col, k, threshold, direct_max=5_000, n_docs=None
-):
+#: docs at or below which the clustering operators pair with exact
+#: shingle-bucket Jaccard instead of MinHash-LSH
+PAIRS_DIRECT_MAX = 5_000
+
+
+def _default_pairs_fn(df, id_col, text_col, k, threshold, n_docs=None):
     """Size-adaptive candidate generation for the clustering operators:
 
-    * corpora of ≤ ``direct_max`` docs → exact shingle-bucket Jaccard
-      with the stop-shingle cap: three plain exchanges, NO eager pin
+    * corpora of ≤ :data:`PAIRS_DIRECT_MAX` docs → exact shingle-bucket
+      Jaccard with the stop-shingle cap: three plain exchanges, NO eager pin
       jobs — ~10 fewer Spark jobs than the LSH path, which at toy
       scale is pure fixed overhead;
     * larger corpora → banded MinHash-LSH with true-Jaccard verify,
@@ -497,19 +500,19 @@ def _default_pairs_fn(
     with probability (1 − j^r)^b — ≤ 1e-4 per pair at j ≥ 0.5 with the
     r=2/b=32 defaults, ≤ 6e-7 at j ≥ 0.6 — so ``near_dup_clusters`` /
     ``dedup_keep_best`` output CAN change as a corpus crosses
-    ``direct_max`` (it has measured hash-equal at every test scale,
-    which is the expected outcome at these odds, not a guarantee).
-    Pass an explicit ``pairs_fn`` (or a different ``direct_max``) to
-    pin one path. The switch probe is an early-exit limit+count — it
-    does not scan past ``direct_max + 1`` rows, but it IS an extra job
-    on the unpinned input at call time.
+    :data:`PAIRS_DIRECT_MAX` (it has measured hash-equal at every test
+    scale, which is the expected outcome at these odds, not a
+    guarantee). Pass an explicit ``pairs_fn`` to pin one path. The
+    switch probe is an early-exit limit+count — it does not scan past
+    ``PAIRS_DIRECT_MAX + 1`` rows, but it IS an extra job on the
+    unpinned input at call time.
     """
     # ``n_docs``: a caller that already knows the corpus size (e.g. a
     # count riding the previous stage's write as an observe metric)
     # passes it to skip the probe job entirely.
     if n_docs is None:
-        n_docs = df.limit(direct_max + 1).count()
-    if n_docs <= direct_max:
+        n_docs = df.limit(PAIRS_DIRECT_MAX + 1).count()
+    if n_docs <= PAIRS_DIRECT_MAX:
         return lambda d: ngram_jaccard_pairs(d, id_col, text_col, k, threshold)
     return lambda d: minhash_lsh_pairs(
         d, id_col, text_col, num_perm="auto", k=k,
@@ -802,7 +805,7 @@ def _hashed_shingles(
     of a downstream signature); banding lanes remix the 8-byte hash,
     and true-Jaccard verification intersects the same fingerprints
     (set/intersection sizes preserved barring ~|sh|²/2⁶⁵ per-document
-    collisions — the standing ``hash_shingles`` argument)."""
+    collisions — see :func:`verified_jaccard_pairs`)."""
     return _with_shingles(df, id_col, text_col, k).select(
         "_id", F.expr("transform(_sh, s -> xxhash64(s))").alias("_hh")
     )
@@ -1080,7 +1083,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.7,
     verify: bool = True,
     max_bucket_size: int | None = 4096,
-    collapse: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash LSH.
 
@@ -1095,9 +1097,8 @@ def minhash_lsh_pairs(
     **Auto band shape** (``num_perm="auto"``, the default): rows-per-
     band and band count are sized from the measured distinct-content
     count via :func:`_auto_minhash_shape` — the count rides the collapse
-    probe below (zero extra jobs), or one ``count()`` job when
-    ``collapse=False``. A FIXED (r, b) is corpus-quadratic in false
-    positives (per-pair collision b·j^r is constant
+    probe below (zero extra jobs). A FIXED (r, b) is corpus-quadratic in
+    false positives (per-pair collision b·j^r is constant
     while sub-threshold pairs grow ∝ n²; measured: 21.5M candidates for
     25,600 true pairs at the 100× tier under static r=2·b=32), so r
     steps up one per 4× of corpus past 64k distinct contents and b
@@ -1111,9 +1112,9 @@ def minhash_lsh_pairs(
     :func:`incremental_minhash_pairs`) stay explicitly-shaped — an
     index must band new batches exactly as it banded old ones.
 
-    **Content collapse** (``collapse=True``, the default): documents
-    with IDENTICAL text — the exact-clone families that occupy LSH
-    buckets on real web corpora — are exact Jaccard-twins: equal
+    **Content collapse**: documents with IDENTICAL text — the
+    exact-clone families that occupy LSH buckets on real web
+    corpora — are exact Jaccard-twins: equal
     shingle sets, hence equal signatures (so equal band buckets),
     Jaccard 1 among themselves, and equal true Jaccard to any third
     document (Jaccard is a function of the set). Banding, candidate
@@ -1135,7 +1136,8 @@ def minhash_lsh_pairs(
     Clone-free corpora pay for none of this beyond the singleton probe:
     ONE aggregate job (:func:`content_groups` — count + per-group sizes
     riding the group pin), after which a no-clones verdict dispatches
-    straight to the direct banded plan (VERDICT r8 #1).
+    straight to the direct banded plan (VERDICT r8 #1), as does a clone
+    bill too small to pay for the collapse joins (:func:`collapse_pays`).
 
     ``max_bucket_size`` (default ON at 4096) drops band buckets larger
     than the cap before pair expansion — the Σ|bucket|² backstop
@@ -1151,16 +1153,6 @@ def minhash_lsh_pairs(
         # explicit lane count without a band count: the historical
         # r=4 default (num_perm=64 → 16 bands)
         bands = max(1, num_perm // 4)
-    if not collapse:
-        if num_perm == "auto":
-            num_perm, bands = _auto_minhash_shape(df.count(), threshold)
-        return observe_output(
-            _minhash_lsh_pairs_direct(
-                df, id_col, text_col, num_perm, bands, k, threshold, verify,
-                max_bucket_size,
-            ),
-            "minhash_lsh",
-        )
     # 128-bit raw-text key. Empty-normalized documents are excluded
     # exactly as the banded path excludes them (_with_shingles drops
     # them before signing), so the within-group emission can never
@@ -1343,7 +1335,6 @@ def verified_jaccard_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.7,
-    hash_shingles: bool = True,
     n_docs: int | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -1363,11 +1354,11 @@ def verified_jaccard_pairs(
     magnitude smaller than the corpus (AQE broadcasts the id set when
     it fits).
 
-    ``hash_shingles`` (default on) verifies over ``xxhash64`` shingle
-    fingerprints instead of the shingle strings: set sizes and
-    intersection sizes — hence the Jaccard value — are preserved barring
-    a ~|sh|²/2⁶⁵ per-document hash collision (the
-    ``doc_span_scrub``/``repeated_span_scrub`` ranking-key argument; the
+    Verification runs over ``xxhash64`` shingle fingerprints instead of
+    the shingle strings: set sizes and intersection sizes — hence the
+    Jaccard value — are preserved barring a ~|sh|²/2⁶⁵ per-document hash
+    collision (the ``doc_span_scrub``/``repeated_span_scrub`` ranking-key
+    argument; the
     oracle hash-match at every scale factor is the standing evidence),
     while the pinned relation and the two verification joins carry
     8 bytes per shingle instead of the k-token text — at corpus scale
@@ -1396,14 +1387,9 @@ def verified_jaccard_pairs(
                 .distinct()
             )
             cand_docs = corpus.join(cand_ids, on=id_col, how="left_semi")
-        shing = _with_shingles(cand_docs, id_col, text_col, k)
-        if hash_shingles:
-            shing = shing.select(
-                "_id",
-                F.transform(F.col("_sh"), lambda s: F.xxhash64(s)).alias(
-                    "_sh"
-                ),
-            )
+        shing = _hashed_shingles(cand_docs, id_col, text_col, k).select(
+            "_id", F.col("_hh").alias("_sh")
+        )
         # pin: referenced by both join sides; bounded by the candidate set
         shing = shing.localCheckpoint(eager=True)
     sa = shing.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
@@ -2185,7 +2171,6 @@ def semantic_dedup(
     n_planes: int = 10,
     n_bands: int = 32,
     seed: int = 0x5EED,
-    direct_max: int = 5_000,
     centroids: list[list[float]] | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
@@ -2264,7 +2249,6 @@ def semantic_dedup(
         n_planes,
         n_bands,
         seed,
-        direct_max,
         n_vecs=n_docs,
     )
 
@@ -2569,7 +2553,6 @@ def semantic_dedup_kmeans(
     n_planes: int = 10,
     n_bands: int = 32,
     seed: int = 0x5EED,
-    direct_max: int = 5_000,
     n_docs: int | None = None,
 ) -> DataFrame:
     """:func:`semantic_dedup` with TRUE k-means clusters — the paper's
@@ -2624,8 +2607,7 @@ def semantic_dedup_kmeans(
             on="_id",
         ).select("_id", "_v", "_n", "cluster")
     return _semantic_keep(
-        staged, id_col, threshold, n_planes, n_bands, seed, direct_max,
-        n_vecs=n_docs,
+        staged, id_col, threshold, n_planes, n_bands, seed, n_vecs=n_docs,
     )
 
 
@@ -2683,6 +2665,11 @@ def _verified_drops(
     )
 
 
+#: vectors at or below which the SemDeDup keep rule runs as one
+#: in-cluster pass instead of LSH-banded two-phase verification
+SEMANTIC_DIRECT_MAX = 5_000
+
+
 def _direct_semantic_keep(
     staged: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
@@ -2693,7 +2680,7 @@ def _direct_semantic_keep(
     probes. The plan is scan → narrow assignment → one cluster
     exchange → Arrow batch per cluster; per-group memory is chunked
     to O(chunk × |cluster|) doubles, and |cluster| is bounded by the
-    caller's ``direct_max`` dispatch.
+    :data:`SEMANTIC_DIRECT_MAX` dispatch.
 
     Exactness vs the pair-verified path:
 
@@ -2766,7 +2753,6 @@ def _semantic_keep(
     n_planes: int,
     n_bands: int,
     seed: int,
-    direct_max: int = 5_000,
     n_vecs: int | None = None,
 ) -> DataFrame:
     """Shared SemDeDup keep rule over a ``(_id, _v, _n, cluster)``
@@ -2808,7 +2794,7 @@ def _semantic_keep(
     # memoized count, or a count riding an upstream write) dispatches
     # with ZERO driver-synchronized jobs before the final action: the
     # direct branch is single-action and needs no pin at all
-    if n_vecs is not None and n_vecs <= direct_max:
+    if n_vecs is not None and n_vecs <= SEMANTIC_DIRECT_MAX:
         return _direct_semantic_keep(staged, id_col, threshold)
 
     # pin: referenced by the pair generator, both verify join sides, and
@@ -2839,7 +2825,7 @@ def _semantic_keep(
     #    (cluster, band, bucket) + the two-phase witness verification
     #    above.
     n_vecs = int(_am["n"])  # observed during the pin job — no extra action
-    if n_vecs <= direct_max:
+    if n_vecs <= SEMANTIC_DIRECT_MAX:
         # the one-action in-group keep rule, reading the pinned blocks
         return _direct_semantic_keep(assigned, id_col, threshold)
     banded = (

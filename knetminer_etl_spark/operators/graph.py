@@ -6,10 +6,10 @@ an external package, so the algorithms here are expressed directly as
 iterative DataFrame programs — the same join/agg shapes GraphFrames
 compiles to, without the dependency:
 
-* :func:`connected_components` — iterative min-label propagation
-  (each round: component = min(component of self, components of
-  neighbors)); converges in O(graph diameter) rounds. Used for dedup
-  clustering (near-dup pairs → canonical groups).
+* :func:`connected_components` — large-star / small-star contraction
+  to min-id components in O(log n) rounds (a driver union-find for
+  small graphs). Used for dedup clustering (near-dup pairs →
+  canonical groups).
 * :func:`degrees` — in/out/total degree per node.
 * :func:`k_hop_neighbors` — BFS frontier expansion.
 * :func:`pagerank` — power iteration with uniform teleport.
@@ -69,6 +69,10 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+#: distinct edges at or below which :func:`connected_components` labels
+#: the graph with a driver union-find instead of star rounds
+SMALL_GRAPH_EDGES = 100_000
+
 # most-recent connected_components run: {"edges": n, "rounds": r} —
 # read by scale sweeps to attribute runtime to input volume (same
 # pattern as LAST_CLOSURE_STATS below)
@@ -82,8 +86,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     node_id: str = "id",
     max_iterations: int = 50,
-    rounds_per_check: int = 1,
-    small_graph_threshold: int = 100_000,
     edges_canonical: bool = False,
     _stats: dict | None = None,
 ) -> DataFrame:
@@ -101,27 +103,21 @@ def connected_components(
 
     **Size-adaptive dispatch**: the distinct edge count rides the input
     pin job (``observe``, no extra action); at or below
-    ``small_graph_threshold`` edges the star rounds are pure
+    :data:`SMALL_GRAPH_EDGES` edges the star rounds are pure
     job-latency — a bounded union-find over the collected edge list
     (the driver-held-model-state pattern: ≤ ~1.6 MB at the default
     100k) labels the graph in one collect + one broadcast-sized join,
     with IDENTICAL min-id components. On any real corpus the near-dup
     graph blows past the threshold and the log-round distributed path
     runs; the threshold exists because a 100k-edge graph should be
-    solved on the driver even on a 1000-executor cluster. Set
-    ``small_graph_threshold=0`` to force the distributed path.
+    solved on the driver even on a 1000-executor cluster.
 
-    ``rounds_per_check`` > 1 batches star rounds between convergence
-    (fingerprint) checks — worth it on huge graphs where the fingerprint
-    is itself a full edge scan per round, NOT on small graphs, where the
-    up-to ``rounds_per_check-1`` extra no-op star rounds cost more than
-    the skipped checks (hence default 1). Every round pins its output
-    (`localCheckpoint`) regardless: each star joins its input with an
+    Every round pins its output (`localCheckpoint`) and checks the
+    fingerprint inside that pin job: each star joins its input with an
     aggregate OF that input — two references — so un-pinned chaining
     recomputes prior rounds exponentially (measured 3.5x on the
     benchmark dedup graph when two rounds shared one checkpoint).
     """
-    rounds_per_check = max(1, rounds_per_check)
     # the module-global record is ALWAYS this run's (so readers like
     # tools/scale_check.py never see a previous run's numbers); a
     # caller-supplied _stats dict gets the same keys set, nothing cleared
@@ -159,7 +155,7 @@ def connected_components(
     n_edges = int(em["n"])
     _record("edges", n_edges)
 
-    if small_graph_threshold and n_edges <= small_graph_threshold:
+    if n_edges <= SMALL_GRAPH_EDGES:
         labels = _union_find_min_labels(
             (r["u"], r["v"]) for r in e.collect()
         )
@@ -218,10 +214,8 @@ def connected_components(
 
     prev_fp = None
     rounds = 0
-    for _ in range(-(-max_iterations // rounds_per_check)):
-        for _i in range(rounds_per_check - 1):
-            e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        # the check round's fingerprint rides inside the pin job
+    for _ in range(max_iterations):
+        # the round's fingerprint rides inside the pin job
         # (observe) — no separate convergence action
         e, fp = _pin_observe(
             _small_star(_large_star(e)),
@@ -229,7 +223,7 @@ def connected_components(
             # bit_xor: order-independent, overflow-free edge-set digest
             F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
         )
-        rounds += rounds_per_check
+        rounds += 1
         if (fp["n"], fp["h"]) == prev_fp:
             break
         prev_fp = (fp["n"], fp["h"])
@@ -272,51 +266,6 @@ def _union_find_min_labels(pairs) -> dict:
         if m is None or x < m:
             comp_min[r] = x
     return {x: comp_min[find(x)] for x in parent}
-
-
-def connected_components_label(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    nodes: DataFrame | None = None,
-    node_id: str = "id",
-    max_iterations: int = 50,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """Plain min-label propagation — O(diameter) rounds. Fine for tiny
-    dedup clusters; prefer :func:`connected_components` (log-round
-    star contraction) everywhere else."""
-    e = _sym_edges(edges, src, dst)
-    e = e.localCheckpoint(eager=True)
-    ids = e.select(F.col("src").alias("id"))
-    if nodes is not None:
-        ids = ids.unionByName(nodes.select(F.col(node_id).alias("id")))
-    labels = ids.distinct().withColumn("component", F.col("id"))
-
-    for i in range(max_iterations):
-        # candidate = min over (self, neighbor components)
-        nbr = (
-            e.join(labels, e["dst"] == labels["id"])
-            .select(F.col("src").alias("id"), F.col("component"))
-        )
-        new_labels = (
-            labels.select("id", "component")
-            .unionByName(nbr)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .filter(F.col("n.component") != F.col("o.component"))
-        )
-        if changed.isEmpty():
-            labels = new_labels
-            break
-        labels = new_labels
-    return labels.select("id", "component")
 
 
 def degrees(

@@ -151,8 +151,13 @@ def flatten_pg(pg: DataFrame) -> DataFrame:
     ``|``-joined label set, ``from_id``/``to_id`` the endpoints, and
     ``props_str`` is ``key=[v1,v2];key2=[...]`` with keys sorted (as the
     SQL oracle's ``ORDER BY key``) and each value set sorted. NULL
-    property values are skipped by ``array_join``."""
-    pkeys = F.array_sort(F.map_keys("properties"))
+    property values are skipped by ``array_join``, and a key whose
+    values are all NULL is dropped, as the oracle's ``kv`` CTE and the
+    row-local ``to_pg_flat`` drop it."""
+    pkeys = F.filter(
+        F.array_sort(F.map_keys("properties")),
+        lambda k: F.exists(F.col("properties")[k], lambda v: v.isNotNull()),
+    )
     props_str = F.array_join(
         F.transform(
             pkeys,

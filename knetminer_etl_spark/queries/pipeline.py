@@ -1439,7 +1439,7 @@ def embedding_semantic_decontamination_auto(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The DEFAULT decontamination entry point
-    (operators/contamination.semantic_decontaminate, mode="auto"): a
+    (operators/contamination.semantic_decontaminate): a
     size probe of the evaluation side picks brute force only while the
     suite is small (|test| ≤ n_planes·n_bands), else the sign-LSH
     banded plan — the ``n_clusters="auto"`` treatment applied to
@@ -1464,7 +1464,7 @@ def embedding_semantic_decontamination_auto(
         ),
     )
     test = emb.filter(F.col("vec_id") % 10 == 7).unionByName(leaks)
-    out = CT.semantic_decontaminate(train, test, threshold=0.95, mode="auto")
+    out = CT.semantic_decontaminate(train, test, threshold=0.95)
     return out.select("vec_id").orderBy("vec_id")
 
 

@@ -29,9 +29,7 @@ Why not merge deltas into the bucketed base in place? Hash-bucketing
 bounds the rewrite only when the delta's *id count* is far below the
 bucket count: uniformly-hashed ids touch ~``B·(1-(1-1/B)^n)`` of B
 buckets, so a measured 150-id delta into a 64-bucket store rewrote 81%
-of its bytes (SCALE.md "Continuous KG"). The in-place mode is kept
-(``mode="inplace"``) for id-clustered deltas where few buckets really
-are touched; ``mode="append"`` is the default because its write bound
+of its bytes (SCALE.md "Continuous KG"). The delta log's write bound
 does not depend on the delta's id distribution.
 
 Exactly-once: the streaming checkpoint records source offsets; the delta
@@ -50,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pg.build import merge_pg, pg_to_triples, triples_to_pg
+from ..pg.build import pg_to_triples, triples_to_pg
 from ..runtime.fs import fs_delete, fs_exists, fs_size
 
 PG_COLUMNS = ["id", "type", "labels", "from", "to", "properties"]
@@ -136,20 +134,15 @@ def merge_triples_batch(
     pg_path: str,
     n_buckets: int = N_BUCKETS,
     *,
-    mode: str = "append",
     epoch_id: int | None = None,
     compact_threshold: float = COMPACT_THRESHOLD,
     max_delta_batches: int = MAX_DELTA_BATCHES,
 ) -> None:
     """Fold one batch of triples into the PG store at ``pg_path``.
 
-    ``mode="append"`` (default): aggregate the delta and append it as
-    ``delta/batch_id={epoch_id}`` — O(delta) bytes written, any id
-    distribution — compacting into the bucketed base when the log
-    exceeds the policy above. ``mode="inplace"``: merge into the
-    delta-touched bucket partitions of a flat bucketed store (the
-    streaming/rollup.py recipe) — preferable only when deltas are
-    id-clustered so few buckets really are touched.
+    The delta is aggregated and appended as ``delta/batch_id={epoch_id}``
+    — O(delta) bytes written, any id distribution — and compacted into
+    the bucketed base when the log exceeds the policy above.
 
     ``epoch_id`` is the delta-log slot: streaming ``foreachBatch``
     passes its epoch (re-ingestion of the SAME epoch idempotently
@@ -158,12 +151,6 @@ def merge_triples_batch(
     log (max existing + 1), so repeated un-epoched merges APPEND rather
     than silently overwriting slot 0.
     """
-    if mode == "inplace":
-        _merge_inplace(spark, triples, pg_path, n_buckets)
-        return
-    if mode != "append":
-        raise ValueError(f"unknown mode {mode!r} (use 'append' or 'inplace')")
-
     delta = triples_to_pg(triples).localCheckpoint(eager=True)
     if not delta.take(1):
         return
@@ -241,61 +228,12 @@ def compact_kg(
     fs_delete(spark, _delta(pg_path))
 
 
-def _merge_inplace(
-    spark: SparkSession,
-    triples: DataFrame,
-    pg_path: str,
-    n_buckets: int,
-) -> None:
-    """In-place bucket merge (see module docstring for when to prefer it).
-
-    Per batch: aggregate the delta (delta-sized), find which buckets its
-    ids hash into (≤ ``n_buckets`` — bounded driver state, the
-    rollup-day-list pattern), read ONLY those bucket partitions from the
-    store, ``merge_pg``, and dynamic-partition-overwrite only the
-    touched buckets. Existence is PROBED through the Hadoop FileSystem
-    (never inferred from a read failure — a transient FS error must
-    propagate, not silently reset the store to the current delta)."""
-    delta = (
-        triples_to_pg(triples)
-        .withColumn("bucket", _bucket_of(n_buckets))
-        .localCheckpoint(eager=True)  # reused: bucket list + merge input
-    )
-    touched = sorted(
-        r["bucket"] for r in delta.select("bucket").distinct().collect()
-    )  # bounded by n_buckets
-    if not touched:
-        return
-    if fs_exists(spark, pg_path):
-        existing = (
-            spark.read.parquet(pg_path)
-            .filter(F.col("bucket").isin([int(b) for b in touched]))
-            .select(*PG_COLUMNS)
-        )
-        merged = merge_pg(existing, delta.select(*PG_COLUMNS)).withColumn(
-            "bucket", _bucket_of(n_buckets)
-        )
-        # materialize before writing: the plan reads the partitions it
-        # is about to overwrite
-        merged = merged.localCheckpoint(eager=True)
-    else:  # first batch: nothing stored yet
-        merged = delta
-    (
-        merged.repartition(len(touched), "bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(pg_path)
-    )
-
-
 def start_kg_stream(
     stream_df: DataFrame,
     mapper,
     pg_path: str,
     checkpoint_dir: str,
     n_buckets: int = N_BUCKETS,
-    mode: str = "append",
 ):
     """Start the continuous KG build: ``mapper.to_triples`` over each
     micro-batch, folded into ``pg_path``. Returns the StreamingQuery
@@ -307,7 +245,6 @@ def start_kg_stream(
             mapper.to_triples(batch),
             pg_path,
             n_buckets,
-            mode=mode,
             epoch_id=epoch,
         )
 
@@ -319,12 +256,10 @@ def start_kg_stream(
 
 
 def read_kg(spark: SparkSession, pg_path: str) -> DataFrame:
-    """The current stored PG relation — base ⊕ delta log for the
-    append-mode layout, or the flat bucketed store of
-    ``mode="inplace"``. Read-time merge is one shuffle of base+deltas;
-    call :func:`compact_kg` first if many consumers will read."""
-    if fs_exists(spark, _base(pg_path)) or fs_exists(spark, _delta(pg_path)):
-        merged = _merged_relation(spark, pg_path)
-        assert merged is not None
-        return merged.select(*PG_COLUMNS)
-    return spark.read.parquet(pg_path).select(*PG_COLUMNS)
+    """The current stored PG relation: base ⊕ delta log. Read-time merge
+    is one shuffle of base+deltas; call :func:`compact_kg` first if many
+    consumers will read."""
+    merged = _merged_relation(spark, pg_path)
+    if merged is None:
+        raise FileNotFoundError(f"no KG store at {pg_path}")
+    return merged.select(*PG_COLUMNS)

@@ -73,9 +73,6 @@ class DataFrameMapper:
         Extra constant mappers (e.g. ``@type``, provenance) — kept as a
         separate argument for surface parity with the reference
         (src/ketl/tabmap/core.py:223-266); they behave like mappers.
-    use_column_pruning:
-        Prune the input to referenced columns before a Python fallback
-        (native path: Catalyst prunes automatically).
     """
 
     def __init__(
@@ -83,7 +80,6 @@ class DataFrameMapper:
         id_mapper: Any,
         mappers: Sequence[TripleMapper],
         constants: Sequence[TripleMapper] = (),
-        use_column_pruning: bool = True,
         on_empty_edge_part: str = "error",
     ):
         self.mappers: list[TripleMapper] = list(mappers) + list(constants)

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,10 +87,9 @@ class TestMinHash:
         assert est[(1, 2)] == 1.0
 
     def test_singleton_dispatch_equals_collapse_and_direct(self, spark):
-        # clone-FREE corpus: the singleton-group probe dispatches past
-        # the collapse machinery; its output must equal both the
-        # uncollapsed engine and the collapse path forced to run (by
-        # adding one clone and filtering its pairs back out)
+        # clone-FREE corpus: the singleton-group probe dispatches to the
+        # direct engine; its output must equal the collapse path forced
+        # to run (by adding one clone and filtering its pairs back out)
         rows = [
             (1, BASE),
             (3, BASE.replace("today", "tomorrow")),
@@ -100,23 +101,21 @@ class TestMinHash:
             (r["id_a"], r["id_b"], r["jaccard"])
             for r in DD.minhash_lsh_pairs(df, threshold=0.5).collect()
         }
-        direct = {
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in DD.minhash_lsh_pairs(
-                df, threshold=0.5, collapse=False
-            ).collect()
-        }
-        assert via_dispatch == direct
+        assert via_dispatch
         # force the full collapse path: one exact clone of doc 1 keeps
-        # the group count below the member count
+        # the group count below the member count, and a negative budget
+        # makes its tiny clone bill pay for the collapse joins
         with_clone = df.unionByName(
             spark.createDataFrame([(9, BASE)], "doc_id long, text string")
         )
-        collapsed = {
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in DD.minhash_lsh_pairs(with_clone, threshold=0.5).collect()
-            if 9 not in (r["id_a"], r["id_b"])
-        }
+        with mock.patch.object(DD, "CLONE_BILL_BUDGET", -1):
+            collapsed = {
+                (r["id_a"], r["id_b"], r["jaccard"])
+                for r in DD.minhash_lsh_pairs(
+                    with_clone, threshold=0.5
+                ).collect()
+                if 9 not in (r["id_a"], r["id_b"])
+            }
         assert collapsed == via_dispatch
 
 
@@ -157,20 +156,13 @@ class TestBucketCapAndMetrics:
         # node entirely when the rep-level candidate relation is empty)
         m = DD.read_candidate_metrics("minhash_lsh")
         assert m.get("max_bucket", 1) <= 2
-        # legacy uncollapsed engine: the mega-bucket IS dropped by the
-        # cap (the recall trade the cap documents, now confined to
-        # content-diverse buckets)
-        legacy = {
-            (r["id_a"], r["id_b"])
-            for r in DD.minhash_lsh_pairs(
-                df, threshold=0.9, max_bucket_size=10, collapse=False
-            ).collect()
-        }
-        assert legacy == {(100, 101)}
+        # uncapped, the clone bill is too small to pay for collapse:
+        # the direct engine emits the same pairs as candidates
         uncapped = DD.minhash_lsh_pairs(
-            df, threshold=0.9, max_bucket_size=None, collapse=False
+            df, threshold=0.9, max_bucket_size=None
         ).count()
         assert uncapped == len(full)
+        assert DD.read_candidate_metrics("minhash_lsh")["max_bucket"] == 40
 
     def test_minhash_candidate_metrics(self, spark):
         import unittest.mock as mock
@@ -191,12 +183,9 @@ class TestBucketCapAndMetrics:
         # relation's observation entirely)
         assert m.get("candidates", 0) == 0
         assert m.get("max_bucket", 1) == 1
-        # uncollapsed engine pays the quadratic bucket bill for the
-        # same output
-        assert (
-            DD.minhash_lsh_pairs(df, threshold=0.9, collapse=False).count()
-            == 45
-        )
+        # the default dispatch sends this small bill to the direct
+        # engine, which pays the quadratic bucket bill for the same output
+        assert DD.minhash_lsh_pairs(df, threshold=0.9).count() == 45
         m2 = DD.read_candidate_metrics("minhash_lsh")
         assert m2["candidates"] >= 45 and m2["max_bucket"] == 10
 
@@ -633,14 +622,15 @@ class TestSemanticDedup:
         direct = sorted(
             map(tuple, semantic_dedup(corpus, n_clusters=4, threshold=0.95).collect())
         )
-        banded = sorted(
-            map(
-                tuple,
-                semantic_dedup(
-                    corpus, n_clusters=4, threshold=0.95, direct_max=0
-                ).collect(),
+        with mock.patch.object(DD, "SEMANTIC_DIRECT_MAX", 0):
+            banded = sorted(
+                map(
+                    tuple,
+                    semantic_dedup(
+                        corpus, n_clusters=4, threshold=0.95
+                    ).collect(),
+                )
             )
-        )
         assert direct == banded
         assert any(not r[2] for r in direct)  # the balls produced drops
         km_direct = sorted(
@@ -651,14 +641,15 @@ class TestSemanticDedup:
                 ).collect(),
             )
         )
-        km_banded = sorted(
-            map(
-                tuple,
-                semantic_dedup_kmeans(
-                    corpus, n_clusters=4, iterations=2, threshold=0.95, direct_max=0
-                ).collect(),
+        with mock.patch.object(DD, "SEMANTIC_DIRECT_MAX", 0):
+            km_banded = sorted(
+                map(
+                    tuple,
+                    semantic_dedup_kmeans(
+                        corpus, n_clusters=4, iterations=2, threshold=0.95
+                    ).collect(),
+                )
             )
-        )
         assert km_direct == km_banded
 
     def test_join_assignment_matches_literal_expression(self, spark):
@@ -726,10 +717,14 @@ class TestSemanticDedup:
                 F.md5(F.col("vec_id").cast("string")), "vec_id"
             ).limit(4).collect()
         ]
-        full = semantic_dedup(
-            corpus, threshold=0.95, centroids=cents, direct_max=0
-        )
-        full_dropped = {r["vec_id"] for r in full.collect() if not r["keep"]}
+        with mock.patch.object(DD, "SEMANTIC_DIRECT_MAX", 0):
+            full_dropped = {
+                r["vec_id"]
+                for r in semantic_dedup(
+                    corpus, threshold=0.95, centroids=cents
+                ).collect()
+                if not r["keep"]
+            }
 
         batches = [
             corpus.filter("vec_id % 3 = 0"),

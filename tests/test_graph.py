@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 
 from knetminer_etl_spark.operators import graph as G
@@ -38,12 +40,11 @@ class TestConnectedComponents:
             [(i, i + 1) for i in range(n - 1)], "src long, dst long"
         )
         stats: dict = {}
-        got = {
-            r["id"]: r["component"]
-            for r in G.connected_components(
-                e, small_graph_threshold=0, _stats=stats
-            ).collect()
-        }
+        with mock.patch.object(G, "SMALL_GRAPH_EDGES", -1):
+            got = {
+                r["id"]: r["component"]
+                for r in G.connected_components(e, _stats=stats).collect()
+            }
         assert got == {i: 0 for i in range(n)}
         assert 0 < stats["rounds"] <= 12, f"took {stats['rounds']} rounds"
 
@@ -57,7 +58,7 @@ class TestConnectedComponents:
 
     def test_small_graph_fast_path_matches_distributed(self, spark):
         """The bounded driver union-find (default dispatch under
-        small_graph_threshold) must produce the identical min-id labels
+        SMALL_GRAPH_EDGES) must produce the identical min-id labels
         as the forced star-contraction path — chains, a cycle, a star,
         isolated nodes from the nodes relation."""
         e = spark.createDataFrame(
@@ -77,27 +78,15 @@ class TestConnectedComponents:
                 e, nodes=nodes, _stats=stats_fast
             ).collect()
         }
-        dist = {
-            r["id"]: r["component"]
-            for r in G.connected_components(
-                e, nodes=nodes, small_graph_threshold=0
-            ).collect()
-        }
+        with mock.patch.object(G, "SMALL_GRAPH_EDGES", -1):
+            dist = {
+                r["id"]: r["component"]
+                for r in G.connected_components(e, nodes=nodes).collect()
+            }
         assert fast == dist
         assert fast[99] == 99  # isolated node is its own component
         assert stats_fast["rounds"] == 0  # the fast path actually ran
         assert stats_fast["edges"] == 9
-
-    def test_label_propagation_variant_agrees(self, spark, edges, nodes):
-        star = {
-            r["id"]: r["component"]
-            for r in G.connected_components(edges, nodes=nodes).collect()
-        }
-        label = {
-            r["id"]: r["component"]
-            for r in G.connected_components_label(edges, nodes=nodes).collect()
-        }
-        assert star == label
 
 
 class TestDegrees:

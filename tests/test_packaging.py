@@ -45,20 +45,25 @@ def test_fallback_wheel_builder_produces_installable_artifact(tmp_path):
     """tools/build_wheel.py (the no-build-deps PEP 427 builder used
     where the wheel package/network are absent) must produce an
     artifact pip accepts: install it with --no-index into a scratch
-    target and import the package from there."""
+    target and import the package from there. It builds into tmp_path,
+    so the committed dist/ wheel is never rewritten by a test run."""
     import os
     import subprocess
     import sys
 
     root = os.path.dirname(os.path.dirname(__file__))
     out = subprocess.run(
-        [sys.executable, os.path.join(root, "tools", "build_wheel.py")],
+        [
+            sys.executable, os.path.join(root, "tools", "build_wheel.py"),
+            str(tmp_path / "dist"),
+        ],
         capture_output=True,
         text=True,
         check=True,
     )
     whl = out.stdout.strip().splitlines()[-1]
     assert whl.endswith("-py3-none-any.whl") and os.path.exists(whl)
+    assert os.path.dirname(whl) == str(tmp_path / "dist")
     target = tmp_path / "site"
     subprocess.run(
         [

@@ -459,12 +459,25 @@ class TestRowLocalFlatBuild:
         assert got == want
 
 
+def _oracle_flat(rows):
+    """Sorted flat rows of the DuckDB oracle's own CTEs (those after the
+    source-specific triples CTE of KG_PG_ELEMENTS_SQL) over ``rows``."""
+    import duckdb
+
+    from knetminer_etl_spark.queries.kg import KG_PG_ELEMENTS_SQL
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE triples (id VARCHAR, key VARCHAR, value VARCHAR)")
+    con.executemany("INSERT INTO triples VALUES (?, ?, ?)", rows)
+    oracle = "WITH " + KG_PG_ELEMENTS_SQL[KG_PG_ELEMENTS_SQL.index("labels AS ("):]
+    return sorted(con.execute(oracle).fetchall())
+
+
 def test_flat_key_order_matches_oracle(spark):
     """Every flat builder renders props_str in the DuckDB oracle's order
     (KG_PG_ELEMENTS_SQL: string_agg ... ORDER BY key), also where one key
     prefixes another ('score' < 'score2', while the rendered entry
     'score2=[' sorts before 'score=[')."""
-    import duckdb
     from pyspark.sql import functions as F
 
     from knetminer_etl_spark.pg.build import (
@@ -472,7 +485,6 @@ def test_flat_key_order_matches_oracle(spark):
         merge_pg,
         triples_to_pg_flat,
     )
-    from knetminer_etl_spark.queries.kg import KG_PG_ELEMENTS_SQL
     from knetminer_etl_spark.tabmap.compiler import (
         DataFrameMapper,
         rowlocal_pg_flat,
@@ -497,16 +509,7 @@ def test_flat_key_order_matches_oracle(spark):
         "pk long, s1 double, s2 double, s3 double",
     )
     triples = m.to_triples(src)
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE triples (id VARCHAR, key VARCHAR, value VARCHAR)")
-    con.executemany(
-        "INSERT INTO triples VALUES (?, ?, ?)",
-        [tuple(r) for r in triples.collect()],
-    )
-    # the oracle's own CTEs after its source-specific triples CTE
-    oracle = "WITH " + KG_PG_ELEMENTS_SQL[KG_PG_ELEMENTS_SQL.index("labels AS ("):]
-    want = sorted(con.execute(oracle).fetchall())
+    want = _oracle_flat([tuple(r) for r in triples.collect()])
     assert [r[5] for r in want] == [
         "score=[2.0,4.0];score2=[3.0]",
         "score=[6.0];score2=[5.0]",
@@ -524,6 +527,23 @@ def test_flat_key_order_matches_oracle(spark):
     }
     for name, flat in builds.items():
         assert sorted(tuple(r) for r in flat.collect()) == want, name
+
+
+def test_flat_drops_all_null_key_as_oracle(spark):
+    """A property whose values are all NULL has no entry in the oracle's
+    ``kv``/``props`` CTEs; the flat builders drop the key too, while the
+    map-typed PG keeps it (test_null_values_endpoint_ignored_property_kept)."""
+    from knetminer_etl_spark.pg.build import flatten_pg, triples_to_pg_flat
+
+    rows = [("N1", "p", None), ("N1", "q", "1")]
+    triples = spark.createDataFrame(rows, "id string, key string, value string")
+    want = _oracle_flat(rows)
+    assert want == [("N1", "node", "", None, None, "q=[1]")]
+    for name, flat in {
+        "flatten_pg": flatten_pg(triples_to_pg(triples)),
+        "triples_to_pg_flat": triples_to_pg_flat(triples),
+    }.items():
+        assert [tuple(r) for r in flat.collect()] == want, name
 
 
 def test_pg_to_triples_roundtrip(spark, triples):

@@ -77,14 +77,19 @@ class TestSemanticWitnessProperties:
                 semantic_dedup(df, n_clusters=3, threshold=threshold).collect(),
             )
         )
-        banded = sorted(
-            map(
-                tuple,
-                semantic_dedup(
-                    df, n_clusters=3, threshold=threshold, direct_max=0
-                ).collect(),
+        import unittest.mock as mock
+
+        from knetminer_etl_spark.operators import dedup as DD
+
+        with mock.patch.object(DD, "SEMANTIC_DIRECT_MAX", 0):
+            banded = sorted(
+                map(
+                    tuple,
+                    semantic_dedup(
+                        df, n_clusters=3, threshold=threshold
+                    ).collect(),
+                )
             )
-        )
         # identical (id, cluster) always; identical keep except the
         # bounded-probability LSH miss, which these sizes make ~0 —
         # treat ANY difference as a failure so misses surface here

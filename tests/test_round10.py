@@ -44,17 +44,17 @@ class TestContaminationNanParity:
 
     def test_brute_banded_same_survivors(self, spark):
         train, test = self._vecs(spark)
+        # |test| = 2: the default entry runs the brute filter
         brute = {
             r["vec_id"]
             for r in CT.semantic_decontaminate(
-                train, test, threshold=0.95, mode="brute"
+                train, test, threshold=0.95
             ).collect()
         }
         banded = {
             r["vec_id"]
-            for r in CT.semantic_decontaminate(
-                train, test, threshold=0.95, mode="banded",
-                n_planes=6, n_bands=64,
+            for r in CT.semantic_decontaminate_banded(
+                train, test, threshold=0.95, n_planes=6, n_bands=64,
             ).collect()
         }
         assert brute == banded

@@ -247,7 +247,7 @@ class TestExpandGroupPairs:
 
 class TestNanParity:
     """Degenerate (all-zero / NaN-cosine) embeddings must dedupe
-    IDENTICALLY on both sides of the direct_max dispatch boundary:
+    IDENTICALLY on both sides of the SEMANTIC_DIRECT_MAX dispatch boundary:
     a NaN cosine is never a witness (ADVICE r8)."""
 
     def _corpus(self, spark):
@@ -279,14 +279,17 @@ class TestNanParity:
                 ).collect(),
             )
         )
-        banded = sorted(
-            map(
-                tuple,
-                semantic_dedup(
-                    corpus, n_clusters=2, threshold=0.95, direct_max=0
-                ).collect(),
+        import unittest.mock as mock
+
+        with mock.patch.object(DD, "SEMANTIC_DIRECT_MAX", 0):
+            banded = sorted(
+                map(
+                    tuple,
+                    semantic_dedup(
+                        corpus, n_clusters=2, threshold=0.95
+                    ).collect(),
+                )
             )
-        )
         assert direct == banded
         keep = {r[0]: r[2] for r in direct}
         assert keep[200] is True and keep[201] is True  # NaN: no witness
@@ -416,10 +419,12 @@ class TestAutoDeconShape:
                 train, test, threshold=0.95
             ).collect()
         }
+        # |test| = 5 is under the brute crossover: the default entry
+        # runs the exact nested-loop filter
         brute = {
             r["vec_id"]
             for r in CT.semantic_decontaminate(
-                train, test, threshold=0.95, mode="brute"
+                train, test, threshold=0.95
             ).collect()
         }
         assert banded == brute == set(range(5, 30))
@@ -518,7 +523,7 @@ class TestContaminationDegenerateVectors:
         brute = {
             r["vec_id"]
             for r in CT.semantic_decontaminate(
-                train, test, threshold=0.95, mode="brute"
+                train, test, threshold=0.95
             ).collect()
         }
         banded = {

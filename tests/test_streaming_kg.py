@@ -92,93 +92,64 @@ def test_restarted_stream_is_idempotent(spark, tmp_path):
     assertDataFrameEqual(_canon(read_kg(spark, pg_path)), _canon(expected))
 
 
-def _bucket_files(pg_path):
-    """{bucket_dir: {filename: size}} — the store's per-bucket layout."""
+def _files(root):
+    """{relative path: bytes} of every data file under ``root``."""
     import os
 
     out = {}
-    for name in os.listdir(pg_path):
-        full = os.path.join(pg_path, name)
-        if name.startswith("bucket=") and os.path.isdir(full):
-            out[name] = {
-                f: os.path.getsize(os.path.join(full, f))
-                for f in os.listdir(full)
-                if not f.startswith(".")
-            }
+    for d, _, names in os.walk(root):
+        for f in names:
+            if not f.startswith("."):
+                full = os.path.join(d, f)
+                out[os.path.relpath(full, root)] = os.path.getsize(full)
     return out
 
 
-def test_delta_merge_rewrites_only_touched_buckets(spark, tmp_path):
-    """The scale contract of the bucketed store: merging a tiny delta
-    must rewrite only the bucket partitions the delta's ids hash into —
-    per-batch write bytes track the DELTA, not the accumulated store —
-    while the merged content still equals a full batch rebuild."""
-    from knetminer_etl_spark.streaming.kg import merge_triples_batch
-
-    customer = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    mapper = _customer_mapper()
-    pg_path = str(tmp_path / "pg.parquet")
-
-    first = customer.filter("c_custkey != 1")
-    delta = customer.filter("c_custkey = 1")  # a handful of element ids
-    merge_triples_batch(spark, mapper.to_triples(first), pg_path, n_buckets=16, mode="inplace")
-    before = _bucket_files(pg_path)
-    assert len(before) > 8  # the big batch populated most buckets
-
-    merge_triples_batch(spark, mapper.to_triples(delta), pg_path, n_buckets=16, mode="inplace")
-    after = _bucket_files(pg_path)
-    changed = [b for b in before if after.get(b) != before[b]]
-    # one customer row maps to a handful of ids → a handful of buckets;
-    # everything else must be byte-identical (same files, same sizes)
-    assert 0 < len(changed) <= 6
-    assert len(changed) < len(before) // 2
-
-    expected = triples_to_pg(mapper.to_triples(customer))
-    assertDataFrameEqual(_canon(read_kg(spark, pg_path)), _canon(expected))
-
-    # replayed delta (crash-recovery / duplicate delivery at the merge
-    # level): idempotent — rewrites its buckets with identical content
-    merge_triples_batch(spark, mapper.to_triples(delta), pg_path, n_buckets=16, mode="inplace")
-    assertDataFrameEqual(_canon(read_kg(spark, pg_path)), _canon(expected))
-
-
 def test_corrupt_store_raises_instead_of_resetting(spark, tmp_path):
-    """A real read failure must surface, not be silently treated as
-    'first batch' (which would reset the accumulated store to the
-    current delta); the failed merge leaves the store untouched."""
+    """A corrupt base must surface as an error from both compaction and
+    a compacting merge, never be silently treated as an empty store:
+    the failed fold leaves the base and the delta log untouched."""
     import os
 
-    from knetminer_etl_spark.streaming.kg import merge_triples_batch
+    from knetminer_etl_spark.streaming.kg import compact_kg, merge_triples_batch
 
     customer = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     mapper = _customer_mapper()
-    pg_path = str(tmp_path / "pg.parquet")
+    pg_path = str(tmp_path / "pg")
+    keep_log = dict(compact_threshold=10.0, max_delta_batches=100)
 
+    # epoch 0 promotes itself to the base; epoch 1 stays in the log
     merge_triples_batch(
-        spark,
-        mapper.to_triples(customer.filter("c_custkey % 2 = 0")),
-        pg_path,
-        n_buckets=4,
-        mode="inplace",
+        spark, mapper.to_triples(customer.filter("c_custkey % 3 = 0")),
+        pg_path, n_buckets=4, epoch_id=0,
     )
-    # corrupt every bucket partition so whichever buckets the next
-    # delta touches, its store read hits the corruption
-    for bucket, files in _bucket_files(pg_path).items():
-        for f in files:
-            with open(os.path.join(pg_path, bucket, f), "w") as fh:
-                fh.write("this is not parquet")
-    before = _bucket_files(pg_path)
+    merge_triples_batch(
+        spark, mapper.to_triples(customer.filter("c_custkey % 3 = 1")),
+        pg_path, n_buckets=4, epoch_id=1, **keep_log,
+    )
+    base, delta = f"{pg_path}/base", f"{pg_path}/delta"
+    assert _files(base) and _files(delta)
+    for rel in _files(base):
+        with open(os.path.join(base, rel), "w") as fh:
+            fh.write("this is not parquet")
+    base_before, delta_before = _files(base), _files(delta)
+
+    with pytest.raises(Exception):
+        compact_kg(spark, pg_path, n_buckets=4)
+    assert _files(base) == base_before
+    assert _files(delta) == delta_before
+
+    # a merge whose policy compacts hits the same corrupt base: its own
+    # epoch is appended, the earlier log entries and the base stay put
     with pytest.raises(Exception):
         merge_triples_batch(
-            spark,
-            mapper.to_triples(customer.filter("c_custkey % 2 = 1")),
-            pg_path,
-            n_buckets=4,
-            mode="inplace",
+            spark, mapper.to_triples(customer.filter("c_custkey % 3 = 2")),
+            pg_path, n_buckets=4, epoch_id=2, max_delta_batches=1,
         )
-    # merge materializes (localCheckpoint) before writing, so the
-    # failure happened before any partition was replaced
-    assert _bucket_files(pg_path) == before
+    assert _files(base) == base_before
+    after = _files(delta)
+    assert {k: after.get(k) for k in delta_before} == delta_before
+    assert any(k.startswith("batch_id=2") for k in after)
 
 
 def _tree_bytes(root, since=None):
@@ -193,10 +164,10 @@ def _tree_bytes(root, since=None):
 
 
 class TestAppendModeDeltaLog:
-    """mode='append' (the default): per-epoch write bytes are O(delta)
-    for ANY id distribution — the guarantee hash-bucketed in-place
-    merging cannot give (a 150-id uniform delta touches ~59 of 64
-    buckets; measured 81% of the store rewritten — SCALE.md)."""
+    """Per-epoch write bytes are O(delta) for ANY id distribution — the
+    guarantee hash-bucketed in-place merging cannot give (a 150-id
+    uniform delta touches ~59 of 64 buckets; measured 81% of the store
+    rewritten — SCALE.md)."""
 
     def test_epoch_writes_are_delta_sized(self, spark, tmp_path):
         import time

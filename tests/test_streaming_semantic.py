@@ -78,10 +78,18 @@ def test_stream_pairs_equal_full_banded_run(spark, paths):
         r["id_b"]
         for r in SD.read_semantic_pairs(spark, paths["pairs"]).collect()
     }
-    full = semantic_dedup(
-        paths["full"], threshold=0.95, centroids=paths["cents"], direct_max=0
-    )
-    full_dropped = {r["vec_id"] for r in full.collect() if not r["keep"]}
+    import unittest.mock as mock
+
+    from knetminer_etl_spark.operators import dedup as DD
+
+    with mock.patch.object(DD, "SEMANTIC_DIRECT_MAX", 0):
+        full_dropped = {
+            r["vec_id"]
+            for r in semantic_dedup(
+                paths["full"], threshold=0.95, centroids=paths["cents"]
+            ).collect()
+            if not r["keep"]
+        }
     assert streamed_dropped == full_dropped
     assert full_dropped  # the planted twins produced drops
     # cross-boundary twin found: 102 (batch 2) pairs with 3 (batch 1)

@@ -336,12 +336,13 @@ class TestContamination:
             for r in CT.decontaminate_auto(train, test, n=4).collect()
         )
         # forced tiny threshold -> bloom path; survivors identical
-        auto_bloom = sorted(
-            r["doc_id"]
-            for r in CT.decontaminate_auto(
-                train, test, n=4, dispatch_grams=0
-            ).collect()
-        )
+        import unittest.mock as mock
+
+        with mock.patch.object(CT, "BLOOM_DISPATCH_GRAMS", 0):
+            auto_bloom = sorted(
+                r["doc_id"]
+                for r in CT.decontaminate_auto(train, test, n=4).collect()
+            )
         assert auto_exact == exact and auto_bloom == exact
         assert 300 not in exact
 
@@ -434,10 +435,12 @@ class TestContamination:
         test = spark.createDataFrame(
             test_rows, "vec_id long, embedding array<double>"
         )
+        # |test| = 4 is under the brute crossover: the default entry
+        # runs the exact nested-loop filter
         brute = sorted(
             r["vec_id"]
             for r in CT.semantic_decontaminate(
-                train, test, threshold=0.95, mode="brute"
+                train, test, threshold=0.95
             ).collect()
         )
         banded = sorted(
@@ -449,30 +452,15 @@ class TestContamination:
         assert banded == brute
         assert len(brute) < 30  # at least one tight leak was dropped
 
-        # the auto probe: |test|=4 > 1·1 forces the banded delegate when
-        # the band shape is shrunk to one plane/band, and stays brute at
-        # the defaults (4 ≤ 12·48) — both must emit the same survivors
-        auto_banded = sorted(
-            r["vec_id"]
-            for r in CT.semantic_decontaminate(
-                train, test, threshold=0.95, mode="auto",
-                n_planes=1, n_bands=1,
-            ).collect()
-        )
-        auto_brute = sorted(
-            r["vec_id"]
-            for r in CT.semantic_decontaminate(
-                train, test, threshold=0.95, mode="auto"
-            ).collect()
-        )
-        assert auto_brute == brute
         # one band of one plane has real miss probability at mid-tight
         # leaks, so only subset containment is guaranteed there
-        assert set(brute) <= set(auto_banded)
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            CT.semantic_decontaminate(train, test, mode="bogus")
+        one_band = sorted(
+            r["vec_id"]
+            for r in CT.semantic_decontaminate_banded(
+                train, test, threshold=0.95, n_planes=1, n_bands=1,
+            ).collect()
+        )
+        assert set(brute) <= set(one_band)
 
 
 class TestChunkDocuments:

@@ -9,7 +9,8 @@ with METADATA (PEP 566), WHEEL, entry_points.txt and a RECORD manifest
 of (path, sha256=urlsafe-b64-digest, size). This builds exactly that
 from pyproject.toml, byte-for-byte installable by pip.
 
-Usage: python tools/build_wheel.py  →  dist/<name>-<ver>-py3-none-any.whl
+Usage: python tools/build_wheel.py [OUT_DIR]
+       →  OUT_DIR/<name>-<ver>-py3-none-any.whl (OUT_DIR defaults to dist/)
 
 Validate (no network needed):
     pip install --no-deps --target /tmp/whl-smoke dist/*.whl
@@ -62,14 +63,14 @@ def _entry_points(proj: dict) -> str:
     return f"[console_scripts]\n{body}\n"
 
 
-def build() -> str:
+def build(out_dir: str | None = None) -> str:
     with open(os.path.join(ROOT, "pyproject.toml"), "rb") as fh:
         proj = tomllib.load(fh)["project"]
     dist_name = proj["name"].replace("-", "_")
     version = proj["version"]
     tag = "py3-none-any"
     dist_info = f"{dist_name}-{version}.dist-info"
-    out_dir = os.path.join(ROOT, "dist")
+    out_dir = out_dir or os.path.join(ROOT, "dist")
     os.makedirs(out_dir, exist_ok=True)
     out_path = os.path.join(out_dir, f"{dist_name}-{version}-{tag}.whl")
 
@@ -125,6 +126,6 @@ def build() -> str:
 
 
 if __name__ == "__main__":
-    path = build()
+    path = build(sys.argv[1] if len(sys.argv) > 1 else None)
     print(path)
     sys.exit(0)
