@@ -2,10 +2,14 @@
 
 Two caches outlive a single call, both keyed per Spark application:
 table handles for static datasets (runtime/catalog) and small
-deterministic trained models (runtime/modelcache). Neither holds a
-plan-choice input: operators measure what their plan choices need
-(counts, clone statistics, split counts, size estimates) on every call,
-so a file rewritten in place can never leave a stale verdict behind.
+deterministic trained models — quantizer codebooks, k-means centroids —
+(runtime/modelcache). Neither holds a plan-choice input or a filter
+over data the query also scans: operators measure what their plan
+choices need (counts, clone statistics, split counts, size estimates)
+and build their runtime filters on every call, so a file rewritten in
+place can never leave a stale verdict behind. A cached MODEL does
+outlive such a rewrite: ``catalog.invalidate`` drops table handles
+only, and ``modelcache.clear`` is the model-side reset.
 
 An evicted entry is re-resolved or retrained on the next use —
 latency, never different output — so unbounded growth is the only

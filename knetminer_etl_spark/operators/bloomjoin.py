@@ -29,6 +29,7 @@ a north-star scale extension.
 
 from __future__ import annotations
 
+import json
 from typing import NamedTuple
 
 import numpy as np
@@ -112,10 +113,9 @@ _BIT_MASKS = [1 << b for b in range(63)] + [-(1 << 63)]
 
 
 #: word-table size past which the probe stops inlining a literal array
-#: expression: a 2^26-bit table is 1M BIGINT words ≈ 25 MB of SQL text —
-#: re-parsed by the JVM analyzer on every Dataset method and carried in
-#: every task's serialized plan (the "parses in microseconds" property
-#: measured for the 1024-word table does NOT extrapolate). Above this
+#: expression: a 2^26-bit table is 1M BIGINT words ≈ 20 MB of JSON text —
+#: parsed and folded on the driver for every plan and carried in every
+#: task's serialized plan (see :func:`_long_array`). Above this
 #: the probe switches to an Arrow-batched numpy bit test whose table
 #: ships once per executor with the (auto-broadcast) pickled command.
 LITERAL_WORDS_MAX = 1 << 16
@@ -165,19 +165,8 @@ def might_contain(
     was inserted, whichever probe runs."""
     if len(words) > LITERAL_WORDS_MAX:
         return _might_contain_arrow(key, words, n_bits, k, seed, hash)
-    # single expr() strings, not F.lit(list): pyspark expands a list
-    # literal into one Py4J literal call PER ELEMENT — ~0.6 s of pure
-    # driver round-trips for the 1024-word table on every invocation
-    # (measured) — while one SQL string parses JVM-side in microseconds
-    # and constant-folds to the same foldable array
-    lut = F.expr(
-        "array(" + ",".join(f"CAST('{int(w)}' AS BIGINT)" for w in words) + ")"
-    )
-    masks = F.expr(
-        "array("
-        + ",".join(f"CAST('{int(m)}' AS BIGINT)" for m in _BIT_MASKS)
-        + ")"
-    )
+    lut = _long_array(words)
+    masks = _long_array(_BIT_MASKS)
     cond: Column | None = None
     for p in _positions(key, n_bits, k, seed, hash):
         word = F.element_at(lut, F.shiftright(p, 6).cast("int") + 1)
@@ -185,6 +174,22 @@ def might_contain(
         test = word.bitwiseAND(mask) != 0
         cond = test if cond is None else (cond & test)
     return cond if cond is not None else F.lit(True)
+
+
+def _long_array(values) -> Column:
+    """A foldable ``array<bigint>`` constant: ONE string literal parsed
+    by ``from_json``, which constant folding evaluates once per plan.
+    Not ``F.lit(list)``: pyspark expands a list literal into one Py4J
+    call PER ELEMENT (~0.6 s of driver round-trips for a 1024-word
+    table, measured). Not an ``array(...)`` SQL string either: its
+    one-node-per-word tree is re-analyzed by every Dataset method on
+    the probed frame — building ``doc_decontamination_bloom`` at sf0.1
+    (4,096 words, 4 probes) took 2.3-3.2 s with ``CAST`` elements,
+    1.4-1.9 s with ``L`` literals and 0.95-1.2 s with this form, at
+    the same row count and action time."""
+    return F.from_json(
+        F.lit(json.dumps([int(v) for v in values])), "array<bigint>"
+    )
 
 
 # -- SQL twins (DuckDB) ------------------------------------------------------

@@ -150,9 +150,9 @@ def decontaminate_auto(
       train gram stream; the bloom prunes it map-side first.
 
     The probe counts the eval side's distinct grams — the small
-    relation by contract (the count rides one bounded job; the gram
-    relation is pinned and BOTH branches consume it, so the probe's
-    materialization is never thrown away).
+    relation by contract (the count rides the job that pins the gram
+    relation, :func:`_pin_eval_bloom`; BOTH branches consume the pin,
+    so the probe's materialization is never thrown away).
 
     The bloom branch sizes its bit table from the measured gram count
     (~10 bits/gram ≈ 1% fpp, next power of two, capped at
@@ -162,21 +162,13 @@ def decontaminate_auto(
     the exact verification join, but paying probe overhead PLUS the
     full shuffle the dispatch exists to avoid.
     """
-    eval_grams = distinct_grams(test, text_col, n).localCheckpoint(eager=True)
-    n_grams = eval_grams.count()
-    if n_grams <= BLOOM_DISPATCH_GRAMS:
+    eval_grams, spec = _pin_eval_bloom(
+        distinct_grams(test, text_col, n), exact_max=BLOOM_DISPATCH_GRAMS
+    )
+    if spec is None:
         return decontaminate_against(
             train, eval_grams, id_col, text_col, n, max_hits
         )
-    from .bloomjoin import build_spec
-
-    spec = build_spec(
-        eval_grams,
-        "gram",
-        n_bits=sized_bloom_bits(n_grams),
-        seed="decon",
-        hash="xx",
-    )
     return bloom_decontaminate_against(
         train, eval_grams, spec, id_col, text_col, n, max_hits
     )
@@ -188,12 +180,43 @@ def decontaminate_auto(
 BLOOM_MAX_BITS = 1 << 28
 
 
-def sized_bloom_bits(n_keys: int, bits_per_key: int = 10) -> int:
-    """Bit-table size for ``n_keys``: next power of two ≥
-    ``bits_per_key × n_keys`` (~1% fpp at 10 bits/key with k=4),
-    floored at the 65k default and capped at :data:`BLOOM_MAX_BITS`."""
-    want = max(1 << 16, bits_per_key * max(n_keys, 1))
+def sized_bloom_bits(n_keys: int) -> int:
+    """Bit-table size for ``n_keys``: next power of two ≥ 10 bits per
+    key (~1% fpp with k=4), floored at 65,536 bits and capped at
+    :data:`BLOOM_MAX_BITS`."""
+    want = max(1 << 16, 10 * max(n_keys, 1))
     return min(BLOOM_MAX_BITS, 1 << (want - 1).bit_length())
+
+
+def _pin_eval_bloom(
+    grams: DataFrame,
+    exact_max: int = -1,
+    n_bits: int | None = None,
+    k: int = 4,
+):
+    """Pin an evaluation ``gram`` relation and build the bloom filter
+    the prune probes: ``(pinned grams, BloomSpec)``. The pin feeds both
+    the filter build (an action) and the verification join — unpinned,
+    the test-side normalize/tokenize/shingle/distinct pipeline would
+    execute twice. The distinct-gram count rides the pin job
+    (``pin_observe``) and sizes the table (:func:`sized_bloom_bits`)
+    unless ``n_bits`` is given. The spec is ``None`` when the count is
+    ≤ ``exact_max``: the caller's exact-join regime, which builds no
+    filter. Probes are k double-hashed xxhash64 (``hash="xx"``): the
+    verification join establishes correctness, so they need not be
+    the oracle-reproducible md5 form."""
+    from .bloomjoin import build_spec
+    from .util import pin_observe
+
+    pinned, m = pin_observe(grams, F.count(F.lit(1)).alias("n"))
+    n_grams = int(m["n"])
+    if n_grams <= exact_max:
+        return pinned, None
+    spec = build_spec(
+        pinned, "gram", n_bits or sized_bloom_bits(n_grams), k,
+        seed="decon", hash="xx",
+    )
+    return pinned, spec
 
 
 def decontaminate_bloom(
@@ -203,9 +226,6 @@ def decontaminate_bloom(
     text_col: str = "text",
     n: int = 8,
     max_hits: int = 0,
-    n_bits: int = 1 << 16,
-    k: int = 4,
-    hash: str = "xx",
 ) -> DataFrame:
     """:func:`decontaminate` with a bloom runtime filter on the gram
     join — the identical survivor set (the filter never drops a gram
@@ -215,7 +235,9 @@ def decontaminate_bloom(
 
     * build: one distributed ``bit_or`` aggregate over the evaluation
       side's distinct grams — the shuffle carries the ``n_bits/64``-word
-      bit table (KBs), never the gram strings;
+      bit table, never the gram strings. ``n_bits`` is
+      :func:`sized_bloom_bits` of the distinct-gram count, which rides
+      the job that pins the gram relation (:func:`_pin_eval_bloom`);
     * prune: a narrow map over the train gram stream (k double-hashed
       xxhash64 probes — native JVM hashes, not md5 string digests: the
       filter's correctness is established by the verification join, so
@@ -228,16 +250,8 @@ def decontaminate_bloom(
       :func:`ngram_contamination`'s plan, so the flagged set is
       bit-identical to the unpruned path (the registry entry runs
       against the EXACT-path oracle at every scale factor).
-
-    Size ``n_bits`` for ~10 bits per expected test gram (~1% fpp).
     """
-    from .bloomjoin import build_spec
-
-    # pin the eval gram relation: it feeds BOTH the filter build (an
-    # action) and the verification join — unpinned, the test-side
-    # normalize/tokenize/shingle/distinct pipeline would execute twice
-    eval_grams = distinct_grams(test, text_col, n).localCheckpoint(eager=True)
-    spec = build_spec(eval_grams, "gram", n_bits, k, seed="decon", hash=hash)
+    eval_grams, spec = _pin_eval_bloom(distinct_grams(test, text_col, n))
     return bloom_decontaminate_against(
         train, eval_grams, spec, id_col, text_col, n, max_hits
     )
@@ -484,9 +498,6 @@ def semantic_decontaminate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    n_planes: int | str = "auto",
-    n_bands: int | None = None,
-    seed: int = 0x5EED,
 ) -> DataFrame:
     """Drop training vectors whose nearest evaluation vector is at
     cosine ≥ ``threshold`` — the default entry point; both physical
@@ -503,18 +514,17 @@ def semantic_decontaminate(
     stays under about one band matrix's worth of work. Crossover pinned
     at ``|test| ≤ 576`` (one default 12×48 band matrix's worth; measured
     at 10× data: brute 8.64×, banded 1.71× — SCALE.md). The same probe
-    count sizes the banded shape when ``n_planes="auto"`` (default, see
-    :func:`_auto_decon_shape`) — one bounded job, two decisions.
+    count sizes the banded shape (:func:`_auto_decon_shape`) — one
+    bounded job, two decisions.
     """
     # bounded probe: the eval relation is the broadcast side by contract
     # (benchmarks, not corpora) — counting it is cheap
     n_test = test_vecs.count()
     if n_test > 576:
-        if n_planes == "auto":
-            n_planes, n_bands = _auto_decon_shape(n_test, threshold)
+        n_planes, n_bands = _auto_decon_shape(n_test, threshold)
         return semantic_decontaminate_banded(
             train_vecs, test_vecs, id_col, vec_col, threshold,
-            n_planes, n_bands, seed,
+            n_planes, n_bands,
         )
     flagged = semantic_contamination(
         train_vecs, test_vecs, id_col, vec_col, threshold

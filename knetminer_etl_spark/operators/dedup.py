@@ -133,7 +133,7 @@ def candidate_pairs_from_buckets(
     relation → a 4,096-task repartition of pure scheduler overhead).
 
     ``max_bucket_size`` is the Σ|bucket|² backstop (the band-bucket
-    analog of ``ngram_jaccard_pairs``'s ``max_shingle_freq``): buckets
+    analog of ``ngram_jaccard_pairs``' stop-shingle cap): buckets
     larger than the cap are dropped BEFORE pair expansion, bounding the
     candidate bill at cap²/2 per bucket whatever adversarial boilerplate
     hashes into one bucket. Recall trade-off: a true pair is lost only
@@ -484,7 +484,7 @@ def drop_exact_dups(
 PAIRS_DIRECT_MAX = 5_000
 
 
-def _default_pairs_fn(df, id_col, text_col, k, threshold, n_docs=None):
+def _default_pairs(df, id_col, text_col, k, threshold, n_docs=None):
     """Size-adaptive candidate generation for the clustering operators:
 
     * corpora of ≤ :data:`PAIRS_DIRECT_MAX` docs → exact shingle-bucket
@@ -502,10 +502,9 @@ def _default_pairs_fn(df, id_col, text_col, k, threshold, n_docs=None):
     ``dedup_keep_best`` output CAN change as a corpus crosses
     :data:`PAIRS_DIRECT_MAX` (it has measured hash-equal at every test
     scale, which is the expected outcome at these odds, not a
-    guarantee). Pass an explicit ``pairs_fn`` to pin one path. The
-    switch probe is an early-exit limit+count — it does not scan past
-    ``PAIRS_DIRECT_MAX + 1`` rows, but it IS an extra job on the
-    unpinned input at call time.
+    guarantee). The switch probe is an early-exit limit+count — it does
+    not scan past ``PAIRS_DIRECT_MAX + 1`` rows, but it IS an extra job
+    on the unpinned input at call time.
     """
     # ``n_docs``: a caller that already knows the corpus size (e.g. a
     # count riding the previous stage's write as an observe metric)
@@ -513,11 +512,8 @@ def _default_pairs_fn(df, id_col, text_col, k, threshold, n_docs=None):
     if n_docs is None:
         n_docs = df.limit(PAIRS_DIRECT_MAX + 1).count()
     if n_docs <= PAIRS_DIRECT_MAX:
-        return lambda d: ngram_jaccard_pairs(d, id_col, text_col, k, threshold)
-    return lambda d: minhash_lsh_pairs(
-        d, id_col, text_col, num_perm="auto", k=k,
-        threshold=threshold, verify=True,
-    )
+        return ngram_jaccard_pairs(df, id_col, text_col, k, threshold)
+    return minhash_lsh_pairs(df, id_col, text_col, k, threshold)
 
 
 def near_dup_clusters(
@@ -526,17 +522,12 @@ def near_dup_clusters(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    pairs_fn=None,
 ) -> DataFrame:
     """(keep_id, cluster_size): the end-to-end corpus-dedup composition —
     near-dup pairs → connected components → one canonical representative
-    (the min id) per cluster. ``pairs_fn(df) -> (id_a, id_b, ...)``
-    overrides candidate generation; a custom generator SHOULD emit
-    distinct id-ordered (id_a < id_b), loop-free pairs — the component
-    solver canonicalizes and tolerates duplicates/reversals, but they
-    inflate the small-graph dispatch count and the driver collect volume
-    (the ``edges_canonical`` plan promise these call sites make). The
-    default is banded MinHash-LSH with true-Jaccard verification at the
+    (the min id) per cluster. Pairs come from :func:`_default_pairs`:
+    exact shingle-bucket Jaccard up to :data:`PAIRS_DIRECT_MAX` docs,
+    past it banded MinHash-LSH with true-Jaccard verification at the
     auto band shape (:func:`_auto_minhash_shape`: P(miss | j ≥
     threshold) ≤ 1e-6 per pair past the 64k-distinct-content knee; at
     floor corpus sizes (n ≤ 64k) the capped r=2 floor shape bounds it
@@ -548,8 +539,7 @@ def near_dup_clusters(
     """
     from .graph import connected_components  # local: avoid cycle at import
 
-    gen = pairs_fn or _default_pairs_fn(df, id_col, text_col, k, threshold)
-    pairs = gen(df)
+    pairs = _default_pairs(df, id_col, text_col, k, threshold)
     comp = connected_components(
         pairs, "id_a", "id_b", nodes=df, node_id=id_col,
         edges_canonical=True,
@@ -568,7 +558,6 @@ def dedup_keep_best(
     score: Column | None = None,
     k: int = 3,
     threshold: float = 0.5,
-    pairs_fn=None,
 ) -> DataFrame:
     """Quality-aware survivor per near-dup cluster: ``(id, cluster_size,
     score)`` for the highest-``score`` member of each cluster (ties break
@@ -585,17 +574,14 @@ def dedup_keep_best(
     survivor selection is ONE extra shuffle on the component key — both
     window functions (rank, cluster size) share its partitioning, and
     per-reducer state is bounded by the largest cluster, the same bound
-    the clustering itself must satisfy. A custom ``pairs_fn`` SHOULD
-    emit distinct id-ordered loop-free pairs (see
-    :func:`near_dup_clusters` — duplicates stay correct but inflate the
-    dispatch count and driver collect volume).
+    the clustering itself must satisfy.
     """
     from .graph import connected_components  # local: avoid cycle at import
     from .text import token_count
 
-    gen = pairs_fn or _default_pairs_fn(df, id_col, text_col, k, threshold)
+    pairs = _default_pairs(df, id_col, text_col, k, threshold)
     comp = connected_components(
-        gen(df), "id_a", "id_b", nodes=df, node_id=id_col,
+        pairs, "id_a", "id_b", nodes=df, node_id=id_col,
         edges_canonical=True,
     ).withColumnRenamed("id", id_col)
     score_col = score if score is not None else token_count(F.col(text_col))
@@ -622,7 +608,6 @@ def drop_near_dups(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    pairs_fn=None,
     n_docs: int | None = None,
     _stats: dict | None = None,
 ) -> DataFrame:
@@ -644,17 +629,13 @@ def drop_near_dups(
     ``rounds == 0`` to learn the drop relation is DRIVER-LOCAL data,
     i.e. this frame is a cheap broadcast anti-join over ``df`` with no
     expensive upstream left in its plan (plan-shape information only;
-    the rows are identical either way). A custom ``pairs_fn`` SHOULD
-    emit distinct id-ordered loop-free pairs (see
-    :func:`near_dup_clusters`).
+    the rows are identical either way).
     """
     from .graph import connected_components  # local: avoid cycle at import
 
-    gen = pairs_fn or _default_pairs_fn(
-        df, id_col, text_col, k, threshold, n_docs=n_docs
-    )
+    pairs = _default_pairs(df, id_col, text_col, k, threshold, n_docs=n_docs)
     comp = connected_components(
-        gen(df), "id_a", "id_b", edges_canonical=True, _stats=_stats
+        pairs, "id_a", "id_b", edges_canonical=True, _stats=_stats
     )
     drop = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
@@ -673,7 +654,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
-    max_shingle_freq: int | None = 1000,
 ) -> DataFrame:
     """Document pairs with word-k-shingle Jaccard ≥ threshold.
 
@@ -684,12 +664,11 @@ def ngram_jaccard_pairs(
     self-equi-join, which scans and shingles the corpus twice and doubles
     the shuffle volume.
 
-    ``max_shingle_freq`` caps the per-shingle group size — at 100 TB the
-    stopword-shingle skew otherwise makes a few groups quadratic; capping
-    only loses pairs whose *every* common shingle is ubiquitous, which at
-    any real threshold means boilerplate, not content. Default ON (1000):
-    the uncapped exact variant (``max_shingle_freq=None``) is a DEBUG
-    tool, not a corpus-scale path — even with the cap, Σ|bucket|² grows
+    Shingles held by more than 1,000 documents are dropped before pair
+    expansion — at 100 TB the stopword-shingle skew otherwise makes a
+    few groups quadratic; the cap only loses pairs whose *every* common
+    shingle is ubiquitous, which at any real threshold means
+    boilerplate, not content. Even with the cap, Σ|bucket|² grows
     quadratically when shingles are corpus-wide templates; use
     :func:`minhash_lsh_pairs` (the :func:`near_dup_clusters` default) for
     candidate-linear behavior. Output: ``(id_a, id_b, jaccard)`` with
@@ -707,8 +686,7 @@ def ngram_jaccard_pairs(
     groups = exploded.groupBy("_s").agg(
         F.array_sort(F.collect_list("_d")).alias("_ds")
     )
-    if max_shingle_freq is not None:
-        groups = groups.filter(F.size("_ds") <= max_shingle_freq)
+    groups = groups.filter(F.size("_ds") <= 1000)
     groups = _observe_buckets(groups, F.size("_ds"), "ngram_jaccard")
     # all (i<j) combinations within a shingle group, id-ordered via the sort
     combos = F.flatten(
@@ -1073,41 +1051,39 @@ def _auto_minhash_shape(
     return r * b, b
 
 
+#: per-band-bucket cap of the MinHash and embedding LSH engines: band
+#: buckets holding more ids are dropped before pair expansion (see
+#: :func:`candidate_pairs_from_buckets`)
+LSH_BUCKET_CAP = 4096
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_perm: int | str = "auto",
-    bands: int | None = None,
     k: int = 3,
     threshold: float = 0.7,
-    verify: bool = True,
-    max_bucket_size: int | None = 4096,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash LSH.
 
     Candidate pairs share ≥1 band: ids are grouped per (band, bucket) and
     pair combinations emitted directly (see
     :func:`candidate_pairs_from_buckets`) — the signature pipeline runs
-    once, not once per join side. With ``verify`` the candidates are
-    checked against true shingle Jaccard (joining the shingle sets back
-    in) so the output has no LSH false positives; without it the
-    signature-estimated Jaccard is reported.
+    once, not once per join side. The candidates are checked against
+    true shingle Jaccard (joining the shingle sets back in), so the
+    output has no LSH false positives.
 
-    **Auto band shape** (``num_perm="auto"``, the default): rows-per-
-    band and band count are sized from the measured distinct-content
-    count via :func:`_auto_minhash_shape` — the count rides the collapse
-    probe below (zero extra jobs). A FIXED (r, b) is corpus-quadratic in
-    false positives (per-pair collision b·j^r is constant
+    **Band shape**: rows-per-band and band count are sized from the
+    measured distinct-content count via :func:`_auto_minhash_shape` —
+    the count rides the collapse probe below (zero extra jobs). A
+    FIXED (r, b) is corpus-quadratic in false positives (per-pair collision b·j^r is constant
     while sub-threshold pairs grow ∝ n²; measured: 21.5M candidates for
     25,600 true pairs at the 100× tier under static r=2·b=32), so r
     steps up one per 4× of corpus past 64k distinct contents and b
     restores P(miss | j ≥ threshold) ≤ 1e-6 — except at the r=2 floor
     (n ≤ 64k), where the band-count cap trades the bound to ≤ 1e-4 for
     thresholds below ~0.6 (see :func:`_auto_minhash_shape`; at j ≥ 0.6
-    the uncapped solution already meets 1e-6). Passing explicit ints pins
-    a shape (``bands=None`` with an int ``num_perm`` keeps the
-    historical ``num_perm // 4`` band split); the persistent-index
+    the uncapped solution already meets 1e-6). The persistent-index
     entry points (:func:`minhash_band_rows`,
     :func:`incremental_minhash_pairs`) stay explicitly-shaped — an
     index must band new batches exactly as it banded old ones.
@@ -1123,15 +1099,15 @@ def minhash_lsh_pairs(
     text — one hash scan, no extra shingle pass); members rejoin
     afterwards via :func:`expand_group_pairs`, inheriting the
     representative pair's verified Jaccard, and within-group pairs are
-    emitted directly with Jaccard 1.0. With ``max_bucket_size=None``
-    the output is EXACTLY equal to the uncollapsed banded path, pair
-    for pair — identical signatures make even the banding miss pattern
-    identical — while the clone families' candidate bill becomes output
-    (which any exact pair enumeration is lower-bounded by) instead of
-    Σ|bucket|² join work. With a cap the two paths differ BY DESIGN on
-    clone families: the collapsed plan emits them as output (they are
-    never candidates, so never capped), while the uncollapsed plan can
-    cap their mega-bucket away.
+    emitted directly with Jaccard 1.0. Below the bucket cap the output
+    is EXACTLY equal to the uncollapsed banded path, pair for pair —
+    identical signatures make even the banding miss pattern identical —
+    while the clone families' candidate bill becomes output (which any
+    exact pair enumeration is lower-bounded by) instead of Σ|bucket|²
+    join work. At the cap the two paths differ BY DESIGN on clone
+    families: the collapsed plan emits them as output (they are never
+    candidates, so never capped), while the uncollapsed plan can cap
+    their mega-bucket away.
 
     Clone-free corpora pay for none of this beyond the singleton probe:
     ONE aggregate job (:func:`content_groups` — count + per-group sizes
@@ -1139,8 +1115,8 @@ def minhash_lsh_pairs(
     straight to the direct banded plan (VERDICT r8 #1), as does a clone
     bill too small to pay for the collapse joins (:func:`collapse_pays`).
 
-    ``max_bucket_size`` (default ON at 4096) drops band buckets larger
-    than the cap before pair expansion — the Σ|bucket|² backstop
+    :data:`LSH_BUCKET_CAP` drops band buckets larger than the cap
+    before pair expansion — the Σ|bucket|² backstop
     against boilerplate corpora where one band value hashes a large
     fraction of DISTINCT contents (recall is lost only for pairs whose
     EVERY matching band is such a mega-bucket; clone-family pairs are
@@ -1149,10 +1125,6 @@ def minhash_lsh_pairs(
     (:data:`CANDIDATE_METRICS`), counted over representatives.
     Output: ``(id_a, id_b, jaccard)``, id_a < id_b.
     """
-    if isinstance(num_perm, int) and bands is None:
-        # explicit lane count without a band count: the historical
-        # r=4 default (num_perm=64 → 16 bands)
-        bands = max(1, num_perm // 4)
     # 128-bit raw-text key. Empty-normalized documents are excluded
     # exactly as the banded path excludes them (_with_shingles drops
     # them before signing), so the within-group emission can never
@@ -1165,15 +1137,13 @@ def minhash_lsh_pairs(
     groups, n_groups, n_members, f_max, f2_sum = content_groups(
         keyed, ["_g1", "_g2"]
     )
-    if num_perm == "auto":
-        # shaped from the DISTINCT-content count the collapse probe
-        # already measured (zero extra jobs): the banded relation is
-        # reps on the collapse route, and on the direct route clones
-        # band identically so distinct contents still drive the FP
-        # economics
-        num_perm, bands = _auto_minhash_shape(n_groups or 0, threshold)
+    # shaped from the DISTINCT-content count the collapse probe already
+    # measured (zero extra jobs): the banded relation is reps on the
+    # collapse route, and on the direct route clones band identically so
+    # distinct contents still drive the FP economics
+    num_perm, bands = _auto_minhash_shape(n_groups or 0, threshold)
     if not collapse_pays(
-        n_groups, n_members, f_max, f2_sum, bands, max_bucket_size
+        n_groups, n_members, f_max, f2_sum, bands, LSH_BUCKET_CAP
     ):
         # clone-free or sparse-clone corpus: the direct banded plan is
         # pair-for-pair identical (identical texts band identically and
@@ -1185,7 +1155,7 @@ def minhash_lsh_pairs(
         return observe_output(
             _minhash_lsh_pairs_direct(
                 df, id_col, text_col, num_perm, bands, k, threshold,
-                verify, max_bucket_size, n_docs=n_members or None,
+                n_docs=n_members or None,
             ),
             "minhash_lsh",
         )
@@ -1196,8 +1166,8 @@ def minhash_lsh_pairs(
         groups.select(F.col("_rid").alias(id_col)), on=id_col, how="left_semi"
     )
     rep_pairs = _minhash_lsh_pairs_direct(
-        rep_docs, id_col, text_col, num_perm, bands, k, threshold, verify,
-        max_bucket_size, n_docs=n_groups or None,
+        rep_docs, id_col, text_col, num_perm, bands, k, threshold,
+        n_docs=n_groups or None,
     )
     # map each rep id back to its group key, then expand to members
     # (output-linear; see expand_group_pairs)
@@ -1239,15 +1209,13 @@ def _minhash_lsh_pairs_direct(
     bands: int,
     k: int,
     threshold: float,
-    verify: bool,
-    max_bucket_size: int | None,
     n_docs: int | None = None,
 ) -> DataFrame:
     """The uncollapsed banded plan (band → bucket-pair → verify) —
     :func:`minhash_lsh_pairs`'s engine, run over representatives when
     content collapse is on.
 
-    On the measured-small verify path (n_docs ≤
+    On the measured-small path (n_docs ≤
     :data:`VERIFY_FULL_SHINGLE_MAX`) the hashed-shingle relation is
     pinned ONCE and feeds banding AND both verification join sides:
     unshared, the corpus was tokenized + shingled twice — once by the
@@ -1255,9 +1223,7 @@ def _minhash_lsh_pairs_direct(
     final action (measured 2.75 → 2.51 s best-of-4 for the sf0.1 bench
     minhash entry, with the staged base-hash lanes landing the same
     commit)."""
-    shared = (
-        verify and n_docs is not None and n_docs <= VERIFY_FULL_SHINGLE_MAX
-    )
+    shared = n_docs is not None and n_docs <= VERIFY_FULL_SHINGLE_MAX
     if shared:
         hh = _hashed_shingles(df, id_col, text_col, k).localCheckpoint(
             eager=True
@@ -1282,7 +1248,7 @@ def _minhash_lsh_pairs_direct(
         banded,
         ["band", "bucket"],
         num_partitions=nparts,
-        max_bucket_size=max_bucket_size,
+        max_bucket_size=LSH_BUCKET_CAP,
         metrics_label="minhash_lsh",
     )
 
@@ -1290,27 +1256,6 @@ def _minhash_lsh_pairs_direct(
         return verified_jaccard_pairs(
             cands, df, id_col, text_col, k, threshold, n_docs=n_docs,
             shingles=hh,
-        )
-
-    if not verify:
-        sigs = minhash_signatures(df, id_col, text_col, num_perm, k)
-        sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("signature").alias("sig_a"))
-        sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("signature").alias("sig_b"))
-        est = (
-            F.size(
-                F.filter(
-                    F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-                    lambda m: m,
-                )
-            )
-            / F.lit(num_perm)
-        )
-        return (
-            cands.join(sa, on="id_a")
-            .join(sb, on="id_b")
-            .withColumn("jaccard", F.round(est, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
         )
 
     return verified_jaccard_pairs(
@@ -1536,34 +1481,22 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    shingle_k: int = 1,
     hash_fn=None,
     nbits: int = 64,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs within Hamming distance ``max_hamming`` of the
-    ``nbits``-bit SimHash.
+    ``nbits``-bit word SimHash.
 
     Blocking: split the fingerprint into ``max_hamming+1`` equal bands;
     by pigeonhole any pair within distance d agrees exactly on ≥1
     band → candidates come from band equi-joins, verified with bit_count.
     The blocking is therefore EXACT (no false negatives), whatever the
-    hash — the pair set equals a brute-force Hamming scan — unless a
-    ``max_bucket_size`` backstop is passed for fingerprint-degenerate
-    corpora (see :func:`hamming_pairs`). Candidate-bill metrics ride
-    under the ``simhash`` label.
+    hash — the pair set equals a brute-force Hamming scan. Candidate-
+    bill metrics ride under the ``simhash`` label.
     """
-    fp = with_simhash64(
-        df, id_col, text_col, shingle_k, hash_fn=hash_fn, nbits=nbits
-    )
+    fp = with_simhash64(df, id_col, text_col, hash_fn=hash_fn, nbits=nbits)
     return hamming_pairs(
-        fp,
-        "doc_id",
-        "fp",
-        max_hamming,
-        nbits,
-        max_bucket_size=max_bucket_size,
-        metrics_label="simhash",
+        fp, "doc_id", "fp", max_hamming, nbits, metrics_label="simhash"
     )
 
 
@@ -1698,7 +1631,6 @@ def hamming_pairs(
     nbits: int = 64,
     max_bucket_size: int | None = None,
     metrics_label: str | None = None,
-    blocks: int | str | None = "auto",
 ) -> DataFrame:
     """All id pairs whose integer fingerprints differ in ≤ ``max_hamming``
     bits — the generic Hamming-blocking engine behind
@@ -1719,8 +1651,8 @@ def hamming_pairs(
     ``metrics_label`` attaches the candidate-bill probe
     (:data:`CANDIDATE_METRICS`).
 
-    ``blocks="auto"`` (default) picks ``g`` from the MEASURED distinct-
-    fingerprint count via :func:`_hamming_blocks_auto`: small corpora
+    ``g`` comes from the MEASURED distinct-fingerprint count via
+    :func:`_hamming_blocks_auto`: small corpora
     keep the classic g = max_hamming+1 single-block bands; once random
     occupancy of the 2^(nbits/g) buckets would dominate, g grows so the
     C(g,h) combination keys carry (g−h)·(nbits//g) bits — candidates
@@ -1748,14 +1680,7 @@ def hamming_pairs(
     groups, n_groups, n_members, f_max, f2_sum = content_groups(
         keyed, ["_hfp"]
     )
-    if blocks == "auto":
-        g_blocks = _hamming_blocks_auto(n_groups, max_hamming, nbits)
-    elif blocks is None:
-        # the classic static layout (hamming_band_rows' None contract):
-        # max_hamming+1 single-block bands
-        g_blocks = max_hamming + 1
-    else:
-        g_blocks = blocks
+    g_blocks = _hamming_blocks_auto(n_groups, max_hamming, nbits)
     from math import comb
 
     n_bands = comb(g_blocks, max_hamming)
@@ -2036,38 +1961,34 @@ def embedding_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    n_planes: int | str = "auto",
-    n_bands: int | None = None,
-    seed: int = 0x5EED,
-    max_bucket_size: int | None = 4096,
     center: bool = False,
 ) -> DataFrame:
     """Vector pairs with cosine ≥ threshold.
 
     Blocking: **OR-amplified** sign-LSH. Each vector gets ``n_bands``
-    independent buckets (one per band of ``n_planes`` hyperplanes);
+    independent buckets (one per band of ``n_planes`` hyperplanes,
+    drawn from the fixed seed of :func:`sign_lsh_band_buckets`);
     candidate pairs share ≥1 band bucket — the same banding shape as
     MinHash LSH. A pair at cosine c collides in one band with
     p(c)^n_planes where p(c) = 1 − acos(c)/π, so
 
         recall(c) = 1 − (1 − p(c)^n_planes)^n_bands
 
-    With the defaults (6 planes × 24 bands) recall(0.9) ≈ 1 − 5.7e-6;
+    At the floor shape (6 planes × 24 bands) recall(0.9) ≈ 1 − 5.7e-6;
     a single AND-only bucket of 8 planes (the naive scheme) would keep
     that pair with only p ≈ 0.28. Exact cosine verifies candidates
     JVM-side, so the output has no false positives; misses are bounded
     by the formula above. Bucket count per band is 2^n_planes, so a
     FIXED plane count is corpus-quadratic (in-bucket pairs grow
-    ∝ (n/2^planes)²) — ``n_planes="auto"`` (default) therefore sizes
-    the shape from a corpus count via :func:`_auto_lsh_shape`: planes
-    track log2(n), bands restore the per-pair miss bound at the
-    threshold (committed evidence: the 10x sweep's 118x wall with the
-    static 6×24 shape). The count is one narrow pre-job (the
-    ``n_clusters="auto"`` pattern of :func:`semantic_dedup`), or rides
-    the centering aggregate when ``center=True``; pass
-    explicit ints to pin a plan. ``max_bucket_size`` (default ON at
-    4096) stays as the hard Σ|bucket|² backstop when a corpus direction
-    cluster defeats the planes (see :func:`candidate_pairs_from_buckets`;
+    ∝ (n/2^planes)²) — the shape is therefore sized from a corpus count
+    via :func:`_auto_lsh_shape`: planes track log2(n), bands restore the
+    per-pair miss bound at the threshold (committed evidence: the 10x
+    sweep's 118x wall with the static 6×24 shape). The count is one
+    narrow pre-job (the ``n_clusters="auto"`` pattern of
+    :func:`semantic_dedup`), or rides the centering aggregate when
+    ``center=True``. :data:`LSH_BUCKET_CAP` stays as the hard
+    Σ|bucket|² backstop when a corpus direction cluster defeats the
+    planes (see :func:`candidate_pairs_from_buckets`;
     metrics under ``embedding_lsh``).
 
     ``center=True`` — the fix for DIRECTIONAL corpora (VERDICT r9 #2:
@@ -2100,12 +2021,9 @@ def embedding_dup_pairs(
             mu, e2, n_rows = stats
             resid2 = max(1e-3, e2 - sum(m * m for m in mu))
             t_band = max(0.5, 1.0 - 2.0 * (1.0 - threshold) / resid2)
-    if n_planes == "auto":
-        if n_rows is None:
-            n_rows = filtered.count()
-        n_planes, n_bands = _auto_lsh_shape(n_rows, t_band)
-    elif n_bands is None:
-        n_bands = 24
+    if n_rows is None:
+        n_rows = filtered.count()
+    n_planes, n_bands = _auto_lsh_shape(n_rows, t_band)
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     fanned = fan_out(filtered)
     if mu is not None:
@@ -2122,7 +2040,7 @@ def embedding_dup_pairs(
         F.col(id_col).alias("doc_id"),
         v.alias("_v"),
         _norm(v).alias("_nrm"),
-        sign_lsh_band_buckets(bucket_col, n_planes, n_bands, seed).alias("_bkts"),
+        sign_lsh_band_buckets(bucket_col, n_planes, n_bands).alias("_bkts"),
     )
     # posexplode_outer, NOT posexplode: plain posexplode infers a
     # size(_bkts)>0 filter that predicate pushdown moves below the
@@ -2134,7 +2052,7 @@ def embedding_dup_pairs(
     cands = candidate_pairs_from_buckets(
         banded,
         ["band", "bucket"],
-        max_bucket_size=max_bucket_size,
+        max_bucket_size=LSH_BUCKET_CAP,
         metrics_label="embedding_lsh",
     )
     # column pruning drops _bkts from the join sides — the UDF runs once
@@ -2168,11 +2086,7 @@ def semantic_dedup(
     vec_col: str = "embedding",
     n_clusters: int | str = 8,
     threshold: float = 0.95,
-    n_planes: int = 10,
-    n_bands: int = 32,
-    seed: int = 0x5EED,
     centroids: list[list[float]] | None = None,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication over an embedding column
     (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -2214,15 +2128,12 @@ def semantic_dedup(
 
     ``n_clusters="auto"`` scales the cluster count with the corpus
     (⌈√n⌉, floor 8) — the paper's k grows with N; the int form stays
-    for oracle-pinned runs. Pass ``centroids`` (driver-held list) to
-    skip the draw entirely — the frozen-model-state form the
-    incremental index (:func:`semantic_band_rows` /
-    :func:`incremental_semantic_pairs`) shares so batch and streaming
-    agree. ``n_docs`` (a count the caller already holds — memoized over
-    an immutable input, or observed on an upstream write) lets the
-    direct/banded dispatch skip its size probe; with ``centroids`` AND
-    ``n_docs`` supplied, a bounded corpus runs as ONE Spark action
-    (see :func:`_direct_semantic_keep`). Output: ``(id, cluster,
+    for oracle-pinned runs. The auto-k count doubles as the direct/banded
+    dispatch size, so that dispatch skips its own probe. Pass
+    ``centroids`` (driver-held list) to skip the draw entirely — the
+    frozen-model-state form the incremental index
+    (:func:`semantic_band_rows` / :func:`incremental_semantic_pairs`)
+    shares so batch and streaming agree. Output: ``(id, cluster,
     keep)``, one row per input.
     """
     import math
@@ -2231,10 +2142,11 @@ def semantic_dedup(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
     )
+    n_docs = None
     if centroids is None:
         if n_clusters == "auto":
             # the auto-k count doubles as the dispatch size — one job
-            n_docs = vecs.count() if n_docs is None else n_docs
+            n_docs = vecs.count()
             n_clusters = max(8, int(math.isqrt(n_docs)))
         cent_rows = (
             vecs.orderBy(F.md5(F.col("_id").cast("string")), "_id")
@@ -2246,9 +2158,6 @@ def semantic_dedup(
         _cosine_assign_staged(df, id_col, vec_col, centroids),
         id_col,
         threshold,
-        n_planes,
-        n_bands,
-        seed,
         n_vecs=n_docs,
     )
 
@@ -2550,10 +2459,6 @@ def semantic_dedup_kmeans(
     n_clusters: int | str = 8,
     iterations: int = 3,
     threshold: float = 0.95,
-    n_planes: int = 10,
-    n_bands: int = 32,
-    seed: int = 0x5EED,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """:func:`semantic_dedup` with TRUE k-means clusters — the paper's
     actual recipe: deterministic Lloyd fit (md5-ordered seeds, fixed
@@ -2573,8 +2478,10 @@ def semantic_dedup_kmeans(
         kmeans_fit,
     )
 
+    n_docs = None
     if n_clusters == "auto":
-        n_docs = df.count() if n_docs is None else n_docs
+        # the auto-k count doubles as the dispatch size — one job
+        n_docs = df.count()
         n_clusters = max(8, int(math.isqrt(n_docs)))
     cents = kmeans_fit(df, n_clusters, iterations, id_col, vec_col)
     vecs = df.select(
@@ -2606,9 +2513,7 @@ def semantic_dedup_kmeans(
             ),
             on="_id",
         ).select("_id", "_v", "_n", "cluster")
-    return _semantic_keep(
-        staged, id_col, threshold, n_planes, n_bands, seed, n_vecs=n_docs,
-    )
+    return _semantic_keep(staged, id_col, threshold, n_vecs=n_docs)
 
 
 def _pair_dots(a_col: Column, b_col: Column) -> Column:
@@ -2750,9 +2655,6 @@ def _semantic_keep(
     staged: DataFrame,
     id_col: str,
     threshold: float,
-    n_planes: int,
-    n_bands: int,
-    seed: int,
     n_vecs: int | None = None,
 ) -> DataFrame:
     """Shared SemDeDup keep rule over a ``(_id, _v, _n, cluster)``
@@ -2790,10 +2692,9 @@ def _semantic_keep(
     2,200-row relation), producing 4,096-task shuffles of pure
     scheduler overhead.
     """
-    # a caller that already knows the corpus size (immutable input +
-    # memoized count, or a count riding an upstream write) dispatches
-    # with ZERO driver-synchronized jobs before the final action: the
-    # direct branch is single-action and needs no pin at all
+    # a size already counted (the n_clusters="auto" probe) dispatches
+    # with no further driver-synchronized job before the final action:
+    # the direct branch is single-action and needs no pin at all
     if n_vecs is not None and n_vecs <= SEMANTIC_DIRECT_MAX:
         return _direct_semantic_keep(staged, id_col, threshold)
 
@@ -2828,12 +2729,15 @@ def _semantic_keep(
     if n_vecs <= SEMANTIC_DIRECT_MAX:
         # the one-action in-group keep rule, reading the pinned blocks
         return _direct_semantic_keep(assigned, id_col, threshold)
+    # 10 planes × 32 bands: see semantic_dedup for why finer than
+    # embedding_dup_pairs' floor shape
+    n_planes, n_bands = 10, 32
     banded = (
         assigned.select(
             F.col("_id").alias("doc_id"),
             "cluster",
             F.posexplode_outer(
-                sign_lsh_band_buckets("_v", n_planes, n_bands, seed)
+                sign_lsh_band_buckets("_v", n_planes, n_bands)
             ).alias("band", "bucket"),
         )
         .filter(F.col("bucket").isNotNull())

@@ -262,7 +262,6 @@ def leakage_safe_split(
     k: int = 3,
     threshold: float = 0.5,
     seed: str = "leakage_split",
-    pairs_fn=None,
     split_col: str = "split",
 ) -> DataFrame:
     """(id, component, split): train/val/test assignment keyed on the
@@ -280,18 +279,14 @@ def leakage_safe_split(
     assignment degrades to a plain per-document hash split. Expected
     split fractions hold over components (weighted by cluster size the
     skew is bounded by the largest cluster — by construction the thing
-    you must not split). A custom ``pairs_fn`` SHOULD emit distinct
-    id-ordered loop-free pairs (see
-    :func:`~knetminer_etl_spark.operators.dedup.near_dup_clusters` —
-    duplicates stay correct but inflate the component solver's dispatch
-    count and driver collect volume).
+    you must not split).
     """
-    from .dedup import _default_pairs_fn
+    from .dedup import _default_pairs
     from .graph import connected_components  # local: avoid cycle at import
 
-    gen = pairs_fn or _default_pairs_fn(df, id_col, text_col, k, threshold)
     comp = connected_components(
-        gen(df), "id_a", "id_b", nodes=df, node_id=id_col,
+        _default_pairs(df, id_col, text_col, k, threshold),
+        "id_a", "id_b", nodes=df, node_id=id_col,
         edges_canonical=True,
     )
     return comp.select(

@@ -1100,17 +1100,9 @@ def doc_pipeline_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_near <= _DECON_MERGE_MAX:
         flagged = t_grams.join(eval_grams.hint("merge"), "gram")
     else:
-        from ..operators.bloomjoin import build_spec, spec_contains
-        from ..operators.contamination import sized_bloom_bits
+        from ..operators.bloomjoin import spec_contains
 
-        eval_pin = eval_grams.localCheckpoint(eager=True)
-        spec = build_spec(
-            eval_pin,
-            "gram",
-            n_bits=sized_bloom_bits(eval_pin.count()),
-            seed="decon",
-            hash="xx",
-        )
+        eval_pin, spec = CT2._pin_eval_bloom(eval_grams)
         flagged = t_grams.filter(
             spec_contains(F.col("gram"), spec)
         ).join(eval_pin, "gram")

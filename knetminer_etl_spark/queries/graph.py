@@ -31,9 +31,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     test scale (deterministic hashing, and the planted dups sit well
     above threshold)."""
     docs = CAT.read_parquet(spark, f"{sf_dir}/documents.parquet")
-    pairs = DD.minhash_lsh_pairs(
-        docs, num_perm="auto", k=3, threshold=0.5, verify=True
-    )
+    pairs = DD.minhash_lsh_pairs(docs, k=3, threshold=0.5)
     return G.connected_components(
         pairs, "id_a", "id_b", nodes=docs, node_id="doc_id",
         edges_canonical=True,

@@ -193,7 +193,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.ngram_jaccard_pairs(_docs(spark, sf_dir), k=3, threshold=0.5)
 
 
-# The oracle mirrors the operator's default max_shingle_freq=1000 cap
+# The oracle mirrors the operator's 1,000-document stop-shingle cap
 # (rare AS rare: shingles shared by >1000 docs are excluded from pair
 # generation on BOTH engines; no-op at the test scales, where max
 # shingle doc-frequency is 25).
@@ -222,9 +222,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 1e-6). Oracle = true Jaccard ≥ 0.6: banding only affects recall
     (bounded above), never precision, so the oracle needs no banding
     replication at ANY shape."""
-    return DD.minhash_lsh_pairs(
-        _docs(spark, sf_dir), num_perm="auto", k=3, threshold=0.6, verify=True
-    )
+    return DD.minhash_lsh_pairs(_docs(spark, sf_dir), k=3, threshold=0.6)
 
 
 MINHASH_LSH_SQL = f"""
@@ -1196,21 +1194,13 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [list(r["_v"]) for r in rows]
 
     cents = memo_model(spark, ("semdedup_centroids", sf_dir, 8), _draw)
-    # corpus cardinality is a pure function of the immutable input —
-    # memoized, it lets the operator dispatch with zero probe jobs and
-    # run the whole keep rule as a single action on repeat invocations
-    n = memo_model(
-        spark, ("semdedup_corpus_n", sf_dir), lambda: corpus.count()
-    )
     # presentation_sort, not orderBy: the range exchange's sampling pass
     # would execute the whole keep-rule chain a second time (bounded
     # audit-sized output — the documented use)
     from ..operators.util import presentation_sort
 
     return presentation_sort(
-        DD.semantic_dedup(
-            corpus, n_clusters=8, threshold=0.95, centroids=cents, n_docs=n
-        ),
+        DD.semantic_dedup(corpus, n_clusters=8, threshold=0.95, centroids=cents),
         "vec_id",
     )
 

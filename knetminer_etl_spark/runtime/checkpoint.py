@@ -126,9 +126,7 @@ def save(
     out.write.mode(mode).format(format).save(df_path(path))
 
 
-def group_agg_partitions(
-    df: DataFrame, bytes_per_task: int = 200 * 1024, cap: int = 4096
-) -> int:
+def group_agg_partitions(df: DataFrame) -> int:
     """Partition count for a collect-style (object-buffer) aggregation
     over ``df``. Such stages must bound the per-task GROUP count, not
     byte volume: each in-flight group holds a buffer object, and a
@@ -136,12 +134,12 @@ def group_agg_partitions(
     the per-task object population grow with the data until the executor
     heap thrashes (measured on the PG build: 66-120s at 10x data vs 9-18s
     correctly sized — GC-bound, not spill; see SCALE.md). Sized from the
-    Catalyst plan-stats estimate (~``bytes_per_task`` upstream bytes per
-    task), floored at shuffle.partitions, capped at ``cap``.
+    Catalyst plan-stats estimate (~200 KiB of upstream bytes per task),
+    floored at shuffle.partitions, capped at 4,096 tasks.
 
     Plans without stats (RDD-backed relations — every
     ``createDataFrame``) report the ``defaultSizeInBytes`` sentinel
-    (Long.MaxValue), which silently hit ``cap`` here: a 2-row in-memory
+    (Long.MaxValue), which silently hit the cap here: a 2-row in-memory
     relation aggregated through 4096 near-empty tasks (~100 s of pure
     scheduling on a 4-thread session). Such estimates are treated as
     unavailable — the same guard :func:`tuned_partitions` applies — and
@@ -157,23 +155,18 @@ def group_agg_partitions(
     # ceiling both branches cap/fall back to the same sized behavior,
     # so nothing real is lost by distrusting the number.
     if est and est < (1 << 50):
-        return min(cap, max(floor, est // bytes_per_task))
-    return min(cap, max(floor, df.rdd.getNumPartitions()))
+        return sized_agg_partitions(spark, est)
+    return min(4096, max(floor, df.rdd.getNumPartitions()))
 
 
-def sized_agg_partitions(
-    spark: SparkSession,
-    est_bytes: int,
-    bytes_per_task: int = 200 * 1024,
-    cap: int = 4096,
-) -> int:
+def sized_agg_partitions(spark: SparkSession, est_bytes: int) -> int:
     """:func:`group_agg_partitions`'s sizing policy for a caller that
     already KNOWS the relation's cardinality (a probed count, an
     observe metric) — same floor/cap, no optimizer-stats pass and no
     ``df.rdd`` planning pass on the driver (each measured ~0.1–0.2 s
     per invocation on the dedup banding plans)."""
     floor = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return min(cap, max(floor, est_bytes // bytes_per_task))
+    return min(4096, max(floor, est_bytes // (200 * 1024)))
 
 
 def save_partitioned(

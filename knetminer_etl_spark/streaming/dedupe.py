@@ -486,13 +486,11 @@ def start_lexical_decon_stream(
     fixed table saturates against a large suite and the map-side prune
     degrades to a no-op that still pays its probes. The count rides the
     pin the stream already builds. Returns the StreamingQuery."""
-    from ..operators.bloomjoin import build_spec
-    from ..operators.contamination import distinct_grams, sized_bloom_bits
+    from ..operators.contamination import _pin_eval_bloom, distinct_grams
 
-    eval_grams = distinct_grams(test_docs, "text", n).localCheckpoint(eager=True)
-    if n_bits is None:
-        n_bits = sized_bloom_bits(eval_grams.count())
-    spec = build_spec(eval_grams, "gram", n_bits, k, seed="decon", hash="xx")
+    eval_grams, spec = _pin_eval_bloom(
+        distinct_grams(test_docs, "text", n), n_bits=n_bits, k=k
+    )
 
     def on_batch(batch: DataFrame, epoch_id: int) -> None:
         process_lexical_decon_batch(

@@ -45,7 +45,7 @@ from ..core.model import (
     VALUE_COL,
     PGElementType,
 )
-from ..core.serialize import DEFAULT_CONVERTER, json_literal, raw_string
+from ..core.serialize import DEFAULT_CONVERTER, serialized
 from .mappers import (
     TripleMapper,
     ValueMapper,
@@ -142,36 +142,32 @@ class DataFrameMapper:
 
     # -- native (Catalyst-visible) path --------------------------------------
 
+    def _staged(self) -> list[Column]:
+        """``[id, _v0, _v1, …]``: the id expression plus each mapper's
+        serialized value as a materialized projection column. The
+        JSON-literal serializer references its to_json sub-expression
+        twice (substr + length), and a Project is where codegen
+        subexpression elimination applies — inside a Generate's array
+        argument each reference would evaluate separately."""
+        return [self._id_expr().alias(ID_COL)] + [
+            serialized(m.value_expr(), m.key, serialize=m.serialize).alias(
+                f"_v{i}"
+            )
+            for i, m in enumerate(self.mappers)
+        ]
+
     def _map_native(self, df: DataFrame) -> DataFrame:
-        eid = self._id_expr()
-        # Stage each mapper's serialized value as a materialized projection
-        # column first: the JSON-literal serializer references its to_json
-        # sub-expression twice (substr + length), and a Project is where
-        # codegen subexpression elimination applies — inside the Generate's
-        # array argument each reference would evaluate separately.
-        staged: list[Column] = [eid.alias(ID_COL)]
-        structs = []
-        for i, m in enumerate(self.mappers):
-            val = m.value_expr()
-            sval = (
-                raw_string(val)
-                if (not m.serialize or m.key in (TYPE_KEY, FROM_KEY, TO_KEY))
-                else json_literal(val)
-            )
-            staged.append(sval.alias(f"_v{i}"))
-            structs.append(
-                F.struct(
-                    F.lit(m.key).alias(KEY_COL),
-                    F.col(f"_v{i}").alias(VALUE_COL),
-                )
-            )
+        structs = [
+            F.struct(F.lit(m.key).alias(KEY_COL), F.col(f"_v{i}").alias(VALUE_COL))
+            for i, m in enumerate(self.mappers)
+        ]
         # Rows with NULL/empty id emit nothing; NULL serialized values drop.
         # explode_outer, NOT explode: plain explode makes Catalyst infer a
         # size(...)>0 pre-filter that duplicates the whole serialization
         # expression (and can be pushed below an upstream repartition,
         # serializing the work onto one partition).
         out = (
-            df.select(*staged)
+            df.select(*self._staged())
             .select(
                 ID_COL,
                 F.explode_outer(
@@ -233,23 +229,15 @@ class DataFrameMapper:
                 "row-local PG build requires the native expression path; "
                 "Python mappers must go through to_triples + triples_to_pg_flat"
             )
-        eid = self._id_expr()
         if check_contract:
             _assert_rowlocal_ids(
-                df.select(eid.alias(ID_COL)).filter(
+                df.select(self._id_expr().alias(ID_COL)).filter(
                     F.col(ID_COL).isNotNull() & (F.col(ID_COL) != F.lit(""))
                 )
             )
-        staged: list[Column] = [eid.alias(ID_COL)]
+        staged = self._staged()
         by_key: dict[str, list[int]] = {}
         for i, m in enumerate(self.mappers):
-            val = m.value_expr()
-            sval = (
-                raw_string(val)
-                if (not m.serialize or m.key in (TYPE_KEY, FROM_KEY, TO_KEY))
-                else json_literal(val)
-            )
-            staged.append(sval.alias(f"_v{i}"))
             by_key.setdefault(m.key, []).append(i)
 
         def _vals(key: str) -> Column:

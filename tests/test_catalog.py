@@ -107,3 +107,45 @@ class TestFanOut:
         # the counter sees jobs at all: running the frame adds some
         assert df.count() == 3
         assert self._jobs(spark) > before
+
+
+class TestBloomAfterRewrite:
+    def test_bloom_filter_sees_rewritten_dimension(self, spark, tmp_path):
+        """``orders_bloom_pruned`` builds its customer bit table on every
+        call: after ``customer.parquet`` is rewritten and the catalog
+        invalidated, new BUILDING customers must pass the filter — a
+        bloom filter never rejects an inserted key, so the bloom count
+        can never fall below the exact match count."""
+        from knetminer_etl_spark.queries.analytics2 import orders_bloom_pruned
+
+        sf = str(tmp_path / "sf")
+        segs = ["BUILDING", "AUTOMOBILE", "MACHINERY"]
+        prios = ["1-URGENT", "2-HIGH", "3-MEDIUM"]
+
+        def write(n_cust):
+            spark.createDataFrame(
+                [(c, segs[c % 3]) for c in range(1, n_cust + 1)],
+                "c_custkey long, c_mktsegment string",
+            ).write.mode("overwrite").parquet(f"{sf}/customer.parquet")
+            spark.createDataFrame(
+                [
+                    (10 * c + p, c, prios[(c + p) % 3])
+                    for c in range(1, n_cust + 1)
+                    for p in range(3)
+                ],
+                "o_orderkey long, o_custkey long, o_orderpriority string",
+            ).write.mode("overwrite").parquet(f"{sf}/orders.parquet")
+            CAT.invalidate(f"{sf}/customer.parquet")
+            CAT.invalidate(f"{sf}/orders.parquet")
+
+        def run():
+            rows = orders_bloom_pruned(spark, sf).collect()
+            for r in rows:
+                assert r["n_bloom_pass"] >= r["n_true_match"], r
+            return sum(r["n_true_match"] for r in rows)
+
+        write(30)
+        assert run() == 10 * 3
+        # 30 more customers, 10 of them BUILDING, 3 orders each
+        write(60)
+        assert run() == 20 * 3

@@ -67,24 +67,13 @@ class TestMinHash:
     def test_lsh_verified_matches_jaccard(self, spark, corpus):
         lsh = {
             (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in DD.minhash_lsh_pairs(
-                corpus, num_perm=64, bands=32, threshold=0.5, verify=True
-            ).collect()
+            for r in DD.minhash_lsh_pairs(corpus, threshold=0.5).collect()
         }
         true = {
             (r["id_a"], r["id_b"]): r["jaccard"]
             for r in DD.ngram_jaccard_pairs(corpus, threshold=0.5).collect()
         }
         assert lsh == true
-
-    def test_lsh_estimated_mode(self, spark, corpus):
-        est = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in DD.minhash_lsh_pairs(
-                corpus, num_perm=64, bands=32, threshold=0.9, verify=False
-            ).collect()
-        }
-        assert est[(1, 2)] == 1.0
 
     def test_singleton_dispatch_equals_collapse_and_direct(self, spark):
         # clone-FREE corpus: the singleton-group probe dispatches to the
@@ -142,25 +131,22 @@ class TestBucketCapAndMetrics:
         full = {(i, j) for i in range(40) for j in range(i + 1, 40)} | {
             (100, 101)
         }
-        # content collapse (default): the clone family bands as ONE
+        # content collapse: the clone family bands as ONE
         # representative, so its pairs are OUTPUT, not candidates — the
         # cap can no longer cost recall on identical-content corpora
-        capped = {
-            (r["id_a"], r["id_b"])
-            for r in DD.minhash_lsh_pairs(
-                df, threshold=0.9, max_bucket_size=10
-            ).collect()
-        }
+        with mock.patch.object(DD, "LSH_BUCKET_CAP", 10):
+            capped = {
+                (r["id_a"], r["id_b"])
+                for r in DD.minhash_lsh_pairs(df, threshold=0.9).collect()
+            }
         assert capped == full
         # distinct contents per bucket (AQE may prune the observation
         # node entirely when the rep-level candidate relation is empty)
         m = DD.read_candidate_metrics("minhash_lsh")
         assert m.get("max_bucket", 1) <= 2
-        # uncapped, the clone bill is too small to pay for collapse:
-        # the direct engine emits the same pairs as candidates
-        uncapped = DD.minhash_lsh_pairs(
-            df, threshold=0.9, max_bucket_size=None
-        ).count()
+        # at the default cap, the clone bill is too small to pay for
+        # collapse: the direct engine emits the same pairs as candidates
+        uncapped = DD.minhash_lsh_pairs(df, threshold=0.9).count()
         assert uncapped == len(full)
         assert DD.read_candidate_metrics("minhash_lsh")["max_bucket"] == 40
 
@@ -243,18 +229,16 @@ class TestBucketCapAndMetrics:
             (101, [0.0, 1.0, 0.0, 0.0]),
         ]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        capped = {
-            (r["id_a"], r["id_b"])
-            for r in DD.embedding_dup_pairs(
-                df, threshold=0.99, max_bucket_size=8
-            ).collect()
-        }
+        with mock.patch.object(DD, "LSH_BUCKET_CAP", 8):
+            capped = {
+                (r["id_a"], r["id_b"])
+                for r in DD.embedding_dup_pairs(df, threshold=0.99).collect()
+            }
         # identical-direction mega-cluster shares EVERY band bucket ->
         # fully dropped; the orthogonal small pair lives in other buckets
         assert capped == {(100, 101)}
-        n_unc = DD.embedding_dup_pairs(
-            df, threshold=0.99, max_bucket_size=None
-        ).count()
+        # the default cap is far above 30 ids: every pair survives
+        n_unc = DD.embedding_dup_pairs(df, threshold=0.99).count()
         assert n_unc == 30 * 29 // 2 + 1
         m = DD.read_candidate_metrics("embedding_lsh")
         assert m["candidates"] >= m["out_rows"] == n_unc
@@ -321,12 +305,13 @@ class TestNearDupCorpus:
         assert 1 in kept and not {2, 3} & kept
         assert kept | {2, 3} == {r["doc_id"] for r in corpus.collect()}
 
-    def test_pluggable_pair_generator(self, spark, corpus):
-        got = DD.near_dup_clusters(
-            corpus,
-            pairs_fn=lambda d: DD.minhash_lsh_pairs(d, threshold=0.5),
-        ).collect()
+    def test_lsh_route_clusters_cover_corpus(self, spark, corpus):
+        # a negative size bound sends the toy corpus down the MinHash-LSH
+        # branch of the size dispatch
+        with mock.patch.object(DD, "PAIRS_DIRECT_MAX", -1):
+            got = DD.near_dup_clusters(corpus, threshold=0.5).collect()
         assert sum(r["cluster_size"] for r in got) == corpus.count()
+        assert {r["keep_id"]: r["cluster_size"] for r in got}[1] == 3
 
     def test_keep_best_prefers_quality_over_min_id(self, spark, corpus):
         # doc 3 is doc 1's near-dup but one token longer after the
@@ -508,10 +493,14 @@ class TestIncrementalMinhash:
         # (num_perm, bands) at ingest time, so the equality property is
         # per-shape (the auto shape the full path would pick for a
         # grown corpus is a DIFFERENT recall curve — see
-        # minhash_band_rows' docstring)
+        # minhash_band_rows' docstring); the batch entry sizes its own
+        # shape, so the sizing function is patched to the index's
         shape = dict(num_perm=96, bands=48)
-        full = minhash_lsh_pairs(corpus, threshold=0.5, **shape)
-        prior = minhash_lsh_pairs(old, threshold=0.5, **shape)
+        with mock.patch.object(
+            DD, "_auto_minhash_shape", lambda n, t: (96, 48)
+        ):
+            full = minhash_lsh_pairs(corpus, threshold=0.5)
+            prior = minhash_lsh_pairs(old, threshold=0.5)
         inc = incremental_minhash_pairs(
             new, minhash_band_rows(old, **shape), corpus, threshold=0.5,
             **shape,

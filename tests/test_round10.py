@@ -1,6 +1,6 @@
 """Round-10 pins: the ADVICE r9 fixes (NaN parity across the
-semantic-decontamination dispatch boundary, the hamming blocks=None
-contract, the jointly-capped decon band shape) and the round's plan
+semantic-decontamination dispatch boundary, the jointly-capped decon
+band shape) and the round's plan
 work (auto-shaped MinHash banding, audio fingerprint whitening,
 bounded memo caches)."""
 
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from knetminer_etl_spark.operators import contamination as CT
-from knetminer_etl_spark.operators import dedup as DD
 
 
 class TestContaminationNanParity:
@@ -78,28 +77,6 @@ class TestContaminationNanParity:
         assert rows[200]["contaminated"] is False
         # the planted leak still flags
         assert rows[100]["contaminated"] is True
-
-
-class TestHammingBlocksNone:
-    """ADVICE r9 (low): blocks=None must mean the classic
-    max_hamming+1 single-block layout, not a crash."""
-
-    def _fps(self, spark):
-        return spark.createDataFrame(
-            [(1, 0b1010), (2, 0b1011), (3, 0b1010_0000_0000), (4, 1 << 40)],
-            "doc_id long, fp long",
-        )
-
-    def test_none_equals_static_layout(self, spark):
-        fps = self._fps(spark)
-        got_none = sorted(
-            map(tuple, DD.hamming_pairs(fps, max_hamming=3, blocks=None).collect())
-        )
-        got_static = sorted(
-            map(tuple, DD.hamming_pairs(fps, max_hamming=3, blocks=4).collect())
-        )
-        assert got_none == got_static
-        assert (1, 2, 1) in got_none
 
 
 class TestAutoDeconShapeCap:

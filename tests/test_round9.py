@@ -41,19 +41,25 @@ class TestMultiBlockPigeonhole:
     """blocks > max_hamming+1 must keep the pair set EXACT: a pair
     within distance h damages ≤ h blocks, so its untouched (g−h)-block
     combination key still matches (the Manku-style block-permuted
-    index)."""
+    index). ``hamming_pairs`` sizes ``g`` itself, so a widened layout
+    is forced by patching :func:`DD._hamming_blocks_auto`."""
 
     @pytest.mark.parametrize("extra", [0, 1, 2, 3])
     def test_blocked_banding_equals_brute(self, spark, extra):
+        import unittest.mock as mock
+
         h, nbits = 3, 60
         rows = _fp_rows(nbits=nbits)
         df = spark.createDataFrame(rows, "doc_id long, fp long")
-        got = {
-            (r["id_a"], r["id_b"], r["hamming"])
-            for r in DD.hamming_pairs(
-                df, max_hamming=h, nbits=nbits, blocks=h + 1 + extra
-            ).collect()
-        }
+        with mock.patch.object(
+            DD, "_hamming_blocks_auto", lambda *a: h + 1 + extra
+        ):
+            got = {
+                (r["id_a"], r["id_b"], r["hamming"])
+                for r in DD.hamming_pairs(
+                    df, max_hamming=h, nbits=nbits
+                ).collect()
+            }
         assert got == _brute_hamming(rows, h)
 
     def test_auto_blocks_matches_fixed(self, spark):
@@ -61,9 +67,7 @@ class TestMultiBlockPigeonhole:
         df = spark.createDataFrame(rows, "doc_id long, fp long")
         auto = {
             tuple(r)
-            for r in DD.hamming_pairs(
-                df, max_hamming=3, nbits=60, blocks="auto"
-            ).collect()
+            for r in DD.hamming_pairs(df, max_hamming=3, nbits=60).collect()
         }
         assert auto == _brute_hamming(rows, 3)
 
@@ -73,12 +77,15 @@ class TestMultiBlockPigeonhole:
         rows = _fp_rows(n=40, planted=0)
         rows += [(5000 + i, rows[0][1]) for i in range(4)]  # clones of fp 0
         df = spark.createDataFrame(rows, "doc_id long, fp long")
-        got = {
-            tuple(r)
-            for r in DD.hamming_pairs(
-                df, max_hamming=2, nbits=60, blocks=5
-            ).collect()
-        }
+        import unittest.mock as mock
+
+        with mock.patch.object(DD, "_hamming_blocks_auto", lambda *a: 5):
+            got = {
+                tuple(r)
+                for r in DD.hamming_pairs(
+                    df, max_hamming=2, nbits=60
+                ).collect()
+            }
         assert got == _brute_hamming(rows, 2)
 
     def test_band_rows_default_layout_unchanged(self, spark):

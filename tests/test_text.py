@@ -351,6 +351,7 @@ class TestContamination:
         # positives; the exact verification join must still produce the
         # identical survivor set (false positives cost work, never rows)
         from knetminer_etl_spark.operators import contamination as CT
+        from knetminer_etl_spark.operators.bloomjoin import build_spec
 
         train = spark.createDataFrame(
             [(i, f"t{i}a t{i}b t{i}c t{i}d t{i}e") for i in range(30)]
@@ -363,11 +364,107 @@ class TestContamination:
         exact = sorted(
             r["doc_id"] for r in CT.decontaminate(train, test, n=4).collect()
         )
+        grams = CT.distinct_grams(test, "text", 4)
+        spec = build_spec(grams, "gram", n_bits=64, seed="decon", hash="xx")
         bloom = sorted(
             r["doc_id"]
-            for r in CT.decontaminate_bloom(train, test, n=4, n_bits=64).collect()
+            for r in CT.bloom_decontaminate_against(
+                train, grams, spec, n=4
+            ).collect()
         )
         assert bloom == exact
+
+    def test_decontaminate_bloom_sizes_table_from_gram_count(self, spark):
+        """The bit table is sized from the eval side's distinct-gram
+        count, counted inside the job that pins the gram relation: 7,097
+        distinct 4-grams need more than the 65,536-bit floor."""
+        import unittest.mock as mock
+
+        from knetminer_etl_spark.operators import bloomjoin as BJ
+        from knetminer_etl_spark.operators import contamination as CT
+
+        n_words = 7_100  # one document, 7,097 distinct 4-grams
+        test = spark.createDataFrame(
+            [(9, " ".join(f"e{i}" for i in range(n_words)))],
+            "doc_id long, text string",
+        )
+        train = spark.createDataFrame(
+            [(i, f"t{i}a t{i}b t{i}c t{i}d t{i}e") for i in range(20)]
+            + [(100, "x e10 e11 e12 e13 y"), (101, "e10 e11 e12 z e13")],
+            "doc_id long, text string",
+        )
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        seen: dict = {}
+        real_build = BJ.build_spec
+
+        def spy(keys, key_col, n_bits=BJ.N_BITS_DEFAULT, *a, **kw):
+            # every job run so far in the group belongs to the gram pin
+            seen["pin_jobs"] = len(tracker.getJobIdsForGroup("decon-pin"))
+            seen["n_bits"] = n_bits
+            sc.setJobGroup("decon-build", "bloom build")
+            return real_build(keys, key_col, n_bits, *a, **kw)
+
+        # a bare pin of the same gram relation, without the count
+        sc.setJobGroup("bare-pin", "bare pin")
+        CT.distinct_grams(test, "text", 4).localCheckpoint(eager=True)
+        bare_jobs = len(tracker.getJobIdsForGroup("bare-pin"))
+        sc.setJobGroup("decon-pin", "bloom decontamination pin")
+        try:
+            with mock.patch.object(BJ, "build_spec", spy):
+                out = CT.decontaminate_bloom(train, test, n=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_grams = n_words - 3
+        assert CT.sized_bloom_bits(n_grams) == 1 << 17 > 1 << 16
+        assert seen["n_bits"] == CT.sized_bloom_bits(n_grams)
+        # counting the grams adds no job to the pin (under AQE a pinned
+        # distinct is its shuffle-map job plus the checkpoint job)
+        assert seen["pin_jobs"] == bare_jobs
+        exact = sorted(
+            r["doc_id"] for r in CT.decontaminate(train, test, n=4).collect()
+        )
+        assert sorted(r["doc_id"] for r in out.collect()) == exact
+        assert 100 not in exact and 101 in exact
+
+    def test_decontaminate_auto_probe_rides_the_pin(self, spark):
+        """The dispatch probe's gram count is taken inside the job that
+        pins the gram relation: building the exact-branch frame runs the
+        jobs of a bare pin and no more."""
+        from knetminer_etl_spark.operators import contamination as CT
+
+        train = spark.createDataFrame(
+            [(i, f"t{i}a t{i}b t{i}c t{i}d t{i}e") for i in range(30)],
+            "doc_id long, text string",
+        )
+        test = spark.createDataFrame(
+            [(9, "t3a t3b t3c t3d x")], "doc_id long, text string"
+        )
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+
+        def jobs(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                result = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(tracker.getJobIdsForGroup(group)), result
+
+        bare, _ = jobs(
+            "bare-gram-pin",
+            lambda: CT.distinct_grams(test, "text", 4).localCheckpoint(
+                eager=True
+            ),
+        )
+        built, out = jobs(
+            "auto-build", lambda: CT.decontaminate_auto(train, test, n=4)
+        )
+        assert built == bare
+        exact = CT.decontaminate(train, test, n=4)
+        assert sorted(r["doc_id"] for r in out.collect()) == sorted(
+            r["doc_id"] for r in exact.collect()
+        )
 
     def test_semantic_contamination_catches_paraphrase_leak(self, spark):
         """An eval item that shares NO n-gram with a train item but sits

@@ -1,6 +1,8 @@
 """Micro-bench one or more registry queries at a given sf_dir with the
 same warm/best-of-N discipline as bench.py — the iteration loop for
-single-query plan work. Usage:
+single-query plan work. Each timed rep runs under its own job group,
+and its Spark job count is read back from the status store
+(``statusTracker().getJobIdsForGroup``). Usage:
 
     python tools/qbench.py [sf_dir] name [name ...]
 
@@ -46,24 +48,32 @@ def main() -> None:
     n_warm = int(os.environ.get("SPARK_GRAFT_WARMUPS", "3"))
     n_timed = int(os.environ.get("SPARK_GRAFT_TIMED_RUNS", "4"))
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     for name in args:
         fn = QUERIES[name]
-        reps = []
+        reps, jobs = [], []
         for _ in range(n_warm):
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         release_pinned_rdds(spark)
         gc.collect()
         spark._jvm.System.gc()
-        for _ in range(n_timed):
+        for i in range(n_timed):
+            group = f"qbench-{name}-{i}"
+            sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             reps.append(time.perf_counter() - t0)
+            jobs.append(len(tracker.getJobIdsForGroup(group)))
+            sc.setLocalProperty("spark.jobGroup.id", None)
             release_pinned_rdds(spark)
             gc.collect()
             spark._jvm.System.gc()
         print(
             f"{name:40s} best {min(reps):6.3f}  reps "
             + " ".join(f"{r:.3f}" for r in reps)
+            + "  jobs "
+            + " ".join(str(j) for j in jobs)
         )
 
 
