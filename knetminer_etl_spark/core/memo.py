@@ -1,21 +1,21 @@
-"""Bounded LRU mapping for the two session-lifetime caches.
+"""Bounded LRU mapping for the session-lifetime cache.
 
-Two caches outlive a single call, both keyed per Spark application:
-table handles for static datasets (runtime/catalog) and small
-deterministic trained models — quantizer codebooks, k-means centroids —
-(runtime/modelcache). Neither holds a plan-choice input or a filter
-over data the query also scans: operators measure what their plan
-choices need (counts, clone statistics, split counts, size estimates)
-and build their runtime filters on every call, so a file rewritten in
-place can never leave a stale verdict behind. A cached MODEL does
-outlive such a rewrite: ``catalog.invalidate`` drops table handles
-only, and ``modelcache.clear`` is the model-side reset.
+One cache outlives a single call, keyed per Spark application and
+table path (runtime/catalog): table handles for static datasets and the
+small deterministic models trained from those tables — quantizer
+codebooks, k-means centroids. It holds no plan-choice input and no
+filter over data the query also scans: operators measure what their
+plan choices need (counts, clone statistics, split counts, size
+estimates) and build their runtime filters on every call, so a file
+rewritten in place can never leave a stale verdict behind. A cached
+model shares its table's key prefix, so ``catalog.invalidate(path)``
+drops the handle and every model trained from it together.
 
 An evicted entry is re-resolved or retrained on the next use —
 latency, never different output — so unbounded growth is the only
 hazard: a long-lived session driving many distinct inputs would
-accumulate entries forever (VERDICT r9 #5). Both caches are therefore
-a :class:`BoundedMemo` — least-recently-USED eviction at a size bound
+accumulate entries forever (VERDICT r9 #5). The cache is therefore a
+:class:`BoundedMemo` — least-recently-USED eviction at a size bound
 generous enough that batch jobs never evict.
 """
 

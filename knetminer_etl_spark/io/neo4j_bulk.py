@@ -32,13 +32,26 @@ from pyspark.sql import functions as F
 from ..core.model import PGElementType
 
 
+#: one property value set: whole JSON strings (stepped over, so a
+#: ``;``, ``=`` or ``]`` inside one is inert), other characters, and any
+#: ``]`` that does not close the entry (closing = followed by ``;`` or
+#: the end). Possessive, so a miss fails in linear time.
+_VALUES = r'(?:"(?:[^"\\]|\\.)*+"|[^"\]]|\](?!;|$))*+'
+#: an entry's key: everything up to its first ``=[``
+_ANY_KEY = r"(?:[^=]|=(?!\[))*+"
+
+
 def _prop_col(key: str):
     """Extract property ``key``'s joined values from ``props_str``
     (NULL when absent). Values were serialized as JSON literals; string
     quotes are stripped for CSV friendliness. The key is matched
-    literally, and a value runs to the ``]`` that closes its entry (the
-    one followed by ``;`` or the end), so values may contain brackets."""
-    pat = rf"(?:^|;){re.escape(key)}=\[(.*?)\](?:;|$)"
+    literally and only at an entry boundary: the pattern walks whole
+    entries from the start of ``props_str``, so text inside a value
+    (even ``;<key>=[``) never starts a match."""
+    pat = (
+        rf"^(?:{_ANY_KEY}=\[{_VALUES}\];)*?"
+        rf"{re.escape(key)}=\[({_VALUES})\](?:;|$)"
+    )
     v = F.regexp_extract("props_str", pat, 1)
     return F.when(v != "", F.regexp_replace(v, '"', "")).otherwise(
         F.lit(None).cast("string")

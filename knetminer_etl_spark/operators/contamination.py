@@ -44,27 +44,10 @@ def ngram_contamination(
     null-filter so the shingle expression is never inlined below an
     exchange (see memory: explode() infers a size>0 filter).
     """
-    # shingle each training doc ONCE, staged through materialized columns
-    # (normalize → tokens → shingles as separate projections): inlining the
-    # chain as one Column re-evaluates the regex normalization at every one
-    # of the several token-array references inside shingles_from_tokens
-    # (measured ~8s → ~1.5s at sf0.1). The distinct gram count rides along
-    # with every exploded gram so no second scan/join is needed for totals.
-    # fan_out before shingling: regex normalization + n-gram assembly is
-    # CPU-bound per row, and a single-file input would otherwise tokenize
-    # on one task (under a broadcast exchange, not even pipeline-parallel);
-    # at real scale the scan arrives well-split and this is a no-op
-    def _grams(df: DataFrame, *keep: str) -> DataFrame:
-        from .util import fan_out
-
-        return (
-            fan_out(df)
-            .select(*keep, tokens(normalize_text(F.col(text_col))).alias("_tok"))
-            .select(*keep, shingles_from_tokens(F.col("_tok"), n).alias("_sh"))
-        )
-
+    # the distinct gram count rides along with every exploded gram so no
+    # second scan/join is needed for totals
     t_grams = (
-        _grams(train, id_col)
+        _shingled(train, text_col, n, id_col)
         .select(
             F.col(id_col),
             F.size("_sh").alias("total_ngrams"),
@@ -72,12 +55,7 @@ def ngram_contamination(
         )
         .filter(F.col("gram").isNotNull())
     )
-    eval_grams = (
-        _grams(test)
-        .select(F.explode_outer("_sh").alias("gram"))
-        .filter(F.col("gram").isNotNull())
-        .distinct()
-    )
+    eval_grams = distinct_grams(test, text_col, n)
     return (
         # explicit broadcast of the eval gram set: the static size
         # estimate of the train subtree (repartition under an explode)
@@ -85,8 +63,7 @@ def ngram_contamination(
         # broadcasting the TRAIN gram stream, the corpus-sized side
         # (measured: 1.36 s vs 0.85 s at sf0.1, and an outright OOM
         # shape at 100 TB). The eval suite is the small side by
-        # contract (past ~5M grams the caller should be on the bloom
-        # path, see decontaminate_auto), so pin the build side to it.
+        # contract, so pin the build side to it.
         t_grams.join(F.broadcast(eval_grams), "gram")
         .groupBy(id_col)
         .agg(
@@ -113,147 +90,10 @@ def decontaminate(
     max_hits: int = 0,
 ) -> DataFrame:
     """Drop training documents with more than `max_hits` contaminated
-    n-grams (default: any overlap). Left-anti join against the flagged
-    id set — the flagged side is small, AQE broadcasts it."""
-    flagged = ngram_contamination(train, test, id_col, text_col, n).filter(
-        F.col("n_hits") > max_hits
-    )
-    return train.join(flagged.select(id_col), id_col, "left_anti")
-
-
-#: eval-gram count above which the exact join stops broadcasting the
-#: test side and the train gram stream would pay a full shuffle — the
-#: crossover where the bloom prune starts winning. ~64-byte grams ×
-#: 5M ≈ 320 MB, past any sane autoBroadcastJoinThreshold.
-BLOOM_DISPATCH_GRAMS = 5_000_000
-
-
-def decontaminate_auto(
-    train: DataFrame,
-    test: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    max_hits: int = 0,
-) -> DataFrame:
-    """Size-probed dispatch between the exact gram join and the
-    bloom-pruned plan — the :func:`semantic_decontaminate` size-probe
-    pattern applied to the lexical pass. Both paths provably emit the
-    same survivor set (tests pin the equality; the bloom registry entry
-    hash-matches the exact oracle at every scale factor), so the probe
-    is purely a physical-plan decision:
-
-    * eval gram set small enough to broadcast → the exact join is
-      cheapest (the bloom's per-gram probes would be pure overhead —
-      measured 2.0 vs 3.3 s on the 10× corpus, SCALE.md);
-    * past :data:`BLOOM_DISPATCH_GRAMS` the exact plan must shuffle the ENTIRE
-      train gram stream; the bloom prunes it map-side first.
-
-    The probe counts the eval side's distinct grams — the small
-    relation by contract (the count rides the job that pins the gram
-    relation, :func:`_pin_eval_bloom`; BOTH branches consume the pin,
-    so the probe's materialization is never thrown away).
-
-    The bloom branch sizes its bit table from the measured gram count
-    (~10 bits/gram ≈ 1% fpp, next power of two, capped at
-    :data:`BLOOM_MAX_BITS`): a fixed default in the
-    >``BLOOM_DISPATCH_GRAMS`` regime would saturate (65k bits against 5M+ keys ≈ 100% fill), and
-    a saturated filter passes every train gram — still correct through
-    the exact verification join, but paying probe overhead PLUS the
-    full shuffle the dispatch exists to avoid.
-    """
-    eval_grams, spec = _pin_eval_bloom(
-        distinct_grams(test, text_col, n), exact_max=BLOOM_DISPATCH_GRAMS
-    )
-    if spec is None:
-        return decontaminate_against(
-            train, eval_grams, id_col, text_col, n, max_hits
-        )
-    return bloom_decontaminate_against(
-        train, eval_grams, spec, id_col, text_col, n, max_hits
-    )
-
-
-#: bloom bit-table ceiling (256 Mbit = 32 MB of words — still a sane
-#: broadcast/literal size); past ``BLOOM_MAX_BITS / 10`` grams the fpp
-#: degrades gracefully instead of the table growing unboundedly
-BLOOM_MAX_BITS = 1 << 28
-
-
-def sized_bloom_bits(n_keys: int) -> int:
-    """Bit-table size for ``n_keys``: next power of two ≥ 10 bits per
-    key (~1% fpp with k=4), floored at 65,536 bits and capped at
-    :data:`BLOOM_MAX_BITS`."""
-    want = max(1 << 16, 10 * max(n_keys, 1))
-    return min(BLOOM_MAX_BITS, 1 << (want - 1).bit_length())
-
-
-def _pin_eval_bloom(
-    grams: DataFrame,
-    exact_max: int = -1,
-    n_bits: int | None = None,
-    k: int = 4,
-):
-    """Pin an evaluation ``gram`` relation and build the bloom filter
-    the prune probes: ``(pinned grams, BloomSpec)``. The pin feeds both
-    the filter build (an action) and the verification join — unpinned,
-    the test-side normalize/tokenize/shingle/distinct pipeline would
-    execute twice. The distinct-gram count rides the pin job
-    (``pin_observe``) and sizes the table (:func:`sized_bloom_bits`)
-    unless ``n_bits`` is given. The spec is ``None`` when the count is
-    ≤ ``exact_max``: the caller's exact-join regime, which builds no
-    filter. Probes are k double-hashed xxhash64 (``hash="xx"``): the
-    verification join establishes correctness, so they need not be
-    the oracle-reproducible md5 form."""
-    from .bloomjoin import build_spec
-    from .util import pin_observe
-
-    pinned, m = pin_observe(grams, F.count(F.lit(1)).alias("n"))
-    n_grams = int(m["n"])
-    if n_grams <= exact_max:
-        return pinned, None
-    spec = build_spec(
-        pinned, "gram", n_bits or sized_bloom_bits(n_grams), k,
-        seed="decon", hash="xx",
-    )
-    return pinned, spec
-
-
-def decontaminate_bloom(
-    train: DataFrame,
-    test: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    max_hits: int = 0,
-) -> DataFrame:
-    """:func:`decontaminate` with a bloom runtime filter on the gram
-    join — the identical survivor set (the filter never drops a gram
-    that was inserted, and every surviving candidate still passes the
-    exact gram equi-join, so bloom false positives are verified away),
-    at the 100 TB join shape:
-
-    * build: one distributed ``bit_or`` aggregate over the evaluation
-      side's distinct grams — the shuffle carries the ``n_bits/64``-word
-      bit table, never the gram strings. ``n_bits`` is
-      :func:`sized_bloom_bits` of the distinct-gram count, which rides
-      the job that pins the gram relation (:func:`_pin_eval_bloom`);
-    * prune: a narrow map over the train gram stream (k double-hashed
-      xxhash64 probes — native JVM hashes, not md5 string digests: the
-      filter's correctness is established by the verification join, so
-      the probes don't need the oracle-reproducible md5 form) into the
-      literal word table at scan speed, BEFORE any shuffle — the
-      corpus-side gram set (trillions of rows at corpus scale) pays the
-      join exchange only for the ~fpp false-positive tail plus the true
-      hits;
-    * verify: the surviving sliver takes the exact join from
-      :func:`ngram_contamination`'s plan, so the flagged set is
-      bit-identical to the unpruned path (the registry entry runs
-      against the EXACT-path oracle at every scale factor).
-    """
-    eval_grams, spec = _pin_eval_bloom(distinct_grams(test, text_col, n))
-    return bloom_decontaminate_against(
-        train, eval_grams, spec, id_col, text_col, n, max_hits
+    n-grams (default: any overlap): :func:`decontaminate_against` the
+    test side's distinct gram set."""
+    return decontaminate_against(
+        train, distinct_grams(test, text_col, n), id_col, text_col, n, max_hits
     )
 
 
@@ -265,20 +105,19 @@ def decontaminate_against(
     n: int = 8,
     max_hits: int = 0,
 ) -> DataFrame:
-    """Exact-join twin of :func:`bloom_decontaminate_against`: drop
-    training documents with more than ``max_hits`` grams in a PRE-BUILT
-    (typically pinned) eval gram relation. Identical survivor set to
-    :func:`decontaminate` — same per-doc-distinct gram explosion, same
-    hit count, no bloom probe — without rebuilding the test side's
-    normalize/tokenize/shingle/distinct pipeline the caller already
-    materialized (the :func:`decontaminate_auto` dispatch probe)."""
-    t_grams = gram_rows(train, text_col, n, id_col)
+    """Drop training documents with more than ``max_hits`` grams in an
+    eval ``gram`` relation — the one lexical decontamination plan.
+    ``eval_grams`` may be pre-built and pinned (the continuous stream
+    filters every micro-batch against the same suite). The flagged ids
+    are those of :func:`ngram_contamination` (same per-doc-distinct gram
+    explosion, same hit count); a left-anti join against them keeps the
+    rest — the flagged side is small, AQE broadcasts it."""
     flagged = (
-        # eval side ≤ BLOOM_DISPATCH_GRAMS by contract (the auto dispatch
-        # sends anything larger to the bloom path) — broadcast it
+        # the eval suite is the small side by contract — broadcast it
         # explicitly so the planner can never hash the train stream
         # (see ngram_contamination)
-        t_grams.join(F.broadcast(eval_grams), "gram")
+        gram_rows(train, text_col, n, id_col)
+        .join(F.broadcast(eval_grams), "gram")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_hits"))
         .filter(F.col("n_hits") > max_hits)
@@ -286,18 +125,31 @@ def decontaminate_against(
     return train.join(flagged.select(id_col), id_col, "left_anti")
 
 
-def gram_rows(df: DataFrame, text_col: str, n: int, *keep: str) -> DataFrame:
-    """``(*keep, gram)`` — every distinct word n-gram of every row,
-    exploded. Staged projections (normalize → tokens → shingles) so the
-    regex normalization runs once per row, not once per array reference
-    (see :func:`ngram_contamination`); ``fan_out`` keeps the CPU-bound
-    shingling parallel on few-file inputs."""
+def _shingled(df: DataFrame, text_col: str, n: int, *keep: str) -> DataFrame:
+    """``(*keep, _sh)`` — each row's distinct word n-gram array. Staged
+    projections (normalize → tokens → shingles): inlining the chain as
+    one Column re-evaluates the regex normalization at every one of the
+    several token-array references inside ``shingles_from_tokens``
+    (measured ~8s → ~1.5s at sf0.1). ``fan_out`` first: normalization
+    and n-gram assembly are CPU-bound per row, and a single-file input
+    would otherwise shingle on one task (under a broadcast exchange,
+    not even pipeline-parallel); at real scale the scan arrives
+    well-split and it is a no-op."""
     from .util import fan_out
 
     return (
         fan_out(df)
         .select(*keep, tokens(normalize_text(F.col(text_col))).alias("_tok"))
         .select(*keep, shingles_from_tokens(F.col("_tok"), n).alias("_sh"))
+    )
+
+
+def gram_rows(df: DataFrame, text_col: str, n: int, *keep: str) -> DataFrame:
+    """``(*keep, gram)`` — every distinct word n-gram of every row,
+    exploded (``explode_outer`` + null filter, so the shingle expression
+    is never inlined below an exchange)."""
+    return (
+        _shingled(df, text_col, n, *keep)
         .select(*keep, F.explode_outer("_sh").alias("gram"))
         .filter(F.col("gram").isNotNull())
     )
@@ -306,38 +158,6 @@ def gram_rows(df: DataFrame, text_col: str, n: int, *keep: str) -> DataFrame:
 def distinct_grams(df: DataFrame, text_col: str, n: int) -> DataFrame:
     """The distinct gram set of a (small, evaluation-side) relation."""
     return gram_rows(df, text_col, n).distinct()
-
-
-def bloom_decontaminate_against(
-    train: DataFrame,
-    eval_grams: DataFrame,
-    spec,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    max_hits: int = 0,
-) -> DataFrame:
-    """The prune+verify half of :func:`decontaminate_bloom`, against a
-    PRE-BUILT filter and gram set — the streaming entry point: a
-    continuous ingest filters every micro-batch against the same fixed
-    evaluation suite, so the bit table and the gram relation are built
-    once per stream, not once per epoch. ``spec`` is a
-    :class:`..bloomjoin.BloomSpec` — the filter travels WITH the
-    parameters that built it, so probe-side hashing can never diverge
-    from the build (a mismatch would fail as silent false negatives:
-    contaminated documents passing the filter undetected)."""
-    from .bloomjoin import spec_contains
-
-    t_grams = gram_rows(train, text_col, n, id_col).filter(
-        spec_contains(F.col("gram"), spec)
-    )
-    flagged = (
-        t_grams.join(eval_grams, "gram")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("n_hits"))
-        .filter(F.col("n_hits") > max_hits)
-    )
-    return train.join(flagged.select(id_col), id_col, "left_anti")
 
 
 def semantic_contamination(

@@ -2200,8 +2200,6 @@ def _cosine_assign_staged(
     id_col: str,
     vec_col: str,
     cents: list[list[float]],
-    literal_max: int | None = None,
-    dots_max: int | None = None,
 ) -> DataFrame:
     """``(_id, _v, _n, cluster)``: argmax-cosine assignment to a
     driver-held centroid list (6-dp rounding; ties → lowest index) —
@@ -2227,10 +2225,6 @@ def _cosine_assign_staged(
 
     from .similarity import _LITERAL_ASSIGN_MAX, _dot, _norm
 
-    if literal_max is None:
-        literal_max = _LITERAL_ASSIGN_MAX
-    if dots_max is None:
-        dots_max = _LITERAL_DOTS_MAX
     vecs = df.select(
         F.col(id_col).alias("_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
@@ -2246,7 +2240,7 @@ def _cosine_assign_staged(
     nvecs = vecs.withColumn("_n", _norm(F.col("_v")))
 
     dim = len(cents[0]) if cents else 0
-    if len(cents) * dim > literal_max:
+    if len(cents) * dim > _LITERAL_ASSIGN_MAX:
         # broadcast-join assignment: centroids as a (cidx, cvec, cnorm)
         # relation — executor-side model state, driver holds only the
         # list it was handed. Costs one extra scan of the staged vecs
@@ -2280,7 +2274,7 @@ def _cosine_assign_staged(
         )
         return nvecs.join(best, on="_id").select("_id", "_v", "_n", "cluster")
 
-    if len(cents) * dim > dots_max:
+    if len(cents) * dim > _LITERAL_DOTS_MAX:
         # Arrow-batch dot products + JVM-side divide/round/argmax: the
         # rounding and tie-break expressions stay identical to the
         # literal path; only the fold moves into numpy (same sequential

@@ -238,72 +238,29 @@ def _argmin_sql(vec_sql: str, book: list[tuple[int, list[float]]]) -> str:
     return _argmin_struct_sql(vec_sql, book) + "['cid']"
 
 
-def _pq_encode_sql(
-    vec_sql: str, books: list[list[tuple[int, list[float]]]]
-) -> str:
+def pq_encode(vec: str, books: list[list[tuple[int, list[float]]]]) -> Column:
+    """array<int> of ``m`` codes for the vector column named ``vec`` —
+    nearest sub-centroid per subspace. Narrow map with literal
+    codebooks: encodes at scan speed. One SQL expression, not a Column
+    tree built node by node (see :func:`pq_train`)."""
     dsub = len(books[0][0][1])
-    dvec = f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
+    dvec = f"transform({vec}, x -> CAST(x AS DOUBLE))"
     codes = ", ".join(
         _argmin_sql(f"slice({dvec}, {s * dsub + 1}, {dsub})", b)
         for s, b in enumerate(books)
     )
-    return f"array({codes})"
+    return F.expr(f"array({codes})")
 
 
-def _pq_decode_sql(
-    codes_sql: str, books: list[list[tuple[int, list[float]]]]
-) -> str:
+def pq_decode(codes: str, books: list[list[tuple[int, list[float]]]]) -> Column:
+    """array<double> reconstruction of the code column named ``codes``:
+    concatenation of the coded sub-centroids (codebooks inlined as
+    literal array-of-arrays)."""
     subs = []
     for s, book in enumerate(books):
         table = "array(" + ", ".join(_arr_sql(c) for _, c in book) + ")"
-        subs.append(f"element_at({table}, {codes_sql}[{s}] + 1)")
-    return "concat(" + ", ".join(subs) + ")"
-
-
-def pq_encode(
-    vec: Column | str, books: list[list[tuple[int, list[float]]]]
-) -> Column:
-    """array<int> of ``m`` codes — nearest sub-centroid per subspace.
-    Narrow map with literal codebooks: encodes at scan speed. Pass the
-    column NAME (not a Column) to get the single-expr construction."""
-    if isinstance(vec, str):
-        return F.expr(_pq_encode_sql(vec, books))
-    dsub = len(books[0][0][1])
-    dvec = _dvec(vec)
-    return F.array(
-        *[_pq_sub_code_col(dvec, b, s, dsub) for s, b in enumerate(books)]
-    )
-
-
-def _pq_sub_code_col(
-    vec: Column, book: list[tuple[int, list[float]]], s: int, dsub: int
-) -> Column:
-    from .similarity import _sq_dist
-
-    sub = F.slice(vec, s * dsub + 1, dsub)
-    entries = [
-        F.struct(
-            _sq_dist(sub, F.lit([float(x) for x in c])).alias("d2"),
-            F.lit(cid).alias("cid"),
-        )
-        for cid, c in book
-    ]
-    return F.array_min(F.array(*entries))["cid"]
-
-
-def pq_decode(
-    codes: Column | str, books: list[list[tuple[int, list[float]]]]
-) -> Column:
-    """array<double> reconstruction: concatenation of the coded
-    sub-centroids (codebooks inlined as literal array-of-arrays). Pass
-    the column NAME for the single-expr construction."""
-    if isinstance(codes, str):
-        return F.expr(_pq_decode_sql(codes, books))
-    subs = []
-    for s, book in enumerate(books):
-        table = F.array(*[F.lit([float(x) for x in c]) for _, c in book])
-        subs.append(F.element_at(table, codes[s] + 1))
-    return F.concat(*subs)
+        subs.append(f"element_at({table}, {codes}[{s}] + 1)")
+    return F.expr("concat(" + ", ".join(subs) + ")")
 
 
 def pq_topk(
@@ -329,7 +286,7 @@ def pq_topk(
     with per-query lookup tables, an Arrow-batch micro-optimization the
     decode form's codegen already approximates locally.
 
-    Pass pre-trained ``books`` (e.g. via ``runtime.modelcache``) to
+    Pass pre-trained ``books`` (e.g. via ``runtime.catalog.memo_model``) to
     skip the driver-synchronized Lloyd training jobs — training is
     deterministic, so a memoized codebook is bit-identical to a fresh
     one over the same corpus and hyperparameters.
@@ -352,8 +309,8 @@ def pq_topk(
     # sf0.1 for identical results)
     recon = (
         fan_out(corpus)
-        .withColumn("__pq_codes", F.expr(_pq_encode_sql(vec_col, books)))
-        .withColumn(vec_col, F.expr(_pq_decode_sql("__pq_codes", books)))
+        .withColumn("__pq_codes", pq_encode(vec_col, books))
+        .withColumn(vec_col, pq_decode("__pq_codes", books))
         .drop("__pq_codes")
     )
     from .similarity import cosine_topk

@@ -428,15 +428,6 @@ FROM feats
 
 _DECON_N = 4
 
-#: near-dedup survivor count above which doc_pipeline_stages' final
-#: decontamination-count join stops shuffling the RAW train gram stream
-#: and bloom-prunes it map-side first (the decontaminate_auto dispatch
-#: applied at the pipeline's split sizes: a 10% test split of ≥ ~200k
-#: docs holds ≥ ~5M distinct grams — contamination.BLOOM_DISPATCH_GRAMS
-#: territory). Conservative: below it the gram shuffle is small and the
-#: bloom build's extra eager job would cost more than it prunes.
-_DECON_MERGE_MAX = 200_000
-
 
 def doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contamination report: training documents (of the deterministic
@@ -484,56 +475,6 @@ SELECT doc_id, count(*) AS n_hits, CAST(any_value(total_ngrams) AS INT) AS total
        round(count(*) * 1.0 / greatest(any_value(total_ngrams), 1), 6) AS contamination
 FROM train_ex JOIN test_g USING (g)
 GROUP BY doc_id
-"""
-
-
-def doc_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decontaminated train split via the bloom runtime filter
-    (operators/contamination.py:decontaminate_bloom): the train gram
-    stream is pruned map-side against a broadcast bit table built from
-    the test split's grams BEFORE paying the join shuffle — the 100 TB
-    shape of benchmark decontamination. Survivor set is bit-identical
-    to the exact path, so the oracle is the UNPRUNED exact SQL: a bloom
-    defect (false negative, mis-seeded probe) would hash-mismatch."""
-    from ..operators import contamination as CT3
-
-    docs = SP.hash_split(
-        _docs(spark, sf_dir), "doc_id", _SPLIT_WEIGHTS, seed=_SPLIT_SEED
-    )
-    train = docs.filter(F.col("split") == "train")
-    test = docs.filter(F.col("split") == "test")
-    return (
-        CT3.decontaminate_bloom(train, test, "doc_id", "text", n=_DECON_N)
-        .select("doc_id", "n_chars")
-    )
-
-
-DOC_DECONTAMINATION_BLOOM_SQL = f"""
-WITH split AS (
-  SELECT doc_id, text, n_chars,
-         {SP.split_sql("doc_id", _SPLIT_WEIGHTS, _SPLIT_SEED)} AS split
-  FROM documents
-), toks AS (
-  SELECT doc_id, split, n_chars,
-         list_filter(string_split({_NORM_SQL}, ' '), x -> x <> '') AS t
-  FROM split
-), sh AS (
-  SELECT doc_id, split, n_chars,
-         CASE WHEN len(t) < {_DECON_N} THEN
-                (CASE WHEN len(t) > 0 THEN [array_to_string(t, ' ')] ELSE [] END)
-              ELSE list_distinct([array_to_string(t[i:i+{_DECON_N - 1}], ' ')
-                                  for i in generate_series(1, len(t) - {_DECON_N - 1})])
-         END AS sh
-  FROM toks
-), train_ex AS (
-  SELECT doc_id, unnest(sh) AS g FROM sh WHERE split = 'train'
-), test_g AS (
-  SELECT DISTINCT unnest(sh) AS g FROM sh WHERE split = 'test'
-), flagged AS (
-  SELECT DISTINCT train_ex.doc_id FROM train_ex JOIN test_g USING (g)
-)
-SELECT doc_id, n_chars FROM sh
-WHERE split = 'train' AND doc_id NOT IN (SELECT doc_id FROM flagged)
 """
 
 
@@ -774,7 +715,6 @@ QUERIES = {
     "doc_context_windows": doc_context_windows,
     "doc_repetition_stats": doc_repetition_stats,
     "doc_decontamination": doc_decontamination,
-    "doc_decontamination_bloom": doc_decontamination_bloom,
     "doc_tfidf_terms": doc_tfidf_terms,
     "doc_tfidf_terms_split": doc_tfidf_terms_split,
 }
@@ -791,7 +731,6 @@ ORACLES = {
     "doc_context_windows": DOC_CONTEXT_WINDOWS_SQL,
     "doc_repetition_stats": DOC_REPETITION_STATS_SQL,
     "doc_decontamination": DOC_DECONTAMINATION_SQL,
-    "doc_decontamination_bloom": DOC_DECONTAMINATION_BLOOM_SQL,
     "doc_tfidf_terms": DOC_TFIDF_TERMS_SQL,
     "doc_tfidf_terms_split": DOC_TFIDF_TERMS_SQL,
 }
@@ -1091,21 +1030,10 @@ def doc_pipeline_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scaling outright once the split outgrows the broadcast cap. A
     # sort-merge join lets AQE run both gram map stages CONCURRENTLY
     # (guide §2.6 — the map sides are independent query stages) and
-    # shuffles grams, which scales with the corpus; past
-    # _DECON_MERGE_MAX survivors the train gram stream is first pruned
-    # map-side with a bloom filter over the eval grams before paying
-    # that shuffle (decontaminate_auto's bloom branch, identical
-    # survivor semantics: the filter has no false negatives and every
-    # survivor still passes the exact gram join).
-    if n_near <= _DECON_MERGE_MAX:
-        flagged = t_grams.join(eval_grams.hint("merge"), "gram")
-    else:
-        from ..operators.bloomjoin import spec_contains
-
-        eval_pin, spec = CT2._pin_eval_bloom(eval_grams)
-        flagged = t_grams.filter(
-            spec_contains(F.col("gram"), spec)
-        ).join(eval_pin, "gram")
+    # shuffles grams, which scales with the corpus. A bloom prune of the
+    # train grams before that shuffle lost to this plain merge join on
+    # the 100× corpus (SCALE.md), so there is one plan at every size.
+    flagged = t_grams.join(eval_grams.hint("merge"), "gram")
     # the subtraction needs doc_id unique in train; doc_id comes from the
     # input table, so the tail aggregate checks it instead of trusting it
     tf = train.agg(

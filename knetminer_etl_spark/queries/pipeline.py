@@ -373,15 +373,16 @@ def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical codebooks, codes, and reconstructed scores
     (operators/quantize.py)."""
     from ..operators import quantize as SQ
-    from ..runtime.modelcache import memo_model
 
-    emb = CAT.read_parquet(spark, f"{sf_dir}/embeddings.parquet")
+    table = f"{sf_dir}/embeddings.parquet"
+    emb = CAT.read_parquet(spark, table)
     # codebook training is deterministic (md5-ordered seeds, fixed Lloyd
-    # rounds) — memoize it per (input path, hyperparams) so repeat
+    # rounds) — memoize it per (input table, hyperparams) so repeat
     # invocations skip the serialized per-round driver jobs
-    books = memo_model(
+    books = CAT.memo_model(
         spark,
-        ("pq_books", sf_dir, 4, 8, 2),
+        table,
+        ("pq_books", 4, 8, 2),
         lambda: SQ.pq_train(emb, m=4, ksub=8, iterations=2),
     )
     return SQ.pq_topk(
@@ -1177,11 +1178,9 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(planted)
 
     # the md5-seeded centroid draw is deterministic over the immutable
-    # parquet input — memoize it per (path, k) so repeat invocations
+    # parquet input — memoize it per (table, k) so repeat invocations
     # skip the draw's driver-synchronized sort-limit job (the operator's
     # documented frozen-model-state form)
-    from ..runtime.modelcache import memo_model
-
     def _draw() -> list[list[float]]:
         rows = (
             corpus.select(
@@ -1193,7 +1192,9 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [list(r["_v"]) for r in rows]
 
-    cents = memo_model(spark, ("semdedup_centroids", sf_dir, 8), _draw)
+    cents = CAT.memo_model(
+        spark, f"{sf_dir}/embeddings.parquet", ("semdedup_centroids", 8), _draw
+    )
     # presentation_sort, not orderBy: the range exchange's sampling pass
     # would execute the whole keep-rule chain a second time (bounded
     # audit-sized output — the documented use)

@@ -1,4 +1,5 @@
-"""Memoized table handles for static datasets.
+"""Memoized table handles for static datasets, and the small models
+trained from them.
 
 ``spark.read.parquet(path)`` is not free even when no query runs: every
 call re-lists the directory and re-reads footers for schema inference —
@@ -13,16 +14,25 @@ Use ONLY for static inputs (the benchmark/testdata tables). A path
 whose contents evolve between reads — streaming sinks, checkpoint
 stores, incremental staging dirs — must keep calling
 ``spark.read.parquet`` directly so each read re-resolves the files.
+
+:func:`memo_model` keeps small deterministic models — quantizer
+codebooks, k-means centroids — in the same cache, keyed by the table
+they were trained from, so :func:`invalidate` of a rewritten table
+drops its handle and its models together.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..core.memo import BoundedMemo
 
 #: LRU-bounded (core/memo.py): an evicted handle just re-resolves the
-#: footers on next read — latency, never correctness.
+#: footers on next read, an evicted model is retrained — latency, never
+#: correctness. Keys are ``(applicationId, path, ...)``.
 _CACHE: BoundedMemo = BoundedMemo(maxsize=1024)
 
 
@@ -41,9 +51,31 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def memo_model(
+    spark: SparkSession, table_path: str, key: tuple, builder: Callable[[], Any]
+) -> Any:
+    """Return the model cached for (this Spark application,
+    ``table_path``, ``key``), building it with ``builder()`` on first
+    use.
+
+    Training is deterministic (md5-ordered seeds, fixed Lloyd rounds),
+    so a cached model is bit-identical to a retrained one while the
+    table is unchanged; each training round is a driver-synchronized
+    job, which is what the cache saves. ``table_path`` is the parquet
+    table the model is trained from, and ``key`` must name every
+    hyperparameter. The result must be bounded driver-held state —
+    lists of floats, not DataFrames (a cached DataFrame would pin
+    lineage and executor blocks far beyond the model's lifetime)."""
+    k = (spark.sparkContext.applicationId, table_path, *key)
+    if k not in _CACHE:
+        _CACHE[k] = builder()
+    return _CACHE[k]
+
+
 def invalidate(path: str | None = None) -> None:
-    """Drop cached handles (all sessions) — for tests or after a
-    static path is rewritten in place."""
+    """Drop cached handles and the models trained from them (all
+    sessions) — for tests or after a static path is rewritten in
+    place."""
     if path is None:
         _CACHE.clear()
         return

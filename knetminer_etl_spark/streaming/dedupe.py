@@ -439,24 +439,22 @@ def process_lexical_decon_batch(
     batch: DataFrame,
     epoch_id: int,
     eval_grams: DataFrame,
-    spec,
     clean_path: str,
     n: int = 8,
     max_hits: int = 0,
 ) -> None:
     """One epoch of lexical (word n-gram) decontamination: keep only the
     batch documents sharing no n-gram with the FIXED evaluation suite
-    and write them as this epoch's partition. The bloom word table and
-    the eval gram relation are loop-invariant (built once per stream);
-    the batch gram stream is pruned map-side against the literal table
-    before the exact verification join — the streaming face of
-    ``operators.contamination.decontaminate_bloom``. Stateless across
-    epochs, so idempotent partition overwrite alone is exactly-once."""
-    from ..operators.contamination import bloom_decontaminate_against
+    and write them as this epoch's partition —
+    ``operators.contamination.decontaminate_against`` the suite's gram
+    relation, which is loop-invariant (pinned once per stream).
+    Stateless across epochs, so idempotent partition overwrite alone is
+    exactly-once."""
+    from ..operators.contamination import decontaminate_against
 
     batch = batch.select("doc_id", "text").localCheckpoint(eager=True)
-    kept = bloom_decontaminate_against(
-        batch, eval_grams, spec, "doc_id", "text", n, max_hits
+    kept = decontaminate_against(
+        batch, eval_grams, "doc_id", "text", n, max_hits
     )
     _write_batch_partition(kept, epoch_id, clean_path)
     release_pin(batch)  # per-epoch pin — see process_dedup_batch
@@ -469,32 +467,24 @@ def start_lexical_decon_stream(
     checkpoint_path: str,
     n: int = 8,
     max_hits: int = 0,
-    n_bits: int | None = None,
-    k: int = 4,
     query_name: str = "continuous_lexical_decon",
 ):
     """Continuous ingest-time lexical decontamination: every arriving
     micro-batch of documents is n-gram-filtered against the evaluation
     suite BEFORE it lands in the training store (benchmark leaks never
-    enter the corpus). The suite's distinct grams are pinned and its
-    bloom bit table built ONCE per stream — each epoch pays only the
-    batch-side gram scan, the map-side bloom prune, and the exact
-    verification join over the pruned sliver.
+    enter the corpus). The suite's distinct grams are pinned ONCE per
+    stream — each epoch pays only the batch-side gram scan and the
+    exact join against the broadcast suite. Returns the
+    StreamingQuery."""
+    from ..operators.contamination import distinct_grams
 
-    ``n_bits`` defaults to sizing from the MEASURED suite gram count
-    (~10 bits/gram ≈ 1% fpp, the ``decontaminate_auto`` formula) — a
-    fixed table saturates against a large suite and the map-side prune
-    degrades to a no-op that still pays its probes. The count rides the
-    pin the stream already builds. Returns the StreamingQuery."""
-    from ..operators.contamination import _pin_eval_bloom, distinct_grams
-
-    eval_grams, spec = _pin_eval_bloom(
-        distinct_grams(test_docs, "text", n), n_bits=n_bits, k=k
+    eval_grams = distinct_grams(test_docs, "text", n).localCheckpoint(
+        eager=True
     )
 
     def on_batch(batch: DataFrame, epoch_id: int) -> None:
         process_lexical_decon_batch(
-            batch, epoch_id, eval_grams, spec, clean_path, n, max_hits
+            batch, epoch_id, eval_grams, clean_path, n, max_hits
         )
 
     return (
@@ -507,7 +497,7 @@ def start_lexical_decon_stream(
 
 def read_clean_docs(spark: SparkSession, clean_path: str) -> DataFrame:
     """All decontaminated documents ingested so far (union of batch
-    partitions); equals batch-mode ``decontaminate_bloom`` over the
+    partitions); equals batch-mode ``decontaminate`` over the
     same corpus (pinned in tests/test_streaming_semantic.py)."""
     return spark.read.parquet(clean_path).select("doc_id", "text")
 

@@ -17,9 +17,14 @@ def fact_dim(spark):
     return fact, dim
 
 
+def _semi_filter(fact, dim, n_bits=BJ.N_BITS_DEFAULT, k=BJ.K_DEFAULT):
+    words = BJ.bloom_build(dim, "dkey", n_bits, k)
+    return fact.filter(BJ.might_contain(F.col("key"), words, n_bits, k))
+
+
 def test_no_false_negatives(spark, fact_dim):
     fact, dim = fact_dim
-    passed = BJ.bloom_semi_filter(fact, "key", dim, "dkey")
+    passed = _semi_filter(fact, dim)
     true = fact.join(dim, fact["key"] == dim["dkey"], "left_semi")
     # every true match survives the bloom
     assert true.exceptAll(passed.select(*true.columns)).count() == 0
@@ -28,7 +33,7 @@ def test_no_false_negatives(spark, fact_dim):
 def test_false_positive_rate_within_bound(spark, fact_dim):
     fact, dim = fact_dim
     n_keys, n_bits, k = 500, 1 << 16, 4
-    passed = BJ.bloom_semi_filter(fact, "key", dim, "dkey", n_bits, k)
+    passed = _semi_filter(fact, dim, n_bits, k)
     true_n = fact.join(dim, fact["key"] == dim["dkey"], "left_semi").count()
     extra = passed.count() - true_n
     # fp rate ~ (1 - e^{-kn/m})^k ≈ (1-e^{-0.0305})^4 ≈ 8e-7; give 100x slack
@@ -69,65 +74,3 @@ def test_n_bits_must_be_power_of_two(spark, fact_dim):
     _, dim = fact_dim
     with pytest.raises(ValueError, match="power of two"):
         BJ.bloom_build(dim, "dkey", n_bits=1000)
-
-
-class TestXxHashProbes:
-    """The double-hashed xxhash64 probe family (hash="xx") — used where
-    the filter is verified downstream instead of oracle-replicated."""
-
-    def test_no_false_negatives_xx(self, spark, fact_dim):
-        fact, dim = fact_dim
-        spec = BJ.build_spec(dim, "dkey", hash="xx")
-        passed = fact.filter(BJ.spec_contains(F.col("key"), spec))
-        true = fact.join(dim, fact["key"] == dim["dkey"], "left_semi")
-        assert true.exceptAll(passed.select(*true.columns)).count() == 0
-
-    def test_false_positive_rate_within_bound_xx(self, spark, fact_dim):
-        import math
-
-        fact, dim = fact_dim
-        n_keys, n_bits, k = 500, 1 << 16, 4
-        spec = BJ.build_spec(dim, "dkey", n_bits, k, hash="xx")
-        passed = fact.filter(BJ.spec_contains(F.col("key"), spec))
-        true = fact.join(dim, fact["key"] == dim["dkey"], "left_semi")
-        fp = passed.count() - true.count()
-        non_members = fact.count() - true.count()
-        bound = (1 - math.exp(-k * n_keys / n_bits)) ** k
-        # generous 5x slack on the analytic bound: double hashing is
-        # slightly worse than k independent hashes
-        assert fp / max(non_members, 1) <= 5 * bound + 0.01
-
-    def test_positions_in_range_and_distinct_enough(self, spark):
-        # probe positions must stay in [0, n_bits) for NEGATIVE xxhash64
-        # values too (bitwiseAND on two's complement), and the j-scaled
-        # double hashing must not collapse onto one position
-        from pyspark.sql import Row
-
-        n_bits, k = 1 << 10, 4
-        df = spark.createDataFrame(
-            [Row(s=f"gram {i} body") for i in range(200)]
-        )
-        cols = BJ._positions(F.col("s"), n_bits, k, "decon", hash="xx")
-        rows = df.select(
-            F.array(*cols).alias("p"),
-            F.size(F.array_distinct(F.array(*cols))).alias("nd"),
-        ).collect()
-        for r in rows:
-            assert all(0 <= p < n_bits for p in r["p"])
-        # with h2 forced odd, all k positions of a key are distinct
-        # unless h2m ≡ 0 mod n_bits is impossible (odd) — expect k
-        assert all(r["nd"] == 4 for r in rows)
-
-    def test_mismatched_probe_family_is_inexpressible(self, spark, fact_dim):
-        # the regression the spec type exists to prevent: building with
-        # one hash family and probing with another cannot be written
-        # through the spec API — spec_contains has no hash parameter
-        import inspect
-
-        sig = inspect.signature(BJ.spec_contains)
-        assert list(sig.parameters) == ["key", "spec"]
-
-    def test_unknown_hash_rejected(self, spark, fact_dim):
-        _, dim = fact_dim
-        with pytest.raises(ValueError, match="unknown bloom hash"):
-            BJ.build_spec(dim, "dkey", hash="sha9000")

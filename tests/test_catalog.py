@@ -149,3 +149,45 @@ class TestBloomAfterRewrite:
         # 30 more customers, 10 of them BUILDING, 3 orders each
         write(60)
         assert run() == 20 * 3
+
+
+class TestModelAfterRewrite:
+    def test_invalidate_drops_models_trained_from_the_table(
+        self, spark, tmp_path
+    ):
+        """The SemDeDup centroids and PQ codebooks are memoized per
+        table: after ``embeddings.parquet`` is rewritten and the catalog
+        invalidated, both queries must match a run on a fresh path
+        holding the new vectors, not keep the old table's model."""
+        import numpy as np
+
+        from knetminer_etl_spark.queries.pipeline import (
+            embedding_pq_topk,
+            embedding_semantic_dedup,
+        )
+
+        def write(sf, seed):
+            rng = np.random.default_rng(seed)
+            spark.createDataFrame(
+                [
+                    (i, [float(x) for x in rng.normal(size=64)], i % 5)
+                    for i in range(200)
+                ],
+                "vec_id long, embedding array<float>, label int",
+            ).write.mode("overwrite").parquet(f"{sf}/embeddings.parquet")
+            CAT.invalidate(f"{sf}/embeddings.parquet")
+
+        def run(sf):
+            return [
+                sorted(map(tuple, q(spark, sf).collect()))
+                for q in (embedding_semantic_dedup, embedding_pq_topk)
+            ]
+
+        rewritten, fresh = str(tmp_path / "a"), str(tmp_path / "b")
+        write(rewritten, 1)
+        old = run(rewritten)
+        write(rewritten, 2)
+        write(fresh, 2)
+        new = run(fresh)
+        assert new[0] != old[0] and new[1] != old[1]
+        assert run(rewritten) == new

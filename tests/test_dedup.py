@@ -648,32 +648,31 @@ class TestSemanticDedup:
         must not collect an unbounded literal matrix to the driver).
         Both plans must produce bit-identical assignments: same
         driver-folded norms, 6-dp rounding, and (cos, −idx) tie-break."""
-        from knetminer_etl_spark.operators.dedup import _cosine_assign_staged
+        import unittest.mock as mock
+
+        from knetminer_etl_spark.operators import dedup as DD
+        from knetminer_etl_spark.operators import similarity as SIM
 
         df = self._emb(spark, n=50)
         cents = [
             list(r["embedding"])
             for r in df.orderBy("vec_id").limit(6).collect()
         ]
-        lit = sorted(
-            (r["_id"], r["cluster"])
-            for r in _cosine_assign_staged(
-                df, "vec_id", "embedding", cents, literal_max=10**9
-            ).collect()
-        )
-        joined = sorted(
-            (r["_id"], r["cluster"])
-            for r in _cosine_assign_staged(
-                df, "vec_id", "embedding", cents, literal_max=0
-            ).collect()
-        )
-        arrow = sorted(
-            (r["_id"], r["cluster"])
-            for r in _cosine_assign_staged(
-                df, "vec_id", "embedding", cents,
-                literal_max=10**9, dots_max=0,
-            ).collect()
-        )
+
+        def assign(literal_max, dots_max=DD._LITERAL_DOTS_MAX):
+            with mock.patch.object(
+                SIM, "_LITERAL_ASSIGN_MAX", literal_max
+            ), mock.patch.object(DD, "_LITERAL_DOTS_MAX", dots_max):
+                return sorted(
+                    (r["_id"], r["cluster"])
+                    for r in DD._cosine_assign_staged(
+                        df, "vec_id", "embedding", cents
+                    ).collect()
+                )
+
+        lit = assign(10**9)
+        joined = assign(0)
+        arrow = assign(10**9, dots_max=0)
         assert lit == joined
         assert lit == arrow  # sequential-fold numpy dots == JVM fold
         assert len({c for _, c in lit}) > 1  # assignments are non-trivial

@@ -57,6 +57,7 @@ class TestBulkExport:
             ),
             ("N11", "node", "T", None, None, "aXb=[1]"),
             ("N12", "node", "T", None, None, "a.b=[2]"),
+            ("N13", "node", "T", None, None, 'alias=["x;name=[z]"];name=["y"]'),
         ]
         pg = spark.createDataFrame(
             rows,
@@ -75,3 +76,5 @@ class TestBulkExport:
         # 'a.b' is a literal key, not a regex matching 'aXb'
         assert got["N11"]["a.b"] is None
         assert got["N12"]["a.b"] == "2"
+        # a key inside a quoted value is not an entry boundary
+        assert got["N13"]["name"] == "y"

@@ -168,7 +168,7 @@ class TestPQ:
         assert len(books) == 2 and all(len(b) == 4 for b in books)
         assert all(len(c) == 4 for b in books for _, c in b)
         codes = clustered.select(
-            "vec_id", pq_encode(F.col("embedding"), books).alias("c")
+            "vec_id", pq_encode("embedding", books).alias("c")
         ).collect()
         assert all(len(r["c"]) == 2 for r in codes)
         assert all(0 <= x < 4 for r in codes for x in r["c"])
@@ -182,7 +182,7 @@ class TestPQ:
         codes = {
             r["vec_id"]: tuple(r["c"])
             for r in clustered.select(
-                "vec_id", pq_encode(F.col("embedding"), books).alias("c")
+                "vec_id", pq_encode("embedding", books).alias("c")
             ).collect()
         }
         # rows 0-9 / 10-19 / 20-29 are the three clusters. Seeding may
@@ -208,10 +208,11 @@ class TestPQ:
         )
 
         books = pq_train(clustered, m=2, ksub=4, iterations=3)
-        recon = clustered.select(
-            "embedding",
-            pq_decode(pq_encode(F.col("embedding"), books), books).alias("r"),
-        ).collect()
+        recon = (
+            clustered.select("embedding", pq_encode("embedding", books).alias("c"))
+            .select("embedding", pq_decode("c", books).alias("r"))
+            .collect()
+        )
         # converged sub-centroids sit at their cluster means — error per
         # dim is bounded by the jitter radius (0.25 with margin)
         for row in recon:
@@ -238,7 +239,7 @@ class TestPQ:
 
         books = pq_train(clustered, m=2, ksub=4, iterations=1)
         plan = (
-            clustered.select(pq_encode(F.col("embedding"), books).alias("c"))
+            clustered.select(pq_encode("embedding", books).alias("c"))
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

@@ -322,61 +322,6 @@ class TestNanParity:
         assert drops == {4}  # NaN pairs (1,2) and (1,3) are not witnesses
 
 
-class TestBloomArrowProbe:
-    def test_arrow_probe_equals_literal(self, spark):
-        from knetminer_etl_spark.operators import bloomjoin as BJ
-
-        keys = spark.createDataFrame(
-            [(f"k{i}",) for i in range(200)], "gram string"
-        )
-        probe = spark.createDataFrame(
-            [(f"k{i}",) for i in range(150, 400)], "gram string"
-        )
-        for hash_kind in ("md5", "xx"):
-            spec = BJ.build_spec(
-                keys, "gram", n_bits=1 << 12, k=3, seed="t9", hash=hash_kind
-            )
-            lit = [
-                r["hit"]
-                for r in probe.select(
-                    F.col("gram"),
-                    BJ.might_contain(
-                        F.col("gram"), list(spec.words), spec.n_bits,
-                        spec.k, spec.seed, spec.hash,
-                    ).alias("hit"),
-                ).orderBy("gram").collect()
-            ]
-            arrow = [
-                r["hit"]
-                for r in probe.select(
-                    F.col("gram"),
-                    BJ._might_contain_arrow(
-                        F.col("gram"), list(spec.words), spec.n_bits,
-                        spec.k, spec.seed, spec.hash,
-                    ).alias("hit"),
-                ).orderBy("gram").collect()
-            ]
-            assert lit == arrow
-            # inserted keys can never be false (true membership holds
-            # through either probe)
-            assert all(lit[: 200 - 150])
-
-    def test_large_table_dispatches_to_arrow(self, spark):
-        """Above LITERAL_WORDS_MAX the plan must not carry the literal
-        array (the analyzer-cost hazard); the probe column is a Pandas
-        UDF instead."""
-        from knetminer_etl_spark.operators import bloomjoin as BJ
-
-        words = [0] * (BJ.LITERAL_WORDS_MAX + 1)
-        words[1] = 1 << 5
-        col = BJ.might_contain(
-            F.lit("x"), words, len(words) * 64, 2, "s", "xx"
-        )
-        # a pandas_udf column renders as a python UDF invocation, not a
-        # million-element array literal
-        assert "array(" not in repr(col)[:2000]
-
-
 class TestAutoDeconShape:
     def test_floors_hold_small(self):
         from knetminer_etl_spark.operators.contamination import (

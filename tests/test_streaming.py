@@ -113,6 +113,38 @@ class TestStreamingTwins:
         total = spark.sql("SELECT count(*) FROM dedup_out").first()[0]
         assert n == total == events.count()
 
+    def test_stream_sessions_equal_batch_sessionize(self, spark, events):
+        """``stream_session_agg`` emits exactly ``sessionize``'s sessions,
+        except the ones the watermark has not closed. Append mode emits a
+        session once its end (last event + gap) is at or before the
+        watermark (max event time − 30 minutes); later sessions stay in
+        state when the bounded stream ends."""
+        from pyspark.sql import functions as F
+
+        gap = 30 * 60
+        stream = EV.read_event_stream(spark, f"{SF_DIR}/events*")
+        EV.run_stream_to_memory(
+            EV.stream_session_agg(stream, gap_minutes=30), "sess_out"
+        )
+        got = sorted(
+            (r["user_id"], r["session_start"], r["n_events"])
+            for r in spark.sql("SELECT * FROM sess_out").collect()
+        )
+        watermark = events.agg(F.max("ts").cast("long")).first()[0] - gap
+        batch = EV.sessionize(events, gap_minutes=30).collect()
+        ends = [r["session_start"] + r["duration_secs"] + gap for r in batch]
+        # ends are whole seconds, the timestamps are not: no session may
+        # end within a second of the watermark, so rounding cannot
+        # decide which side it falls on
+        assert all(abs(e - watermark) > 1 for e in ends)
+        closed = sorted(
+            (r["user_id"], r["session_start"], r["n_events"])
+            for r, e in zip(batch, ends)
+            if e <= watermark
+        )
+        assert got == closed
+        assert 0 < len(closed) < len(batch)
+
 
 class TestStreamingHLL:
     def test_stream_hll_registers_merge_to_batch_estimate(self, spark, events):

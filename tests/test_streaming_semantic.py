@@ -259,8 +259,8 @@ def test_decon_epoch_replay_is_idempotent(spark, decon_paths):
 
 
 # ---------------------------------------------------------------------------
-# Continuous LEXICAL decontamination (ingest-time n-gram filtering via the
-# loop-invariant bloom table)
+# Continuous LEXICAL decontamination (ingest-time n-gram filtering against
+# the loop-invariant, pinned eval gram relation)
 # ---------------------------------------------------------------------------
 
 
@@ -294,7 +294,7 @@ def lex_paths(spark, tmp_path_factory):
 
 
 def test_lexical_decon_stream_equals_batch_mode(spark, lex_paths):
-    from knetminer_etl_spark.operators.contamination import decontaminate_bloom
+    from knetminer_etl_spark.operators.contamination import decontaminate
 
     stream = SD.read_document_stream(spark, lex_paths["src"])
     q = SD.start_lexical_decon_stream(
@@ -310,7 +310,7 @@ def test_lexical_decon_stream_equals_batch_mode(spark, lex_paths):
     )
     batch_mode = sorted(
         r["doc_id"]
-        for r in decontaminate_bloom(
+        for r in decontaminate(
             lex_paths["full"], lex_paths["test"], n=4
         ).collect()
     )
@@ -320,7 +320,6 @@ def test_lexical_decon_stream_equals_batch_mode(spark, lex_paths):
 
 
 def test_lexical_decon_replay_is_idempotent(spark, lex_paths):
-    from knetminer_etl_spark.operators.bloomjoin import build_spec
     from knetminer_etl_spark.operators.contamination import distinct_grams
 
     before = sorted(
@@ -329,10 +328,9 @@ def test_lexical_decon_replay_is_idempotent(spark, lex_paths):
     eval_grams = distinct_grams(lex_paths["test"], "text", 4).localCheckpoint(
         eager=True
     )
-    spec = build_spec(eval_grams, "gram", seed="decon", hash="xx")
     batch2 = spark.read.parquet(lex_paths["src"]).filter(F.col("doc_id") >= 10)
     SD.process_lexical_decon_batch(
-        batch2, 1, eval_grams, spec, lex_paths["clean"], n=4
+        batch2, 1, eval_grams, lex_paths["clean"], n=4
     )
     after = sorted(
         map(tuple, SD.read_clean_docs(spark, lex_paths["clean"]).collect())

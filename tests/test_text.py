@@ -278,6 +278,39 @@ class TestContamination:
         assert [r["doc_id"] for r in kept.collect()] == [2]
         assert kept.columns == ["doc_id", "text"]
 
+    def test_decontaminate_drops_what_the_report_flags(self, spark):
+        """``decontaminate`` keeps exactly the training documents whose
+        ``ngram_contamination`` hit count is at most ``max_hits``."""
+        from knetminer_etl_spark.operators import contamination as CT
+
+        train = spark.createDataFrame(
+            [
+                (1, "a b c d q"),  # one shared 4-gram
+                (2, "a b c d e"),  # two shared 4-grams
+                (3, "p q r s t"),  # none
+                (4, "x a b c d y b c d e f"),  # three, apart
+            ],
+            "doc_id long, text string",
+        )
+        test = spark.createDataFrame(
+            [(9, "zz a b c d e f zz")], "doc_id long, text string"
+        )
+        hits = {
+            r["doc_id"]: r["n_hits"]
+            for r in CT.ngram_contamination(train, test, n=4).collect()
+        }
+        assert hits == {1: 1, 2: 2, 4: 3}
+        for max_hits in (0, 1, 2, 3):
+            kept = sorted(
+                r["doc_id"]
+                for r in CT.decontaminate(
+                    train, test, n=4, max_hits=max_hits
+                ).collect()
+            )
+            assert kept == sorted(
+                d for d in (1, 2, 3, 4) if hits.get(d, 0) <= max_hits
+            )
+
     def test_short_doc_whole_text_gram(self, spark):
         from knetminer_etl_spark.operators import contamination as CT
 
@@ -285,186 +318,6 @@ class TestContamination:
         test = spark.createDataFrame([(9, "tiny doc")], "doc_id long, text string")
         out = CT.ngram_contamination(train, test, n=8).collect()
         assert len(out) == 1 and out[0]["n_hits"] == 1
-
-    def test_decontaminate_bloom_matches_exact(self, spark):
-        from knetminer_etl_spark.operators import contamination as CT
-
-        # 40 train docs with distinct vocab, 3 of them leaking a test
-        # 4-gram; survivors must equal the exact path's survivors
-        train = spark.createDataFrame(
-            [
-                (i, f"w{i}a w{i}b w{i}c w{i}d w{i}e w{i}f")
-                for i in range(40)
-            ]
-            + [
-                (100, "leak one two three tail x"),
-                (101, "pre leak one two three y"),
-                (102, "zz leak one two three"),
-            ],
-            "doc_id long, text string",
-        )
-        test = spark.createDataFrame(
-            [(9, "header leak one two three footer")], "doc_id long, text string"
-        )
-        exact = sorted(
-            r["doc_id"] for r in CT.decontaminate(train, test, n=4).collect()
-        )
-        bloom = sorted(
-            r["doc_id"]
-            for r in CT.decontaminate_bloom(train, test, n=4).collect()
-        )
-        assert bloom == exact
-        assert set(exact).isdisjoint({100, 101, 102})
-
-    def test_decontaminate_auto_dispatches_both_ways(self, spark):
-        from knetminer_etl_spark.operators import contamination as CT
-
-        train = spark.createDataFrame(
-            [(i, f"u{i}a u{i}b u{i}c u{i}d u{i}e") for i in range(20)]
-            + [(300, "planted leak gram four five")],
-            "doc_id long, text string",
-        )
-        test = spark.createDataFrame(
-            [(9, "xx planted leak gram four yy")], "doc_id long, text string"
-        )
-        exact = sorted(
-            r["doc_id"] for r in CT.decontaminate(train, test, n=4).collect()
-        )
-        # default threshold: eval grams are few -> exact path
-        auto_exact = sorted(
-            r["doc_id"]
-            for r in CT.decontaminate_auto(train, test, n=4).collect()
-        )
-        # forced tiny threshold -> bloom path; survivors identical
-        import unittest.mock as mock
-
-        with mock.patch.object(CT, "BLOOM_DISPATCH_GRAMS", 0):
-            auto_bloom = sorted(
-                r["doc_id"]
-                for r in CT.decontaminate_auto(train, test, n=4).collect()
-            )
-        assert auto_exact == exact and auto_bloom == exact
-        assert 300 not in exact
-
-    def test_decontaminate_bloom_tiny_filter_still_exact(self, spark):
-        # undersized filter (64 bits for many grams) → heavy false
-        # positives; the exact verification join must still produce the
-        # identical survivor set (false positives cost work, never rows)
-        from knetminer_etl_spark.operators import contamination as CT
-        from knetminer_etl_spark.operators.bloomjoin import build_spec
-
-        train = spark.createDataFrame(
-            [(i, f"t{i}a t{i}b t{i}c t{i}d t{i}e") for i in range(30)]
-            + [(200, "shared gram body here plus t")],
-            "doc_id long, text string",
-        )
-        test = spark.createDataFrame(
-            [(9, "pre shared gram body here post")], "doc_id long, text string"
-        )
-        exact = sorted(
-            r["doc_id"] for r in CT.decontaminate(train, test, n=4).collect()
-        )
-        grams = CT.distinct_grams(test, "text", 4)
-        spec = build_spec(grams, "gram", n_bits=64, seed="decon", hash="xx")
-        bloom = sorted(
-            r["doc_id"]
-            for r in CT.bloom_decontaminate_against(
-                train, grams, spec, n=4
-            ).collect()
-        )
-        assert bloom == exact
-
-    def test_decontaminate_bloom_sizes_table_from_gram_count(self, spark):
-        """The bit table is sized from the eval side's distinct-gram
-        count, counted inside the job that pins the gram relation: 7,097
-        distinct 4-grams need more than the 65,536-bit floor."""
-        import unittest.mock as mock
-
-        from knetminer_etl_spark.operators import bloomjoin as BJ
-        from knetminer_etl_spark.operators import contamination as CT
-
-        n_words = 7_100  # one document, 7,097 distinct 4-grams
-        test = spark.createDataFrame(
-            [(9, " ".join(f"e{i}" for i in range(n_words)))],
-            "doc_id long, text string",
-        )
-        train = spark.createDataFrame(
-            [(i, f"t{i}a t{i}b t{i}c t{i}d t{i}e") for i in range(20)]
-            + [(100, "x e10 e11 e12 e13 y"), (101, "e10 e11 e12 z e13")],
-            "doc_id long, text string",
-        )
-        sc = spark.sparkContext
-        tracker = sc.statusTracker()
-        seen: dict = {}
-        real_build = BJ.build_spec
-
-        def spy(keys, key_col, n_bits=BJ.N_BITS_DEFAULT, *a, **kw):
-            # every job run so far in the group belongs to the gram pin
-            seen["pin_jobs"] = len(tracker.getJobIdsForGroup("decon-pin"))
-            seen["n_bits"] = n_bits
-            sc.setJobGroup("decon-build", "bloom build")
-            return real_build(keys, key_col, n_bits, *a, **kw)
-
-        # a bare pin of the same gram relation, without the count
-        sc.setJobGroup("bare-pin", "bare pin")
-        CT.distinct_grams(test, "text", 4).localCheckpoint(eager=True)
-        bare_jobs = len(tracker.getJobIdsForGroup("bare-pin"))
-        sc.setJobGroup("decon-pin", "bloom decontamination pin")
-        try:
-            with mock.patch.object(BJ, "build_spec", spy):
-                out = CT.decontaminate_bloom(train, test, n=4)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        n_grams = n_words - 3
-        assert CT.sized_bloom_bits(n_grams) == 1 << 17 > 1 << 16
-        assert seen["n_bits"] == CT.sized_bloom_bits(n_grams)
-        # counting the grams adds no job to the pin (under AQE a pinned
-        # distinct is its shuffle-map job plus the checkpoint job)
-        assert seen["pin_jobs"] == bare_jobs
-        exact = sorted(
-            r["doc_id"] for r in CT.decontaminate(train, test, n=4).collect()
-        )
-        assert sorted(r["doc_id"] for r in out.collect()) == exact
-        assert 100 not in exact and 101 in exact
-
-    def test_decontaminate_auto_probe_rides_the_pin(self, spark):
-        """The dispatch probe's gram count is taken inside the job that
-        pins the gram relation: building the exact-branch frame runs the
-        jobs of a bare pin and no more."""
-        from knetminer_etl_spark.operators import contamination as CT
-
-        train = spark.createDataFrame(
-            [(i, f"t{i}a t{i}b t{i}c t{i}d t{i}e") for i in range(30)],
-            "doc_id long, text string",
-        )
-        test = spark.createDataFrame(
-            [(9, "t3a t3b t3c t3d x")], "doc_id long, text string"
-        )
-        sc = spark.sparkContext
-        tracker = sc.statusTracker()
-
-        def jobs(group, fn):
-            sc.setJobGroup(group, group)
-            try:
-                result = fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            return len(tracker.getJobIdsForGroup(group)), result
-
-        bare, _ = jobs(
-            "bare-gram-pin",
-            lambda: CT.distinct_grams(test, "text", 4).localCheckpoint(
-                eager=True
-            ),
-        )
-        built, out = jobs(
-            "auto-build", lambda: CT.decontaminate_auto(train, test, n=4)
-        )
-        assert built == bare
-        exact = CT.decontaminate(train, test, n=4)
-        assert sorted(r["doc_id"] for r in out.collect()) == sorted(
-            r["doc_id"] for r in exact.collect()
-        )
 
     def test_semantic_contamination_catches_paraphrase_leak(self, spark):
         """An eval item that shares NO n-gram with a train item but sits

@@ -80,9 +80,6 @@ CHECK_QUERIES = [
     # corpus-prep chain (quality gate -> exact -> near-dup -> split ->
     # decon) under one number
     "doc_pipeline_stages",
-    # bloom-pruned lexical decontamination (map-side gram prune before
-    # the join exchange)
-    "doc_decontamination_bloom",
 ]
 
 # queries whose banded engine publishes candidate-bill observations

@@ -216,11 +216,10 @@ def dedup_run(spark, epochs: int) -> dict:
 def decon_run(spark, epochs: int) -> dict:
     """Continuous LEXICAL decontamination: stateless per epoch (the eval
     suite is loop-invariant), so the claim to verify is that per-epoch
-    wall stays FLAT however much was already ingested — the bit table
-    and eval gram relation are built once, outside the loop."""
+    wall stays FLAT however much was already ingested — the eval gram
+    relation is pinned once, outside the loop."""
     from pyspark.sql import functions as F
 
-    from knetminer_etl_spark.operators.bloomjoin import build_spec
     from knetminer_etl_spark.operators.contamination import distinct_grams
     from knetminer_etl_spark.streaming.dedupe import (
         process_lexical_decon_batch,
@@ -240,7 +239,6 @@ def decon_run(spark, epochs: int) -> dict:
     eval_grams = distinct_grams(test_docs, "text", 8).localCheckpoint(
         eager=True
     )
-    spec = build_spec(eval_grams, "gram", seed="decon", hash="xx")
     setup_sec = round(time.perf_counter() - t0, 3)
 
     rows = []
@@ -250,7 +248,7 @@ def decon_run(spark, epochs: int) -> dict:
         )
         mark = time.time()
         t0 = time.perf_counter()
-        process_lexical_decon_batch(batch, e, eval_grams, spec, clean_path)
+        process_lexical_decon_batch(batch, e, eval_grams, clean_path)
         wall = round(time.perf_counter() - t0, 3)
         rows.append(
             {
