@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text import normalize_text, shingles_from_tokens, tokens
+from .text import staged_shingles
 
 
 def ngram_contamination(
@@ -47,7 +47,7 @@ def ngram_contamination(
     # the distinct gram count rides along with every exploded gram so no
     # second scan/join is needed for totals
     t_grams = (
-        _shingled(train, text_col, n, id_col)
+        staged_shingles(train, text_col, n, id_col)
         .select(
             F.col(id_col),
             F.size("_sh").alias("total_ngrams"),
@@ -125,31 +125,12 @@ def decontaminate_against(
     return train.join(flagged.select(id_col), id_col, "left_anti")
 
 
-def _shingled(df: DataFrame, text_col: str, n: int, *keep: str) -> DataFrame:
-    """``(*keep, _sh)`` — each row's distinct word n-gram array. Staged
-    projections (normalize → tokens → shingles): inlining the chain as
-    one Column re-evaluates the regex normalization at every one of the
-    several token-array references inside ``shingles_from_tokens``
-    (measured ~8s → ~1.5s at sf0.1). ``fan_out`` first: normalization
-    and n-gram assembly are CPU-bound per row, and a single-file input
-    would otherwise shingle on one task (under a broadcast exchange,
-    not even pipeline-parallel); at real scale the scan arrives
-    well-split and it is a no-op."""
-    from .util import fan_out
-
-    return (
-        fan_out(df)
-        .select(*keep, tokens(normalize_text(F.col(text_col))).alias("_tok"))
-        .select(*keep, shingles_from_tokens(F.col("_tok"), n).alias("_sh"))
-    )
-
-
 def gram_rows(df: DataFrame, text_col: str, n: int, *keep: str) -> DataFrame:
     """``(*keep, gram)`` — every distinct word n-gram of every row,
     exploded (``explode_outer`` + null filter, so the shingle expression
     is never inlined below an exchange)."""
     return (
-        _shingled(df, text_col, n, *keep)
+        staged_shingles(df, text_col, n, *keep)
         .select(*keep, F.explode_outer("_sh").alias("gram"))
         .filter(F.col("gram").isNotNull())
     )

@@ -28,7 +28,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import normalize_text, shingles_from_tokens, tokens
+from .similarity import _dot, _dvec, _norm, _pair_dots
+from .text import normalize_text, staged_shingles, tokens
 from .util import fan_out
 
 
@@ -324,14 +325,8 @@ def _has_content(text: Column) -> Column:
 def _with_shingles(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """(_id, _sh) with the shingle array **staged through materialized
-    columns** (normalize → tokens → shingles as separate projections).
-
-    Inlining the whole chain as one Column and then referencing it N
-    times (e.g. 64 MinHash permutations) multiplies the expression tree
-    N-fold — measured ~2 min of driver-side analysis/codegen for the
-    MinHash plan before this staging, ~seconds after. Data-side cost is
-    identical (Catalyst collapses the projections into one stage).
+    """(_id, _sh) — :func:`..text.staged_shingles` over the documents
+    with content.
 
     Output guarantee: ``_sh`` is always a NON-EMPTY array — documents whose
     normalized text is empty are dropped by a cheap scan-side filter.
@@ -340,7 +335,7 @@ def _with_shingles(
     re-inline the whole shingle pipeline into a serial filter (measured
     ~7s per occurrence at sf0.1).
     """
-    return (
+    return staged_shingles(
         df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
         # cheap pre-shuffle emptiness filter: normalize_text yields ""
         # exactly when the text has NO letter/digit (every other char
@@ -349,11 +344,12 @@ def _with_shingles(
         # regex rewrites the old `normalize_text(_t) != ''` paid — on a
         # single-file scan this filter runs on the one pre-fan_out task
         # (measured 0.33 s serial per minhash invocation at sf0.1)
-        .filter(_has_content(F.col("_t")))
-        .transform(fan_out)
-        .select("_id", tokens(normalize_text(F.col("_t"))).alias("_tok"))
-        .select("_id", shingles_from_tokens(F.col("_tok"), k).alias("_sh"))
+        .filter(_has_content(F.col("_t"))),
+        "_t",
+        k,
+        "_id",
     )
+
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -906,10 +902,9 @@ def _band_rows_from_hashes(
     hh: DataFrame, num_perm: int, bands: int
 ) -> DataFrame:
     """(doc_id, band, bucket) from a hashed-shingle relation — the
-    banding engine behind :func:`minhash_band_rows`, split out so a
-    caller that ALSO needs the fingerprints for verification
-    (:func:`_minhash_lsh_pairs_direct`) can pin one relation and feed
-    both consumers instead of tokenizing + shingling the corpus twice.
+    banding engine behind :func:`minhash_band_rows` and
+    :func:`_minhash_lsh_pairs_direct`, which pins the relation once and
+    bands and verifies from that pin.
 
     bucket = hash of the band's signature lanes AS LONGS (band id as a
     hashed column) — equal lane values collide to equal buckets per
@@ -920,7 +915,14 @@ def _band_rows_from_hashes(
     (r, b) split. Gating on bands alone sent the bench-scale auto shape
     (98 lanes, 49 bands at t=0.5) through the Arrow kernel and its
     JVM↔Python hop: measured 10.8 s vs 2.6 s best-of-4 for
-    dedup_components at sf0.1 (plans/r10)."""
+    dedup_components at sf0.1 (plans/r10).
+
+    The wide (Arrow) form evaluates its pandas UDF exactly once per
+    document: the bucket array is exploded with ``posexplode_outer``
+    and a NULL filter, because ``posexplode`` lets Catalyst infer a
+    ``size(_bkts) > 0`` filter and push a second UDF evaluation, with
+    the whole normalize → tokens → shingle chain inlined into its
+    input, below the projection."""
     rows_per_band = num_perm // bands
     if num_perm <= MINHASH_UNROLL_MAX:
         sigs = _sigs_from_hashes(hh, num_perm)
@@ -950,9 +952,10 @@ def _band_rows_from_hashes(
             "_bkts"
         ),
     )
+    # posexplode_outer + null filter, not posexplode (see the docstring)
     return banded.select(
-        "doc_id", F.posexplode("_bkts").alias("band", "bucket")
-    )
+        "doc_id", F.posexplode_outer("_bkts").alias("band", "bucket")
+    ).filter(F.col("bucket").isNotNull())
 
 
 def _minhash_band_buckets_arrow(num_perm: int, bands: int):
@@ -1066,12 +1069,14 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash LSH.
 
-    Candidate pairs share ≥1 band: ids are grouped per (band, bucket) and
-    pair combinations emitted directly (see
-    :func:`candidate_pairs_from_buckets`) — the signature pipeline runs
-    once, not once per join side. The candidates are checked against
-    true shingle Jaccard (joining the shingle sets back in), so the
-    output has no LSH false positives.
+    One banded plan at every corpus size
+    (:func:`_minhash_lsh_pairs_direct`): the hashed shingles are pinned
+    once, the bands are computed from the pin, and candidate pairs
+    (ids grouped per (band, bucket), pair combinations emitted directly
+    — see :func:`candidate_pairs_from_buckets`) are checked against true
+    shingle Jaccard by joining the same pin back in
+    (:func:`verified_jaccard_pairs`), so the corpus is shingled once and
+    the output has no LSH false positives.
 
     **Band shape**: rows-per-band and band count are sized from the
     measured distinct-content count via :func:`_auto_minhash_shape` —
@@ -1154,8 +1159,7 @@ def minhash_lsh_pairs(
         # collapse_pays for the cap-contract boundary).
         return observe_output(
             _minhash_lsh_pairs_direct(
-                df, id_col, text_col, num_perm, bands, k, threshold,
-                n_docs=n_members or None,
+                df, id_col, text_col, num_perm, bands, k, threshold
             ),
             "minhash_lsh",
         )
@@ -1166,8 +1170,7 @@ def minhash_lsh_pairs(
         groups.select(F.col("_rid").alias(id_col)), on=id_col, how="left_semi"
     )
     rep_pairs = _minhash_lsh_pairs_direct(
-        rep_docs, id_col, text_col, num_perm, bands, k, threshold,
-        n_docs=n_groups or None,
+        rep_docs, id_col, text_col, num_perm, bands, k, threshold
     )
     # map each rep id back to its group key, then expand to members
     # (output-linear; see expand_group_pairs)
@@ -1209,136 +1212,62 @@ def _minhash_lsh_pairs_direct(
     bands: int,
     k: int,
     threshold: float,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """The uncollapsed banded plan (band → bucket-pair → verify) —
     :func:`minhash_lsh_pairs`'s engine, run over representatives when
     content collapse is on.
 
-    On the measured-small path (n_docs ≤
-    :data:`VERIFY_FULL_SHINGLE_MAX`) the hashed-shingle relation is
-    pinned ONCE and feeds banding AND both verification join sides:
-    unshared, the corpus was tokenized + shingled twice — once by the
-    verification pin, once again inside the banding pipeline of the
-    final action (measured 2.75 → 2.51 s best-of-4 for the sf0.1 bench
-    minhash entry, with the staged base-hash lanes landing the same
-    commit)."""
-    shared = n_docs is not None and n_docs <= VERIFY_FULL_SHINGLE_MAX
-    if shared:
-        hh = _hashed_shingles(df, id_col, text_col, k).localCheckpoint(
-            eager=True
-        )
-        banded = _band_rows_from_hashes(hh, num_perm, bands)
-    else:
-        banded = minhash_band_rows(df, id_col, text_col, num_perm, bands, k)
+    One plan at every corpus size: the hashed-shingle relation is
+    pinned ONCE and feeds banding AND both verification join sides, so
+    the corpus is tokenized + shingled once (measured 2.75 → 2.51 s
+    best-of-4 for the sf0.1 bench minhash entry against re-shingling
+    inside the banding). The pin's row count rides its own
+    materialization job and sizes the bucket exchange: the banding
+    relation is n × bands rows of ~28 B (id, band, bucket), so
+    candidate_pairs_from_buckets needs no optimizer-stats or ``df.rdd``
+    planning pass over the banding tree."""
+    from ..runtime.checkpoint import sized_agg_partitions
+    from .util import pin_observe
 
-    # the banding relation's cardinality is KNOWN when n_docs is
-    # (n_docs × bands rows of ~28 B: id, band, bucket) — size the
-    # bucket-grouping exchange from it instead of letting
-    # candidate_pairs_from_buckets probe optimizer stats + df.rdd,
-    # two driver planning passes per invocation over the banding tree
-    nparts = None
-    if n_docs is not None:
-        from ..runtime.checkpoint import sized_agg_partitions
-
-        nparts = sized_agg_partitions(
-            df.sparkSession, n_docs * bands * 28
-        )
+    hh, m = pin_observe(
+        _hashed_shingles(df, id_col, text_col, k),
+        F.count(F.lit(1)).alias("n"),
+    )
+    nparts = sized_agg_partitions(
+        df.sparkSession, int(m["n"]) * bands * 28
+    )
     cands = candidate_pairs_from_buckets(
-        banded,
+        _band_rows_from_hashes(hh, num_perm, bands),
         ["band", "bucket"],
         num_partitions=nparts,
         max_bucket_size=LSH_BUCKET_CAP,
         metrics_label="minhash_lsh",
     )
-
-    if shared:
-        return verified_jaccard_pairs(
-            cands, df, id_col, text_col, k, threshold, n_docs=n_docs,
-            shingles=hh,
-        )
-
-    return verified_jaccard_pairs(
-        cands, df, id_col, text_col, k, threshold, n_docs=n_docs
-    )
-
-
-#: corpus size under which the verification shingles the WHOLE corpus
-#: instead of semi-joining it down to candidate members first: below it
-#: the semi-join saves less shingling than its two driver-synchronized
-#: jobs cost (the candidate pin + the id-set distinct), and leaving the
-#: candidate relation single-referenced fuses its generation into the
-#: final join action (measured: 2.73 → ~2.1 s for the sf0.1 bench
-#: minhash entry).
-VERIFY_FULL_SHINGLE_MAX = 100_000
+    return verified_jaccard_pairs(cands, hh, threshold)
 
 
 def verified_jaccard_pairs(
-    cands: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    threshold: float = 0.7,
-    n_docs: int | None = None,
-    shingles: DataFrame | None = None,
+    cands: DataFrame, shingles: DataFrame, threshold: float = 0.7
 ) -> DataFrame:
     """True-Jaccard verification of an (id_a, id_b) candidate relation
-    against ``corpus`` texts.
-
-    ``shingles``: an already-materialized (pinned) hashed-shingle
-    relation ``(_id, _hh)`` (:func:`_hashed_shingles`) covering every
-    document that can appear in ``cands`` — when given, the corpus is
-    not re-tokenized at all; both join sides read the caller's pin
-    (the caller typically derived the banding from the same relation).
-
-    Shingles only documents that appear in a candidate pair — semi-join
-    the corpus down FIRST, then shingle the survivors. Re-shingling the
-    full corpus for each join side costs two extra full scans +
-    normalization passes; at 100 TB the candidate set is orders of
-    magnitude smaller than the corpus (AQE broadcasts the id set when
-    it fits).
+    against a pinned hashed-shingle relation ``(_id, _hh)``
+    (:func:`_hashed_shingles`) covering every document that can appear
+    in ``cands``. Both join sides read the pin; the caller decides what
+    it covers (the batch engine pins the whole corpus it also bands
+    from, the incremental engine only the candidates' documents).
 
     Verification runs over ``xxhash64`` shingle fingerprints instead of
     the shingle strings: set sizes and intersection sizes — hence the
     Jaccard value — are preserved barring a ~|sh|²/2⁶⁵ per-document hash
     collision (the ``doc_span_scrub``/``repeated_span_scrub`` ranking-key
-    argument; the
-    oracle hash-match at every scale factor is the standing evidence),
-    while the pinned relation and the two verification joins carry
-    8 bytes per shingle instead of the k-token text — at corpus scale
-    the candidate join's shuffle weight is THE verification cost
-    (measured: the 100× minhash tier ships millions of candidate pairs
-    with both shingle arrays attached).
-
-    ``n_docs`` (when the caller already measured the corpus — the
-    content_groups probe, an observe riding an upstream write) picks
-    between two verification shapes with identical output: corpora ≤ :data:`VERIFY_FULL_SHINGLE_MAX` shingle
-    the whole corpus and keep the candidate relation single-referenced
-    (no pin — candidate generation fuses into the final join action);
-    larger or unmeasured corpora pin the candidates and semi-join the
-    corpus down first, the 100 TB shape (candidates ≪ corpus, so the
-    saved shingling dwarfs the pin)."""
-    if shingles is not None:
-        shing = shingles.select("_id", F.col("_hh").alias("_sh"))
-    else:
-        if n_docs is not None and n_docs <= VERIFY_FULL_SHINGLE_MAX:
-            cand_docs = corpus
-        else:
-            cands = cands.localCheckpoint(eager=True)  # pin: id set + joins
-            cand_ids = (
-                cands.select(F.col("id_a").alias(id_col))
-                .unionByName(cands.select(F.col("id_b").alias(id_col)))
-                .distinct()
-            )
-            cand_docs = corpus.join(cand_ids, on=id_col, how="left_semi")
-        shing = _hashed_shingles(cand_docs, id_col, text_col, k).select(
-            "_id", F.col("_hh").alias("_sh")
-        )
-        # pin: referenced by both join sides; bounded by the candidate set
-        shing = shing.localCheckpoint(eager=True)
-    sa = shing.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    sb = shing.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
+    argument; the oracle hash-match at every scale factor is the
+    standing evidence), while the pinned relation and the two
+    verification joins carry 8 bytes per shingle instead of the k-token
+    text — at corpus scale the candidate join's shuffle weight is THE
+    verification cost (measured: the 100× minhash tier ships millions of
+    candidate pairs with both shingle arrays attached)."""
+    sa = shingles.select(F.col("_id").alias("id_a"), F.col("_hh").alias("sh_a"))
+    sb = shingles.select(F.col("_id").alias("id_b"), F.col("_hh").alias("sh_b"))
     return (
         cands.join(sa, on="id_a")
         .join(sb, on="id_b")
@@ -1410,8 +1339,18 @@ def incremental_minhash_pairs(
         )
         .distinct()
     )
-    cands = new_new.unionByName(new_old).distinct()
-    return verified_jaccard_pairs(cands, corpus, id_col, text_col, k, threshold)
+    # corpus ≫ batch: pin the candidates (read by the id set and both
+    # verification joins) and shingle only the documents they name
+    cands = new_new.unionByName(new_old).distinct().localCheckpoint(eager=True)
+    cand_ids = (
+        cands.select(F.col("id_a").alias(id_col))
+        .unionByName(cands.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    shingles = _hashed_shingles(
+        corpus.join(cand_ids, on=id_col, how="left_semi"), id_col, text_col, k
+    ).localCheckpoint(eager=True)
+    return verified_jaccard_pairs(cands, shingles, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1863,18 +1802,6 @@ def incremental_hamming_pairs(
 # ---------------------------------------------------------------------------
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
-
-
 def sign_lsh_band_buckets(
     vec_col: str, n_planes: int, n_bands: int, seed: int = 0x5EED
 ) -> Column:
@@ -2223,7 +2150,7 @@ def _cosine_assign_staged(
       planner)."""
     import math
 
-    from .similarity import _LITERAL_ASSIGN_MAX, _dot, _norm
+    from .similarity import _LITERAL_ASSIGN_MAX
 
     vecs = df.select(
         F.col(id_col).alias("_id"),
@@ -2399,8 +2326,6 @@ def incremental_semantic_pairs(
     100 TB the per-refresh cost is O(batch + matched buckets), not
     O(corpus). Output: ``(id_a, id_b, cosine)`` with id_a < id_b.
     """
-    from .similarity import _dot, _dvec, _norm
-
     new_bands = semantic_band_rows(
         new_vecs, centroids, id_col, vec_col, n_planes, n_bands, seed
     ).localCheckpoint(eager=True)  # reused by both candidate branches
@@ -2467,7 +2392,6 @@ def semantic_dedup_kmeans(
     from .similarity import (
         _LITERAL_ASSIGN_MAX,
         _argmin_struct_sql,
-        _norm,
         assign_clusters,
         kmeans_fit,
     )
@@ -2508,16 +2432,6 @@ def semantic_dedup_kmeans(
             on="_id",
         ).select("_id", "_v", "_n", "cluster")
     return _semantic_keep(staged, id_col, threshold, n_vecs=n_docs)
-
-
-def _pair_dots(a_col: Column, b_col: Column) -> Column:
-    """Arrow-batched rowwise pair dot — see
-    :func:`~knetminer_etl_spark.operators.similarity._pair_dots` (the
-    shared implementation; values bit-identical to the expression
-    fold)."""
-    from .similarity import _pair_dots as _impl
-
-    return _impl(a_col, b_col)
 
 
 def _verified_drops(

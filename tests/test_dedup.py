@@ -64,16 +64,44 @@ class TestMinHash:
         assert {r["doc_id"]: r["signature"] for r in s2} == by_id
         assert by_id[1] == by_id[2]  # exact dups → identical signatures
 
-    def test_lsh_verified_matches_jaccard(self, spark, corpus):
-        lsh = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in DD.minhash_lsh_pairs(corpus, threshold=0.5).collect()
-        }
+    @pytest.mark.parametrize("shape", [None, (256, 64)], ids=["auto", "wide"])
+    def test_lsh_verified_matches_jaccard(self, spark, corpus, shape):
+        # "wide" forces the Arrow banding kernel (num_perm above
+        # MINHASH_UNROLL_MAX), which bands from the same pinned shingles
+        with mock.patch.object(
+            DD,
+            "_auto_minhash_shape",
+            (lambda n, t: shape) if shape else DD._auto_minhash_shape,
+        ):
+            pairs = DD.minhash_lsh_pairs(corpus, threshold=0.5)
+            plan = pairs._jdf.queryExecution().executedPlan().toString()
+            lsh = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+        if shape:
+            assert plan.count("ArrowEvalPython") == 1
         true = {
             (r["id_a"], r["id_b"]): r["jaccard"]
             for r in DD.ngram_jaccard_pairs(corpus, threshold=0.5).collect()
         }
         assert lsh == true
+
+    def test_wide_banding_udf_evaluates_once(self, spark):
+        """The Arrow banding kernel runs once per document: its
+        explode must not let Catalyst push a size(_bkts) > 0 filter
+        (and with it a second UDF evaluation over the inlined
+        normalize → tokens → shingle chain) below the projection."""
+        df = spark.createDataFrame(
+            [(i, f"{BASE} variant {i} of {i % 7}") for i in range(200)],
+            "doc_id long, text string",
+        )
+        plan = (
+            DD.minhash_band_rows(df, num_perm=256, bands=64)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        udf_nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+        assert len(udf_nodes) == 1
+        assert "regexp_replace" not in udf_nodes[0]
 
     def test_singleton_dispatch_equals_collapse_and_direct(self, spark):
         # clone-FREE corpus: the singleton-group probe dispatches to the

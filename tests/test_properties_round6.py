@@ -6,7 +6,7 @@ ARBITRARY inputs rather than the handful of fixtures:
   for any mono/stereo float signal in [-1, 1];
 * the acoustic fingerprint is unit-norm, fixed-size and
   volume-invariant for any non-silent signal;
-* the Arrow pair-dot fold (`dedup._pair_dots`'s numpy loop) is
+* the Arrow pair-dot fold (`similarity._pair_dots`'s numpy loop) is
   bit-identical to a Python left fold — the exactness claim the
   oracle-hash equality rests on.
 """
